@@ -67,7 +67,10 @@ object Bench {
     }.mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.flatMap(_._2).sum
-    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+    // env-supplied paths land inside JSON strings: escape \ and "
+    def jsonStr(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
+    val sfJson = jsonStr(sfDir)
+    val line = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfJson"}"""
     println(line)
     // the driver's log tail truncates past ~77 queries — persist the FULL
     // per-query record to a repo-tracked file so every round has a complete
@@ -80,7 +83,7 @@ object Bench {
     // passed ~77 queries, so a tail-capture driver has parsed nothing
     // since then — print a COMPACT summary line LAST (guaranteed to fit
     // any tail; per-query data stays in the full line + $outPath)
-    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"failed":$failedJson,"queries_file":"$outPath","sf":"$sfDir"}"""
+    val summary = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"failed":$failedJson,"queries_file":"${jsonStr(outPath)}","sf":"$sfJson"}"""
     println(summary)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)

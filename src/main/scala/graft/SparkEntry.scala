@@ -6321,6 +6321,10 @@ object SparkEntry {
         .write.mode("append").parquet(stage)
       val st = graft.streaming.StreamingAttribution.attributionPairs(
         ea.eventFrameStreamDir(s, stage), leftOuter = true)
+      // the outer rows flush only in that trailing no-data micro-batch:
+      // with no-data batches off they would be dropped without a word
+      require(s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled").toBoolean,
+        "streaming_attribution_outer needs spark.sql.streaming.noDataMicroBatches.enabled=true")
       val q = st.writeStream
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

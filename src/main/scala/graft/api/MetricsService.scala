@@ -80,6 +80,15 @@ object MetricsService {
     val gaugeRateHist: String = s"$root/gauge_rate_hist"
   }
 
+  /** A tier family as the serve decision sees it: the tier answering the
+    * distributive stats and, where the family has one, the distribution
+    * companion answering TierApprox percentiles, with the probe that
+    * judges the companion built. */
+  private final case class TierFamily(
+      tier: TierLayout => String,
+      hist: Option[TierLayout => String] = None,
+      histBuilt: (SparkSession, String, Buckets) => Boolean = GraftStorage.tierServes)
+
   /** The conventional on-store layout (`<root>/tiers/<family>`) — what
     * [[graft.api.HttpTransport]]'s `tierServing` flag turns on. */
   def defaultTiers(storageRoot: String): TierLayout =
@@ -549,7 +558,7 @@ class MetricsService(spark: SparkSession, root: String,
     contiguousRuns(pending).foreach { case (lo, hi) =>
       refreshFamilies(t, upToSlice = hi + 1, fromSlice = lo)
     }
-    // tierFor refuses the tier for any request extending past the
+    // servingTier refuses the tier for any request extending past the
     // watermark — without it, an hour-aligned request over the
     // not-yet-refreshed tail would serve silently EMPTY buckets where
     // raw has data. (Direct GraftStorage.write users either mark via
@@ -665,22 +674,52 @@ class MetricsService(spark: SparkSession, root: String,
     }.getOrElse(Long.MinValue)
   }.getOrElse(Long.MinValue)
 
-  /** The configured tier path for a request, iff the tier can serve it:
-    * a layout is configured, the request carries no percentiles and no
-    * parity mode, the bucket grid sits on whole tier hours with the
-    * tier built ([[GraftStorage.tierServes]]), AND the request does not
-    * extend past the freshness watermark ([[refreshedUntil]] — the
-    * unrefreshed tail must answer from raw, not as silently empty tier
-    * buckets). `None` = raw path. */
-  private def tierFor(pick: MetricsService.TierLayout => String,
-                      b: graft.model.Buckets,
-                      percentiles: Seq[Double],
-                      mode: MetricsOps.PercentileMode =
-                        MetricsOps.PercentileMode.Exact): Option[String] =
-    tiers.map(pick).filter(p => percentiles.isEmpty &&
-      mode == MetricsOps.PercentileMode.Exact &&
-      b.end <= refreshedUntil &&
-      GraftStorage.tierServes(spark, p, b))
+  private val GaugeSums = MetricsService.TierFamily(_.gaugeSums, Some(_.gaugeHist))
+  private val CounterSums = MetricsService.TierFamily(_.counterSums)
+  private val Avail = MetricsService.TierFamily(_.avail)
+  private val CounterIncrease = MetricsService.TierFamily(_.counterIncrease)
+
+  private def sumsFamily(t: MetricType) =
+    if (t == MetricType.Counter) CounterSums else GaugeSums
+
+  // rateHistTierServes, not tierServes: a sparse store (≤1 point per hour
+  // everywhere) leaves the refreshed rate-hist tier physically EMPTY — its
+  // percentile answer is the boundary-pair reconstruction off the rate
+  // tier, and a data-existence probe would refuse it forever
+  private def rateFamily(isCounter: Boolean) =
+    if (isCounter) MetricsService.TierFamily(_.counterRate, Some(_.counterRateHist),
+      GraftStorage.rateHistTierServes)
+    else MetricsService.TierFamily(_.gaugeRate, Some(_.gaugeRateHist),
+      GraftStorage.rateHistTierServes)
+
+  /** THE tier-versus-raw decision of every tier-served entry point: the
+    * layout iff `family` can serve grid `b`, `None` for the raw path.
+    *  - Exact requests serve only percentile-free: the sums/rate tier
+    *    holds no order statistics. Other explicit modes never serve —
+    *    their median estimate is part of the requested semantics.
+    *  - TierApprox requests with percentiles also need the family's
+    *    distribution companion, built (`histBuilt`), carrying `_histmeta`
+    *    and covering `b` ([[histTierCovers]]); a family without one
+    *    refuses.
+    *  - The grid sits on whole tier hours with the tier built
+    *    ([[GraftStorage.tierServes]]) and ends within the freshness
+    *    watermark ([[refreshedUntil]]): the unrefreshed tail must answer
+    *    from raw, not as silently empty tier buckets.
+    * Listings and small-file reads only, the watermark read at most once. */
+  private def servingTier(family: MetricsService.TierFamily, b: Buckets,
+                          percentiles: Seq[Double] = Seq.empty,
+                          mode: MetricsOps.PercentileMode =
+                            MetricsOps.PercentileMode.Exact): Option[MetricsService.TierLayout] = {
+    def histReady(t: MetricsService.TierLayout) = percentiles.isEmpty ||
+      family.hist.exists { h =>
+        family.histBuilt(spark, h(t), b) && GraftStorage.histTierHasMeta(spark, h(t)) &&
+          histTierCovers(h(t), family.tier(t), b)
+      }
+    tiers.filter(t => (mode == MetricsOps.PercentileMode.TierApprox ||
+      mode == MetricsOps.PercentileMode.Exact && percentiles.isEmpty) &&
+      GraftStorage.tierServes(spark, family.tier(t), b) &&
+      b.end <= refreshedUntil && histReady(t))
+  }
 
   /**
    * Whole-range reset-aware counter-increase accounting per metric — the
@@ -695,11 +734,9 @@ class MetricsService(spark: SparkSession, root: String,
   def findCounterIncrease(tenantId: String, range: TimeRange): DataFrame = {
     val shape = Seq("tenant_id", "mtype", "metric", "increase",
       "n_resets", "n_deltas")
-    val tierPath = tiers.map(_.counterIncrease).filter(p =>
-      range.end <= refreshedUntil && GraftStorage.tierServes(spark, p, range))
-    tierPath match {
-      case Some(p) =>
-        GraftStorage.rollupCounterIncrease(spark, p, range,
+    Buckets.whole(range).flatMap(servingTier(CounterIncrease, _)) match {
+      case Some(t) =>
+        GraftStorage.rollupCounterIncrease(spark, t.counterIncrease, range,
           tenant = Some(tenantId)).select(shape.map(col): _*)
       case None =>
         MetricsOps.counterIncrease(
@@ -719,7 +756,6 @@ class MetricsService(spark: SparkSession, root: String,
     Seq(name).toDF("metric")
   }
 
-  /** S9 — delete one metric's data. */
   /** S9 — delete one metric: its datapoints AND its catalog row — the
     * reference deletes from the metrics, tags, and retention indexes
     * alongside the data (MetricsServiceImpl.java:1086-1101), so a
@@ -919,65 +955,40 @@ class MetricsService(spark: SparkSession, root: String,
     * the reference's always-P² estimator); P2Parity reproduces the
     * reference bit-for-bit, including its DESC gauge feed order
     * (MetricsServiceImpl.java:914 fetches gauges DESC before
-    * accumulating). */
+    * accumulating).
+    *
+    * Hour-aligned, in-watermark, percentile-free requests answer from
+    * hour summaries — raw never read; the 5 served stats are bit-equal
+    * to the raw path, median omitted ([[MetricsService.TierLayout]]).
+    * [[MetricsOps.PercentileMode.TierApprox]] percentile requests also
+    * serve when the gauge histogram tier is built and covers the grid:
+    * five exact stats from `gauge_sums` joined per bucket with
+    * [[MetricsOps.histogramQuantile]]'s walk over the served histogram
+    * (estimate error ≤ ~2 bin widths — the hist_quantile_accuracy band).
+    * Anything the tier pair cannot serve falls back to the EXACT raw
+    * path — a MORE accurate answer than asked for, never a silently
+    * empty one. */
   def findGaugeStats(id: MetricId, config: BucketConfig,
                      percentiles: Seq[Double] = Seq.empty,
                      mode: MetricsOps.PercentileMode =
                        MetricsOps.PercentileMode.Exact): DataFrame = {
     val b = config.buckets
-    if (mode == MetricsOps.PercentileMode.TierApprox)
-      return findGaugeStatsTierApprox(id, b, percentiles)
-    tierFor(_.gaugeSums, b, percentiles, mode) match {
-      // hour-aligned, percentile-free, tier built: answer from hour
-      // summaries — raw never read; the 5 served stats are bit-equal to
-      // the raw path, median omitted ([[MetricsService.TierLayout]])
-      case Some(p) =>
-        MetricsOps.gapFill(
-          GraftStorage.rollupStats(spark, p, b, byMetric = false,
-            ids = Some(oneMetric(id.name)), tenant = Some(id.tenantId),
-            mtypeCode = Some(id.mtype.toInt)), b)
-      case None =>
-        MetricsOps.gapFill(
-          MetricsOps.numericBucketStats(series(id), b, percentiles, mode = mode,
-            parityFeedOrder = Order.Desc), b)
-    }
-  }
-
-  /** [[MetricsOps.PercentileMode.TierApprox]] dispatch — the one stats
-    * request class that used to ALWAYS scan raw. When the grid is
-    * hour-aligned, inside the freshness watermark, and BOTH gauge tiers
-    * are built (sums for the five stats, the histogram for the
-    * distribution), the answer reads hours × metrics (× bins) tier rows
-    * only: five exact stats from `gauge_sums` joined per bucket with
-    * [[MetricsOps.histogramQuantile]]'s walk over the served histogram
-    * (estimate error ≤ ~2 bin widths — the hist_quantile_accuracy band).
-    * `median` stays omitted, the tier-served signature. Anything the
-    * tier pair cannot serve falls back to the EXACT raw path — a MORE
-    * accurate answer than asked for, never a silently empty one. */
-  private def findGaugeStatsTierApprox(id: MetricId, b: graft.model.Buckets,
-                                       percentiles: Seq[Double]): DataFrame =
-    tierApproxFor(b, percentiles) match {
+    servingTier(GaugeSums, b, percentiles, mode) match {
       case Some(t) =>
-        MetricsOps.gapFill(tierApproxServe(t, b, percentiles,
+        MetricsOps.gapFill(tierStatsServe(t, GaugeSums, b, percentiles,
           oneMetric(id.name), id.tenantId, id.mtype.toInt), b)
       case None =>
         MetricsOps.gapFill(
           MetricsOps.numericBucketStats(series(id), b, percentiles,
-            mode = MetricsOps.PercentileMode.Exact,
-            parityFeedOrder = Order.Desc), b)
+            mode = exactForTierApprox(mode), parityFeedOrder = Order.Desc), b)
     }
+  }
 
-  /** The layout, iff the TierApprox pair can serve this request: grid on
-    * whole tier hours, inside the freshness watermark, sums tier built,
-    * and — when percentiles were asked — the histogram tier built with
-    * declared edges AND covering the request's history: a hist tier
-    * seeded AFTER months of sums history holds fewer slices, and
-    * approving it on existence alone would left-join NULL percentiles
-    * onto populated buckets — the silently-empty class the watermark
-    * exists to prevent. Coverage = the hist tier reaches back to the
-    * request's first slice, or as far back as the sums tier itself does
-    * (then missing buckets are genuine empties). Listing probes only.
-    * Shared by the per-id and pooled dispatches. */
+  /** What the TierApprox contract resolves to off the tier: EXACT. */
+  private def exactForTierApprox(mode: MetricsOps.PercentileMode) =
+    if (mode == MetricsOps.PercentileMode.TierApprox) MetricsOps.PercentileMode.Exact
+    else mode
+
   /** Distribution-tier coverage for a request — judged by the tier's
     * REFRESH extent ([[graft.storage.GraftStorage.histCoveredFrom]]),
     * never by data presence: sparse series legitimately leave early
@@ -999,43 +1010,38 @@ class MetricsService(spark: SparkSession, root: String,
         }
     }
 
-  private def tierApproxFor(b: graft.model.Buckets,
-                            percentiles: Seq[Double]): Option[MetricsService.TierLayout] = {
-    lazy val until = refreshedUntil
-    tiers.filter(t => b.end <= until &&
-      GraftStorage.tierServes(spark, t.gaugeSums, b) &&
-      (percentiles.isEmpty || (GraftStorage.tierServes(spark, t.gaugeHist, b) &&
-        GraftStorage.histTierHasMeta(spark, t.gaugeHist) &&
-        histTierCovers(t.gaugeHist, t.gaugeSums, b))))
-  }
+  /** The sums-family serve body over an arbitrary id set: five exact
+    * pooled stats from the sums tier, joined (TierApprox percentiles)
+    * per bucket with the histogram-tier quantile walk over the SAME ids
+    * — both scans prune to the request's ids via the broadcast
+    * semi-join, so a tag-resolved p95 dashboard reads hours ×
+    * selected-metrics (× bins) rows only. */
+  private def tierStatsServe(t: MetricsService.TierLayout,
+                             family: MetricsService.TierFamily,
+                             b: graft.model.Buckets, percentiles: Seq[Double],
+                             ids: DataFrame, tenantId: String,
+                             mtypeCode: Int): DataFrame =
+    withTierPercentiles(
+      GraftStorage.rollupStats(spark, family.tier(t), b, byMetric = false,
+        ids = Some(ids), tenant = Some(tenantId), mtypeCode = Some(mtypeCode)),
+      GraftStorage.rollupHistogram(spark, family.hist.get(t), b,
+        ids = Some(ids), tenant = Some(tenantId), mtypeCode = Some(mtypeCode)),
+      percentiles)
 
-  /** The TierApprox serve body over an arbitrary id set: five exact
-    * pooled stats from `gauge_sums` joined per bucket with the
-    * histogram-tier quantile walk over the SAME ids — both scans prune
-    * to the request's ids via the broadcast semi-join, so a tag-resolved
-    * p95 dashboard reads hours × selected-metrics (× bins) rows only. */
-  private def tierApproxServe(t: MetricsService.TierLayout,
-                              b: graft.model.Buckets, percentiles: Seq[Double],
-                              ids: DataFrame, tenantId: String,
-                              mtypeCode: Int): DataFrame = {
-    val five = GraftStorage.rollupStats(spark, t.gaugeSums, b,
-      byMetric = false, ids = Some(ids),
-      tenant = Some(tenantId), mtypeCode = Some(mtypeCode))
+  /** `five` joined per bucket with one [[MetricsOps.histogramQuantile]]
+    * walk per percentile over the served histogram `hist` (built only
+    * when percentiles were asked); several walks share ONE snapshot
+    * (buckets × bins rows) instead of re-scanning the tier each. */
+  private def withTierPercentiles(five: DataFrame, hist: => DataFrame,
+                                  percentiles: Seq[Double]): DataFrame =
     if (percentiles.isEmpty) five else {
-      val hist0 = GraftStorage.rollupHistogram(spark, t.gaugeHist, b,
-        ids = Some(ids), tenant = Some(tenantId), mtypeCode = Some(mtypeCode))
-      // several quantile walks share ONE served histogram snapshot
-      // (buckets × bins rows) instead of re-scanning the tier each
-      val hist = if (percentiles.lengthCompare(2) >= 0)
-        hist0.localCheckpoint() else hist0
+      val h = if (percentiles.lengthCompare(2) >= 0) hist.localCheckpoint() else hist
       percentiles.foldLeft(five) { (acc, q) =>
-        acc.join(MetricsOps.histogramQuantile(hist, q / 100.0)
-          .select(col("bucket"),
-            col("q_est").as(MetricsOps.pctColName(q))),
+        acc.join(MetricsOps.histogramQuantile(h, q / 100.0)
+          .select(col("bucket"), col("q_est").as(MetricsOps.pctColName(q))),
           Seq("bucket"), "left")
       }
     }
-  }
 
   /**
    * `fromEarliest=true` (GaugeHandler.java:449-496): derive the range from
@@ -1234,21 +1240,13 @@ class MetricsService(spark: SparkSession, root: String,
         .agg(aggs.head, aggs.tail: _*)
     }
     if (!matched) return rawBranch.limit(0)
-    // whole-range = ONE bucket; tier-servable when its bounds sit on the
-    // hour grid, the watermark covers it, and the sums tier exists
-    val b = graft.model.Buckets.fromStep(start, end, end - start)
-    val tierPath = tiers.map(l =>
-      if (t == MetricType.Counter) l.counterSums else l.gaugeSums)
-      .filter(p => percentiles.isEmpty && end <= refreshedUntil &&
-        GraftStorage.tierServes(spark, p, b))
-    tierPath match {
-      case Some(p) =>
-        GraftStorage.rollupStats(spark, p, b, byMetric = false,
-          ids = Some(oneMetric(id.name)), tenant = Some(id.tenantId),
-          mtypeCode = Some(id.mtype.toInt))
-          .select(tagCols ++ Seq("min", "avg", "max", "sum", "samples").map(col): _*)
-      case None => rawBranch
-    }
+    val family = sumsFamily(t)
+    Buckets.whole(TimeRange(start, end)).flatMap(b =>
+      servingTier(family, b, percentiles).map(l =>
+        tierStatsServe(l, family, b, Seq.empty, oneMetric(id.name),
+          id.tenantId, id.mtype.toInt)
+          .select(tagCols ++ Seq("min", "avg", "max", "sum", "samples").map(col): _*)))
+      .getOrElse(rawBranch)
   }
 
   /** A4/A5 — multi-metric stats over an explicit id list. */
@@ -1281,39 +1279,24 @@ class MetricsService(spark: SparkSession, root: String,
                        stacked: Boolean,
                        mode: Option[MetricsOps.PercentileMode] = None): DataFrame = {
     val b = config.buckets
-    if (mode.contains(MetricsOps.PercentileMode.TierApprox) && !stacked &&
-        mtype == MetricType.Gauge) {
-      tierApproxFor(b, percentiles) match {
-        case Some(t) =>
-          return MetricsOps.gapFill(tierApproxServe(t, b, percentiles,
-            ids.select("metric"), tenantId, mtype.code.toInt), b)
-        case None => () // fall through to the default dispatch below
-      }
-    }
     val aggMode = mode match {
       // the TierApprox contract (PercentileMode.TierApprox scaladoc, and
       // the per-id twin): what the tier pair cannot serve runs EXACT raw
       // — more accurate than asked, never a different estimator
-      case Some(MetricsOps.PercentileMode.TierApprox) =>
-        MetricsOps.PercentileMode.Exact
+      case Some(m) => exactForTierApprox(m)
       case None => DefaultPercentileMode
-      case Some(m) => m
     }
-    // POOLED aligned percentile-free requests serve from the sums tier:
-    // pooling IS the tier's byMetric=false bucket re-aggregate over the
-    // id set's semi-join (stacked cannot — it sums per-metric statistics,
-    // medians included, which need the raw distribution per metric)
-    val tierEligible = mode.forall(m => m == MetricsOps.PercentileMode.Exact ||
-      m == MetricsOps.PercentileMode.TierApprox)
-    val tierPath = if (stacked || !tierEligible) None else tierFor(
-      if (mtype == MetricType.Counter) _.counterSums else _.gaugeSums,
-      b, percentiles)
-    tierPath match {
-      case Some(p) =>
-        MetricsOps.gapFill(
-          GraftStorage.rollupStats(spark, p, b, byMetric = false,
-            ids = Some(ids.select("metric")), tenant = Some(tenantId),
-            mtypeCode = Some(mtype.code.toInt)), b)
+    // POOLED requests serve from the sums tier: pooling IS the tier's
+    // byMetric=false bucket re-aggregate over the id set's semi-join
+    // (stacked cannot — it sums per-metric statistics, medians included,
+    // which need the raw distribution per metric)
+    val family = sumsFamily(mtype)
+    val served = if (stacked) None else servingTier(family, b, percentiles,
+      mode.getOrElse(MetricsOps.PercentileMode.Exact))
+    served match {
+      case Some(t) =>
+        MetricsOps.gapFill(tierStatsServe(t, family, b, percentiles,
+          ids.select("metric"), tenantId, mtype.code.toInt), b)
       case None =>
         val dp = MetricsOps.dataPointsForIds(
           raw().filter(col("tenant_id") === tenantId && col("mtype") === mtype.code.toInt), ids)
@@ -1625,15 +1608,15 @@ class MetricsService(spark: SparkSession, root: String,
 
   def findAvailabilityStats(id: MetricId, config: BucketConfig): DataFrame = {
     val b = config.buckets
-    tierFor(_.avail, b, Seq.empty) match {
+    servingTier(Avail, b) match {
       // the availability tier's served shape is COMPLETE (no order
       // statistics involved) — aligned requests answer bit-equal from
       // hour summaries + boundary facts, with the same dense finish
-      case Some(p) =>
+      case Some(t) =>
         val shape = Seq("metric", "bucket", "up_ms", "down_ms", "unknown_ms",
           "admin_ms", "last_not_uptime", "not_up_count", "samples", "uptime_ratio")
         MetricsOps.gapFill(
-          GraftStorage.rollupAvailStats(spark, p, b,
+          GraftStorage.rollupAvailStats(spark, t.avail, b,
             ids = Some(oneMetric(id.name)), tenant = Some(id.tenantId))
             .select(shape.map(col): _*),
           b, Seq("metric"), Some(oneMetric(id.name)))
@@ -1673,20 +1656,16 @@ class MetricsService(spark: SparkSession, root: String,
                          MetricsOps.PercentileMode.Exact): DataFrame = {
     val b = config.buckets
     // the distribution tier covers gauges only (writeRollupHist aggregates
-    // n_value); counter TierApprox resolves to the exact raw path — more
-    // accurate than asked for, never silently different
-    val m = if (mode == MetricsOps.PercentileMode.TierApprox)
-      MetricsOps.PercentileMode.Exact else mode
-    tierFor(_.counterSums, b, percentiles, m) match {
-      case Some(p) => // tier serve, findGaugeStats' posture
-        MetricsOps.gapFill(
-          GraftStorage.rollupStats(spark, p, b, byMetric = false,
-            ids = Some(oneMetric(id.name)), tenant = Some(id.tenantId),
-            mtypeCode = Some(id.mtype.toInt)), b)
+    // n_value); counter TierApprox percentiles resolve to the exact raw
+    // path — more accurate than asked for, never silently different
+    servingTier(CounterSums, b, percentiles, mode) match {
+      case Some(t) => // tier serve, findGaugeStats' posture
+        MetricsOps.gapFill(tierStatsServe(t, CounterSums, b, Seq.empty,
+          oneMetric(id.name), id.tenantId, id.mtype.toInt), b)
       case None =>
         MetricsOps.gapFill(
           MetricsOps.numericBucketStats(series(id), b, percentiles, valueCol = "l_value",
-            mode = m, parityFeedOrder = Order.Asc), b)
+            mode = exactForTierApprox(mode), parityFeedOrder = Order.Asc), b)
     }
   }
 
@@ -1765,57 +1744,21 @@ class MetricsService(spark: SparkSession, root: String,
     require(mode == MetricsOps.PercentileMode.Exact ||
       mode == MetricsOps.PercentileMode.TierApprox,
       s"Invalid percentileMode for rate stats (expected exact or tier)")
-    if (mode == MetricsOps.PercentileMode.TierApprox) {
-      def ratePath(l: MetricsService.TierLayout) =
-        if (isCounter) l.counterRate else l.gaugeRate
-      def histPath(l: MetricsService.TierLayout) =
-        if (isCounter) l.counterRateHist else l.gaugeRateHist
-      // rateHistTierServes, not tierServes: a sparse store (≤1 point per
-      // hour everywhere) leaves the refreshed rate-hist tier physically
-      // EMPTY — its percentile answer is the boundary-pair reconstruction
-      // off the rate tier, and a data-existence probe would refuse it
-      // forever (silent permanent raw downgrade)
-      val served = tiers.filter(l => b.end <= refreshedUntil &&
-        GraftStorage.tierServes(spark, ratePath(l), b) &&
-        (percentiles.isEmpty || (GraftStorage.rateHistTierServes(spark, histPath(l), b) &&
-          GraftStorage.histTierHasMeta(spark, histPath(l)) &&
-          histTierCovers(histPath(l), ratePath(l), b))))
-      served match {
-        case Some(l) =>
-          val five = GraftStorage.rollupRateStats(spark, ratePath(l), b,
-            isCounter = isCounter, byMetric = false,
-            ids = Some(oneMetric(id.name)), tenant = Some(id.tenantId),
-            mtypeCode = Some(id.mtype.toInt))
-          val withPcts = if (percentiles.isEmpty) five else {
-            val hist0 = GraftStorage.rollupRateHistogram(spark, histPath(l),
-              ratePath(l), b, isCounter = isCounter,
-              ids = Some(oneMetric(id.name)), tenant = Some(id.tenantId),
-              mtypeCode = Some(id.mtype.toInt))
-            val hist = if (percentiles.lengthCompare(2) >= 0)
-              hist0.localCheckpoint() else hist0
-            percentiles.foldLeft(five) { (acc, q) =>
-              acc.join(MetricsOps.histogramQuantile(hist, q / 100.0)
-                .select(col("bucket"),
-                  col("q_est").as(MetricsOps.pctColName(q))),
-                Seq("bucket"), "left")
-            }
-          }
-          return MetricsOps.gapFill(withPcts, b)
-        case None =>
-          return MetricsOps.gapFill(
-            MetricsOps.rateStats(series(id), b, isCounter = isCounter,
-              valueCol = if (isCounter) "l_value" else "n_value",
-              quantiles = percentiles), b)
-      }
-    }
-    tierFor(if (isCounter) _.counterRate else _.gaugeRate, b, percentiles) match {
+    val family = rateFamily(isCounter)
+    servingTier(family, b, percentiles, mode) match {
       // rate tier serve: within-hour partials + boundary pairs, the same
-      // pre-range-anchor semantics the raw W1 path has (spec-pinned)
-      case Some(p) =>
-        MetricsOps.gapFill(
-          GraftStorage.rollupRateStats(spark, p, b, isCounter = isCounter,
-            byMetric = false, ids = Some(oneMetric(id.name)),
-            tenant = Some(id.tenantId), mtypeCode = Some(id.mtype.toInt)), b)
+      // pre-range-anchor semantics the raw W1 path has (spec-pinned);
+      // TierApprox percentiles walk the rate-distribution tier
+      case Some(l) =>
+        val ids = Some(oneMetric(id.name))
+        MetricsOps.gapFill(withTierPercentiles(
+          GraftStorage.rollupRateStats(spark, family.tier(l), b, isCounter = isCounter,
+            byMetric = false, ids = ids, tenant = Some(id.tenantId),
+            mtypeCode = Some(id.mtype.toInt)),
+          GraftStorage.rollupRateHistogram(spark, family.hist.get(l), family.tier(l), b,
+            isCounter = isCounter, ids = ids, tenant = Some(id.tenantId),
+            mtypeCode = Some(id.mtype.toInt)),
+          percentiles), b)
       case None =>
         // dense like every reference numeric-stats answer: rate stats flow
         // through the same NumericBucketPointTransformer → BucketPoint.toList

@@ -328,7 +328,7 @@ class RestRoutes(spark: SparkSession, svc: MetricsService, tenant: String,
     // WithEmptyPayload posts "" AND [] and expects 400 for each)
     case ("POST", Seg(t) :: id :: ("raw" | "data") :: Nil) => body match {
       case pts: Seq[_] if pts.nonEmpty && pts.forall(_.isInstanceOf[PointValue]) =>
-        ingest(t, pointsFrame(t, id, pts.asInstanceOf[Seq[PointValue]]))
+        ingest(t, pointsFrame(Seq(t -> MetricPoints(id, pts.asInstanceOf[Seq[PointValue]]))))
       case pts: Seq[_] if pts.isEmpty =>
         ApiError(400, "Payload is empty")
       case _ => badBody("Seq[PointValue]")
@@ -338,9 +338,7 @@ class RestRoutes(spark: SparkSession, svc: MetricsService, tenant: String,
     // the deprecated /data alias)
     case ("POST", Seg(t) :: ("raw" | "data") :: Nil) => body match {
       case ms: Seq[_] if ms.nonEmpty && ms.forall(_.isInstanceOf[MetricPoints]) =>
-        ingest(t, ms.asInstanceOf[Seq[MetricPoints]]
-          .map(m => pointsFrame(t, m.id, m.data))
-          .reduce(_ unionByName _))
+        ingest(t, pointsFrame(ms.asInstanceOf[Seq[MetricPoints]].map(t -> _)))
       case _ => badBody("non-empty Seq[MetricPoints]")
     }
     // mixed-type multi-metric ingest: one body carrying gauges + counters
@@ -352,12 +350,10 @@ class RestRoutes(spark: SparkSession, svc: MetricsService, tenant: String,
         val typed = Seq(
           MetricType.Gauge -> m.gauges, MetricType.Counter -> m.counters,
           MetricType.Availability -> m.availabilities)
-          .flatMap { case (t, ms) => ms.map(p => pointsFrame(t, p.id, p.data)) }
-        if (typed.nonEmpty) svc.addDataPoints(typed.reduce(_ unionByName _))
+          .flatMap { case (t, ms) => ms.map(t -> _) }
+        if (typed.nonEmpty) svc.addDataPoints(pointsFrame(typed))
         if (m.strings.nonEmpty)
-          svc.addStringDataPoints(m.strings
-            .map(p => pointsFrame(MetricType.Str, p.id, p.data))
-            .reduce(_ unionByName _))
+          svc.addStringDataPoints(pointsFrame(m.strings.map(MetricType.Str -> _)))
         NoContent
       case _ => badBody("MixedMetricsBody")
     }
@@ -921,8 +917,10 @@ class RestRoutes(spark: SparkSession, svc: MetricsService, tenant: String,
     Ok(renamePcts(stats, pcts))
   }
 
-  /** POST .../raw body → canonical datapoint frame, typed per route. */
-  private def pointsFrame(t: MetricType, id: String, pts: Seq[PointValue]): DataFrame = {
+  /** POST .../raw bodies → ONE canonical datapoint frame, each point
+    * typed by its own metric's type: a multi-metric body is one local
+    * relation, not a union of per-metric frames. */
+  private def pointsFrame(body: Seq[(MetricType, MetricPoints)]): DataFrame = {
     val s = spark
     import s.implicits._
     def num(v: Any): Double = v match {
@@ -938,37 +936,16 @@ class RestRoutes(spark: SparkSession, svc: MetricsService, tenant: String,
     }
     // per-point tags ride along (the reference's DataPoint body carries
     // an optional tags map that round-trips through raw fetches)
-    val base = t match {
-      case MetricType.Gauge =>
-        pts.map(p => (p.timestamp, num(p.value), p.tags)).toDF("time", "n_value", "tags")
-          .withColumn("l_value", lit(null).cast("long"))
-          .withColumn("avail", lit(null).cast("int"))
-          .withColumn("s_value", lit(null).cast("string"))
-      case MetricType.Counter =>
-        pts.map(p => (p.timestamp, cnt(p.value), p.tags)).toDF("time", "l_value", "tags")
-          .withColumn("n_value", lit(null).cast("double"))
-          .withColumn("avail", lit(null).cast("int"))
-          .withColumn("s_value", lit(null).cast("string"))
-      case MetricType.Availability =>
-        pts.map(p => (p.timestamp,
-          AvailabilityType.fromText(p.value.toString).code.toInt, p.tags))
-          .toDF("time", "avail", "tags")
-          .withColumn("n_value", lit(null).cast("double"))
-          .withColumn("l_value", lit(null).cast("long"))
-          .withColumn("s_value", lit(null).cast("string"))
-      case MetricType.Str =>
-        pts.map(p => (p.timestamp, p.value.toString, p.tags)).toDF("time", "s_value", "tags")
-          .withColumn("n_value", lit(null).cast("double"))
-          .withColumn("l_value", lit(null).cast("long"))
-          .withColumn("avail", lit(null).cast("int"))
-      case other =>
-        throw new IllegalArgumentException(s"cannot ingest type ${other.text}")
-    }
-    base
-      .withColumn("tenant_id", lit(tenant))
-      .withColumn("mtype", lit(t.code.toInt))
-      .withColumn("metric", lit(id))
-      .select("tenant_id", "mtype", "metric", "time",
-        "n_value", "l_value", "avail", "s_value", "tags")
+    body.flatMap { case (t, m) =>
+      if (!t.isUserType) throw new IllegalArgumentException(s"cannot ingest type ${t.text}")
+      m.data.map(p => (tenant, t.code.toInt, m.id, p.timestamp,
+        Option.when(t == MetricType.Gauge)(num(p.value)),
+        Option.when(t == MetricType.Counter)(cnt(p.value)),
+        Option.when(t == MetricType.Availability)(
+          AvailabilityType.fromText(p.value.toString).code.toInt),
+        Option.when(t == MetricType.Str)(p.value.toString),
+        p.tags))
+    }.toDF("tenant_id", "mtype", "metric", "time",
+      "n_value", "l_value", "avail", "s_value", "tags")
   }
 }

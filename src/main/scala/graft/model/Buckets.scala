@@ -58,4 +58,10 @@ object Buckets {
       Buckets(start, step, count.toInt)
     }
   }
+
+  /** One bucket spanning a whole-range request, so it can take the
+    * bucketed tier dispatch; `None` when the range starts at or before
+    * the epoch, where no grid exists. */
+  def whole(range: TimeRange): Option[Buckets] =
+    if (range.start > 0) Some(Buckets(range.start, range.end - range.start, 1)) else None
 }

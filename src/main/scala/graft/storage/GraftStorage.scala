@@ -1043,8 +1043,8 @@ object GraftStorage {
    * (hour/day steps) take the cheap branch by construction.
    */
   // ---- serving-dispatch scaffolding, shared by the five serve*
-  // dispatchers: alignment, tier existence, the LWW-resolved raw
-  // fallback read, and the dispatch-level tenant guard ------------------
+  // dispatchers: the one tier-branch predicate ([[tierBranch]]), the
+  // LWW-resolved raw fallback read, and the dispatch-level tenant guard -
 
   private def hourAligned(xs: Long*): Boolean = xs.forall(_ % RollupMs == 0)
 
@@ -1061,12 +1061,20 @@ object GraftStorage {
       .exists(_.nonEmpty)
   }
 
-  /** True when `b` sits on the tier hour grid and the tier exists — the
-    * exact tier-branch condition of the serve* dispatchers, exposed so
-    * the API layer can decide whether the tier surface (distributive
-    * stats, no order statistics) applies BEFORE shaping a request. */
+  /** The tier-branch condition of every serve* dispatcher: `b` sits on
+    * the tier hour grid, the tier is `built` (by default: it holds data)
+    * and `b` ends within `refreshedUntil` when one is supplied. */
+  private def tierBranch(spark: SparkSession, path: String, b: graft.model.Buckets,
+                         refreshedUntil: Option[Long],
+                         built: (SparkSession, String) => Boolean = tierExists): Boolean =
+    hourAligned(b.start, b.step, b.end) && built(spark, path) &&
+      refreshedUntil.forall(b.end <= _)
+
+  /** [[tierBranch]] without a watermark — exposed so the API layer can
+    * decide whether the tier surface (distributive stats, no order
+    * statistics) applies BEFORE shaping a request. */
   def tierServes(spark: SparkSession, path: String, b: graft.model.Buckets): Boolean =
-    hourAligned(b.start, b.step, b.end) && tierExists(spark, path)
+    tierBranch(spark, path, b, None)
 
   /** The RATE-distribution dispatch condition: a rate-hist tier is
     * usable for `b` when the grid is hour-aligned and the tier either
@@ -1083,12 +1091,6 @@ object GraftStorage {
                          b: graft.model.Buckets): Boolean =
     hourAligned(b.start, b.step, b.end) &&
       (tierExists(spark, path) || histCoveredFrom(spark, path).isDefined)
-
-  /** [[tierServes]] for a whole-range request (the counter-increase
-    * dispatch condition — no step grid). */
-  def tierServes(spark: SparkSession, path: String,
-                 range: graft.model.TimeRange): Boolean =
-    hourAligned(range.start, range.end) && tierExists(spark, path)
 
   /** LWW-resolved raw read for the dispatchers' fallback branch — scope
     * partition filters first, then the slice partition filter (time
@@ -1155,8 +1157,7 @@ object GraftStorage {
                   valueCol: String = "n_value",
                   refreshedUntil: Option[Long] = None): DataFrame = {
     val scope = dispatchScope(spark, rawPath, tenant, mtypeCode, "stats")
-    if (hourAligned(b.start, b.step, b.end) && tierExists(spark, rollupPath) &&
-        refreshedUntil.forall(b.end <= _))
+    if (tierBranch(spark, rollupPath, b, refreshedUntil))
       rollupStats(spark, rollupPath, b, byMetric, ids = ids,
         tenant = tenant, mtypeCode = mtypeCode)
     else {
@@ -1350,8 +1351,7 @@ object GraftStorage {
                       ids: Option[DataFrame] = None,
                       refreshedUntil: Option[Long] = None): DataFrame = {
     val scope = dispatchScope(spark, rawPath, tenant, mtypeCode, "rate")
-    if (hourAligned(b.start, b.step, b.end) && tierExists(spark, ratePath) &&
-        refreshedUntil.forall(b.end <= _))
+    if (tierBranch(spark, ratePath, b, refreshedUntil))
       rollupRateStats(spark, ratePath, b, isCounter, byMetric,
         ids = ids, tenant = tenant, mtypeCode = mtypeCode)
     else {
@@ -1386,8 +1386,7 @@ object GraftStorage {
     // machine windows by metric alone — both branches need the
     // single-tenant guarantee, so the guard sits at the dispatch
     val scope = dispatchScope(spark, rawPath, tenant, None, "availability")
-    if (hourAligned(b.start, b.step, b.end) && tierExists(spark, availPath) &&
-        refreshedUntil.forall(b.end <= _)) {
+    if (tierBranch(spark, availPath, b, refreshedUntil)) {
       // the dispatch guard above is decided from the RAW listing, but this
       // branch serves the TIER and then drops its tenant keys — a tier
       // holding more tenants than raw (raw retention-swept, or the tier
@@ -1426,8 +1425,7 @@ object GraftStorage {
     // output carries tenant keys on BOTH branches — no guard, the scope
     // is partition pruning only
     val scope = dispatchScope(spark, rawPath, tenant, None, "counter", guard = false)
-    if (hourAligned(range.start, range.end) && tierExists(spark, ctrPath) &&
-        refreshedUntil.forall(range.end <= _))
+    if (graft.model.Buckets.whole(range).exists(tierBranch(spark, ctrPath, _, refreshedUntil)))
       rollupCounterIncrease(spark, ctrPath, range, tenant = tenant)
         .select(shape.map(col): _*)
     else
@@ -1457,7 +1455,9 @@ object GraftStorage {
     val (vMin, vMax, bins) = readHistMeta(spark, histPath).getOrElse(
       throw new IllegalArgumentException(s"no histogram tier meta at $histPath"))
     val scope = dispatchScope(spark, rawPath, tenant, mtypeCode, "histogram")
-    if (hourAligned(b.start, b.step, b.end) && refreshedUntil.forall(b.end <= _))
+    // the tier counts as built once its meta read above succeeds — no
+    // data probe
+    if (tierBranch(spark, histPath, b, refreshedUntil, built = (_, _) => true))
       rollupHistogram(spark, histPath, b, tenant = tenant, mtypeCode = mtypeCode)
     else
       graft.operators.MetricsOps.valueHistogram(

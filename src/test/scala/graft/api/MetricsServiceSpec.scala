@@ -1316,6 +1316,97 @@ class MetricsServiceSpec extends SparkTestBase {
     assert(plan(tiered.findGaugeStats(g, aligned)).contains("gauge_sums"))
   }
 
+  test("tier dispatch matrix: every tier-served entry point serves from its " +
+    "tier only when the grid is aligned, inside the watermark, percentile-" +
+    "free under Exact, and the tier is built; each refusal reads raw") {
+    import graft.storage.GraftStorage
+    import graft.operators.MetricsOps
+    import org.apache.spark.sql.DataFrame
+    val root = Files.createTempDirectory("graft-svc-matrix").toString
+    def layout(dir: String) = MetricsService.TierLayout(s"$root/$dir",
+      histEdges = Some((0.0, 100.0, 20)), rateHistEdges = Some((0.0, 10.0, 20)))
+    val tiered = new MetricsService(spark, root, Some(layout("tiers")))
+    val H = GraftStorage.RollupMs
+    val s = spark
+    import s.implicits._
+    val g = MetricId("t1", MetricType.Gauge.code, "g")
+    val c = MetricId("t1", MetricType.Counter.code, "c")
+    val av = MetricId("t1", MetricType.Availability.code, "av")
+    tiered.createMetric(g, Map("dc" -> "east"))
+    // hours 1-2 (slice 0) dense, plus one point in slice 1 past the watermark
+    val mins = 1 to 40
+    tiered.addDataPoints(canonicalPoints(
+      (mins.map(i => (H + i * 60000L, i.toDouble)) :+ (25 * H + 100L, 7.0))
+        .toDF("time", "n_value").withColumn("metric", lit("g")), MetricType.Gauge))
+    tiered.addDataPoints(canonicalPoints(
+      (mins.map(i => (H + i * 60000L, 10L + 3L * i)) :+ (25 * H + 100L, 500L))
+        .toDF("time", "l_value").withColumn("metric", lit("c")), MetricType.Counter))
+    tiered.addDataPoints(canonicalPoints(
+      Seq((H + 100L, 0), (H + 2000L, 1), (2 * H + 500L, 0), (25 * H + 100L, 1))
+        .toDF("time", "avail").withColumn("metric", lit("av")),
+      MetricType.Availability))
+    tiered.refreshTiers(upToSlice = 1) // watermark = 24h
+    // a layout whose watermark covers everything but whose families were
+    // never built: only tier absence can refuse it
+    val absent = new MetricsService(spark, root, Some(layout("absent")))
+    Files.createDirectories(java.nio.file.Paths.get(s"$root/absent"))
+    Files.write(java.nio.file.Paths.get(s"$root/absent/_refreshed_until"),
+      Long.MaxValue.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+    final case class Cond(name: String, svc: MetricsService, cfg: BucketConfig,
+                          exactPct: Boolean, tier: Boolean)
+    val aligned = BucketConfig(TimeRange(H, 3 * H), Some(2), None)
+    val conds = Seq(
+      Cond("aligned, in watermark", tiered, aligned, exactPct = false, tier = true),
+      Cond("misaligned", tiered, BucketConfig(TimeRange(H, 3 * H - 60000L), Some(2), None),
+        exactPct = false, tier = false),
+      Cond("past the watermark", tiered, BucketConfig(TimeRange(24 * H, 26 * H), Some(2), None),
+        exactPct = false, tier = false),
+      Cond("percentiles under Exact", tiered, aligned, exactPct = true, tier = false),
+      Cond("tier absent", absent, aligned, exactPct = false, tier = false))
+    // `x` = the percentiles-under-Exact condition: percentile-free entries
+    // then ask for a p90, TierApprox entries run their p90 under Exact
+    def pct(x: Boolean) = if (x) Seq(90.0) else Seq.empty[Double]
+    def approx(x: Boolean) =
+      if (x) MetricsOps.PercentileMode.Exact else MetricsOps.PercentileMode.TierApprox
+    val ids = Seq("g").toDF("metric")
+    // (entry point, tier-plan marker, takes percentiles, request)
+    val entries: Seq[(String, String, Boolean, (MetricsService, BucketConfig, Boolean) => DataFrame)] = Seq(
+      ("gauge stats", "gauge_sums", true,
+        (svc, cfg, x) => svc.findGaugeStats(g, cfg, pct(x))),
+      ("counter stats", "counter_sums", true,
+        (svc, cfg, x) => svc.findCounterStats(c, cfg, pct(x))),
+      ("rate stats", "counter_rate]", true,
+        (svc, cfg, x) => svc.findRateStats(c, cfg, pct(x))),
+      ("availability stats", "tiers/avail", false,
+        (svc, cfg, _) => svc.findAvailabilityStats(av, cfg)),
+      ("pooled findNumericStats", "gauge_sums", true,
+        (svc, cfg, x) => svc.findNumericStats("t1", MetricType.Gauge, ids, cfg, pct(x),
+          stacked = false)),
+      ("findCounterIncrease", "counter_increase", false,
+        (svc, cfg, _) => svc.findCounterIncrease("t1", cfg.range)),
+      ("findStatsMetricTags", "gauge_sums", true,
+        (svc, cfg, x) => svc.findStatsMetricTags(g, Map("dc" -> "east"), pct(x),
+          cfg.range.start, cfg.range.end)),
+      ("gauge TierApprox", "gauge_hist", true,
+        (svc, cfg, x) => svc.findGaugeStats(g, cfg, Seq(90.0), approx(x))),
+      ("pooled TierApprox", "gauge_hist", true,
+        (svc, cfg, x) => svc.findNumericStats("t1", MetricType.Gauge, ids, cfg, Seq(90.0),
+          stacked = false, Some(approx(x)))),
+      ("rate TierApprox", "counter_rate_hist", true,
+        (svc, cfg, x) => svc.findRateStats(c, cfg, Seq(90.0), approx(x))))
+    def plan(df: DataFrame) = df.queryExecution
+      .explainString(org.apache.spark.sql.execution.FormattedMode)
+    for ((entry, marker, takesPct, run) <- entries; k <- conds
+         if takesPct || !k.exactPct) {
+      val p = plan(run(k.svc, k.cfg, k.exactPct))
+      if (k.tier) assert(p.contains(marker) && !p.contains("/data"),
+        s"$entry, ${k.name}: must serve from the tier only:\n$p")
+      else assert(p.contains("/data") && !p.contains(s"$root/tiers"),
+        s"$entry, ${k.name}: must take the raw path:\n$p")
+    }
+  }
+
   test("delete metric removes its data; tenant catalog round trip") {
     val svc = newService()
     svc.createTenant("t1", Map("gauge" -> 14))
