@@ -10,6 +10,26 @@ import org.apache.spark.sql.SparkSession
  * overridden to ~2-3x total cores), UTC session time zone for oracle parity.
  */
 object GraftSession {
+
+  /**
+   * Spark's `spark.sql.sources.parallelPartitionDiscovery.threshold`:
+   * above this many directories, listing a table launches a Spark job of
+   * one task per directory instead of listing on the driver. Spark's
+   * default is 32, and the index stores write 64-bucket tables (BM25,
+   * near-dup), so every read of one of them paid a 64-task listing job
+   * before any data was read: about 0.6–0.7 s wall and 2 s of task time
+   * at 3 cores, against 64 `listStatus` calls on the driver that cost
+   * far less (`docs/BENCH_NOTES.md`, "Store listing on the driver").
+   *
+   * The value covers the widest default store layout the code writes:
+   * 256 buckets for the SRP store at its default 8 planes, 64 for BM25
+   * and near-dup (`IndexBuckets`), 32 for [[graft.storage.TagIndex]].
+   * Wider tables (user data, SRP with more planes) keep Spark's
+   * parallel listing. Set explicitly so listing never depends on
+   * Spark's ambient default.
+   */
+  val StoreListingThreshold: Int = 256
+
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
               // shuffle width follows the core count (SPARK_GRAFT_CPUS)
               // so a smaller harness host doesn't pay 32-way task overhead
@@ -27,6 +47,8 @@ object GraftSession {
       // engine does exact integer epoch-millis math from there
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        StoreListingThreshold.toString)
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()
@@ -34,12 +56,15 @@ object GraftSession {
     s
   }
 
-  /** Ensure nanos-as-long is set on an externally created session (the
-    * driver contract hands us a session we didn't build). Dynamic conf —
-    * affects subsequent parquet schema conversion. */
+  /** Ensure nanos-as-long and the store listing threshold are set on an
+    * externally created session (the driver contract hands us a session
+    * we didn't build). Dynamic conf — affects subsequent parquet schema
+    * conversion and file listing. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.threshold",
+      StoreListingThreshold.toString)
     spark
   }
 }

@@ -204,6 +204,28 @@ object SparkEntry {
   private def rmrf(s: SparkSession, path: String): Unit =
     graft.storage.IndexStore.rmrf(s, path)
 
+  /** Stage a parquet input into `stage` by filesystem copy, flat: a
+    * single file lands as itself, a Spark-written directory as its data
+    * files (`_`/`.`-prefixed markers skipped). Nested under `stage`, a
+    * directory's files would sit one level below the rows later appended
+    * to `stage`, and the batch and file-stream readers misread mixed
+    * listing depths. A directory holding subdirectories (a partitioned
+    * table) has no flat form and is refused by name. */
+  private[graft] def stageFlat(s: SparkSession, src: String, stage: String): Unit = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val in = new org.apache.hadoop.fs.Path(src)
+    val inFs = in.getFileSystem(conf)
+    val out = new org.apache.hadoop.fs.Path(stage)
+    val outFs = out.getFileSystem(conf)
+    val st = inFs.getFileStatus(in)
+    val files = if (st.isFile) Seq(st) else inFs.listStatus(in).toSeq
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+    files.find(_.isDirectory).foreach(d => throw new IllegalArgumentException(
+      s"cannot stage $src flat: it holds the subdirectory ${d.getPath.getName}"))
+    files.foreach(f => org.apache.hadoop.fs.FileUtil.copy(inFs, f.getPath,
+      outFs, new org.apache.hadoop.fs.Path(out, f.getPath.getName), false, conf))
+  }
+
   /** Backdate every file under `dir` by a minute: the file streaming
     * source orders micro-batches by modification time with arbitrary tie
     * order, so a wave that must be processed FIRST (an order-dependent
@@ -6301,11 +6323,7 @@ object SparkEntry {
       // — byte-identical input, none of the decode/re-encode the old
       // read+write staging paid (~4 s single-task).
       val stage = s"$base/stage"
-      val conf = s.sparkContext.hadoopConfiguration
-      val src = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-      val dst = new org.apache.hadoop.fs.Path(s"$stage/events.parquet")
-      org.apache.hadoop.fs.FileUtil.copy(src.getFileSystem(conf), src,
-        dst.getFileSystem(conf), dst, false, conf)
+      stageFlat(s, s"$d/events.parquet", stage)
       val ev = s.read.parquet(stage)
       val tsPlus = ev.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

@@ -115,11 +115,14 @@ object MetricsOps {
     case _: PercentileMode.Adaptive =>
       throw new IllegalArgumentException(
         "Adaptive must be resolved against the input frame first (resolveMode)")
-    case PercentileMode.TierApprox =>
-      throw new IllegalArgumentException(
-        "TierApprox is a dispatch-level mode (MetricsService routes it to the " +
-          "histogram tier or resolves it to Exact) — it never reaches an aggregate")
+    case PercentileMode.TierApprox => throw tierApproxRefusal()
   }
+
+  /** TierApprox is resolved by the caller, never aggregated here — the
+    * one refusal both aggregate entry points raise. */
+  private def tierApproxRefusal() = new IllegalArgumentException(
+    "TierApprox is a dispatch-level mode (MetricsService routes it to the " +
+      "histogram tier or resolves it to Exact) — it never reaches an aggregate")
 
   // -----------------------------------------------------------------------
   // A1/A2 — numeric bucket statistics + gap fill
@@ -235,6 +238,8 @@ object MetricsOps {
 
       case _: PercentileMode.Adaptive =>
         throw new IllegalStateException("unreachable: Adaptive resolves to Exact or P2Sketch")
+
+      case PercentileMode.TierApprox => throw tierApproxRefusal()
     }
   }
 

@@ -78,18 +78,29 @@ object IndexStore {
   /** Persist build parameters as the store's single-row meta table. */
   def writeMeta(spark: SparkSession, path: String, fields: Seq[(String, Int)]): Unit = {
     val row = org.apache.spark.sql.Row.fromSeq(fields.map(_._2))
-    val schema = org.apache.spark.sql.types.StructType(fields.map { case (n, _) =>
-      org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.IntegerType,
-        nullable = false)
-    })
-    spark.createDataFrame(java.util.List.of(row), schema)
+    spark.createDataFrame(java.util.List.of(row), metaSchema(fields))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** Fail fast when a caller's parameters disagree with the store's. */
+  /** The meta table's schema: one int column per field. A file read
+    * makes it nullable, so an absent column reads as null. */
+  private def metaSchema(fields: Seq[(String, Int)]) =
+    org.apache.spark.sql.types.StructType(fields.map { case (n, _) =>
+      org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.IntegerType,
+        nullable = false)
+    })
+
+  /** Fail fast when a caller's parameters disagree with the store's.
+    * The expected fields are the read schema (all int, names known), so
+    * the guard runs one job — the collect — and no schema-inference job.
+    * A field the stored meta lacks reads as null and is refused by name,
+    * never taken as 0. */
   def requireMeta(spark: SparkSession, path: String, expected: Seq[(String, Int)]): Unit = {
-    val rows = spark.read.parquet(s"$path/meta").collect()
+    val rows = spark.read.schema(metaSchema(expected)).parquet(s"$path/meta").collect()
     require(rows.length == 1, s"index meta at $path/meta must be one row, found ${rows.length}")
+    val missing = expected.indices.filter(rows(0).isNullAt).map(expected(_)._1)
+    require(missing.isEmpty,
+      s"index meta at $path/meta has no value for ${missing.mkString(", ")}")
     val stored = expected.map { case (n, _) => n -> rows(0).getAs[Int](n) }
     require(stored == expected,
       s"index at $path was built with ${stored.mkString(", ")}; " +

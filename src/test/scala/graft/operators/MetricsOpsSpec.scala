@@ -372,6 +372,16 @@ class MetricsOpsSpec extends SparkTestBase {
     assert(p90(MetricsOps.PercentileMode.Adaptive(10)) == sketch)
   }
 
+  test("TierApprox reaching numericBucketStats refuses with the dispatch-level " +
+    "message, not a MatchError") {
+    val dp = points(Seq(("m", 100L, 1.0)))
+    val e = intercept[IllegalArgumentException] {
+      MetricsOps.numericBucketStats(dp, Buckets(100, 1000, 1), Seq(90.0),
+        mode = MetricsOps.PercentileMode.TierApprox)
+    }
+    assert(e.getMessage.contains("TierApprox is a dispatch-level mode"), e.getMessage)
+  }
+
   test("filter pattern: star, negation, full-match anchoring") {
     val s = spark
     import s.implicits._
