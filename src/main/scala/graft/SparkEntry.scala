@@ -6986,8 +6986,8 @@ object SparkEntry {
              |UNION ALL SELECT user_id, 3, 'purchase', t FROM s3""".stripMargin)),
 
     // ---- LLM: incremental inverted-index maintenance — build on part of
-    // the corpus, append the rest (batch-bounded; only affected token
-    // buckets rewrite), serve; oracle = the full-corpus bm25 (the
+    // the corpus, append the rest (batch-bounded inserts: docstats,
+    // postings, a corpusstats swap), serve; oracle = the full-corpus bm25 (the
     // append ≡ rebuild contract, exercised against DuckDB) ---------------
     ("bm25_index_append", (s: SparkSession, d: String) => {
       import s.implicits._

@@ -53,7 +53,8 @@ object Retrieval {
     val tf = postingsFor(docs, qterms.select(col("token")).distinct())
       .localCheckpoint(eager = false)
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).cast("long").as("df"))
-    scoreAndRank(tf, dfreq, corpusStats(docs), qterms, k, k1, b)
+    scoreAndRank(tf.join(broadcast(dfreq), Seq("token")), corpusStats(docs),
+      qterms, k, k1, b)
   }
 
   /** Token-hash partition count of the stored index (int partition
@@ -87,15 +88,14 @@ object Retrieval {
       .select(col("n_docs"),
         (col("dl_sum").cast("double") / col("n_docs")).as("avgdl"))
 
-  /** Shared scoring tail: postings × df × corpus stats → micro-unit
-    * per-term partials → per-(query, doc) long sums → rank window. The
-    * arithmetic tree is mirrored operation-for-operation by the DuckDB
-    * oracle — don't reassociate it. */
-  private def scoreAndRank(tf: DataFrame, dfreq: DataFrame, stats: DataFrame,
+  /** Shared scoring tail: postings (doc_id, token, tf, dl, df) × corpus
+    * stats → micro-unit per-term partials → per-(query, doc) long sums →
+    * rank window. The arithmetic tree is mirrored operation-for-operation
+    * by the DuckDB oracle — don't reassociate it. */
+  private def scoreAndRank(tf: DataFrame, stats: DataFrame,
                            qterms: DataFrame, k: Int,
                            k1: Double, b: Double): DataFrame = {
     val partial = tf
-      .join(broadcast(dfreq), Seq("token"))
       .crossJoin(broadcast(stats))
       .withColumn("idf",
         log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
@@ -121,82 +121,68 @@ object Retrieval {
    * Build → store: the persisted inverted index. Three tables under
    * `path`: `postings` (doc_id, token, tf, dl) PARTITIONED by the
    * token-hash bucket (so serving reads only the queried terms'
-   * buckets), `tokenstats` (token, df) on the same partitioning, and
-   * the one-row `corpusstats` (n_docs, avgdl inputs). One tokenize
-   * pass feeds all three (cached posting frame); `meta` pins the
-   * bucket count so a probe with a different modulus fails loudly
-   * instead of silently missing partitions.
+   * buckets), the one-row `corpusstats` (n_docs, dl_sum), and `docstats`
+   * (doc_id, dl), the append path's id screen and the source of
+   * corpusstats. Token df is not stored: it is aggregate(postings), and
+   * [[bm25StoredTopK]] counts it from the pruned postings rows it reads
+   * anyway, so no derived per-token table has to be merged on append or
+   * healed after a crash. `meta` pins the bucket count so a probe with a
+   * different modulus fails loudly instead of silently missing
+   * partitions.
    */
   def writeBm25Index(docs: DataFrame, path: String): Unit = {
     val spark = docs.sparkSession
     // a REBUILD at a path whose previous store had pending deletes must
-    // not inherit them ([[graft.storage.IndexStore.clearSideTables]])
-    graft.storage.IndexStore.clearSideTables(spark, path, Seq("deleted_docs"))
-    val tf = postingsFor(docs)
-      .withColumn("bucket", tokenBucket(col("token"))).cache()
-    tf.count() // materialize eagerly — two writers + df read it
-    try {
-      // four independent table writes off the one materialized postings
-      // frame (disjoint output paths, no ordering constraint) —
-      // concurrent (§2.6); META lands last, below
-      graft.storage.IndexStore.inParallel(Seq(
-        // bucketed writes via the shared lifecycle (file count ∝ buckets,
-        // not tasks×buckets — IndexStore primitive 3)
-        () => graft.storage.IndexStore.writeBucketed(tf, path, "postings", overwrite = true),
-        () => graft.storage.IndexStore.writeBucketed(
-          tf.groupBy(col("token"), col("bucket"))
-            .agg(count(lit(1)).cast("long").as("df")),
-          path, "tokenstats", overwrite = true),
-        () => docs.agg(count(lit(1)).cast("long").as("n_docs"),
-            sum(size(words).cast("long")).as("dl_sum"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/corpusstats"),
-        // per-doc lengths: the append path's id screen + stats inputs
-        () => docs.select(col("doc_id"), size(words).cast("long").as("dl"))
-          .write.mode("overwrite").parquet(s"$path/docstats")))
-      // meta lands LAST, never concurrently: it is the streaming
-      // maintainer's bootstrap-vs-append discriminator — its existence
-      // must imply every table landed
-      graft.storage.IndexStore.writeMeta(spark, path, Seq("buckets" -> IndexBuckets))
-    } finally tf.unpersist()
+    // not inherit them ([[graft.storage.IndexStore.clearSideTables]]); a
+    // store from the older four-table layout also leaves a `tokenstats`
+    // table that nothing reads any more
+    graft.storage.IndexStore.clearSideTables(spark, path, Seq("deleted_docs", "tokenstats"))
+    // three independent table writes (disjoint output paths, no ordering
+    // constraint) — concurrent (§2.6); META lands last, below. The
+    // postings frame has one reader, so nothing is cached.
+    graft.storage.IndexStore.inParallel(Seq(
+      // bucketed write via the shared lifecycle (file count ∝ buckets,
+      // not tasks×buckets — IndexStore primitive 3)
+      () => graft.storage.IndexStore.writeBucketed(
+        postingsFor(docs).withColumn("bucket", tokenBucket(col("token"))),
+        path, "postings", overwrite = true),
+      () => docs.agg(count(lit(1)).cast("long").as("n_docs"),
+          sum(size(words).cast("long")).as("dl_sum"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/corpusstats"),
+      // per-doc lengths: the append path's id screen + stats inputs
+      () => docs.select(col("doc_id"), size(words).cast("long").as("dl"))
+        .write.mode("overwrite").parquet(s"$path/docstats")))
+    // meta lands LAST, never concurrently: it is the streaming
+    // maintainer's bootstrap-vs-append discriminator — its existence
+    // must imply every table landed
+    graft.storage.IndexStore.writeMeta(spark, path, Seq("buckets" -> IndexBuckets))
   }
 
-  /**
-   * Serve from the stored index: NO corpus scan, no tokenization. The
-   * query-term BUCKET list is collected (|terms|-sized — the same
-   * model-sized-collect budget as IVF centroids) and pushed as a STATIC
-   * `bucket IN (...)` partition filter on both stores — pruning at plan
-   * time, stronger than DPP (which also wouldn't fire here: the
-   * unfiltered query frame has no selective predicate for the rule to
-   * reuse). Within the surviving buckets a broadcast term join keeps
-   * exactness; the scoring tail is byte-for-byte [[scoreAndRank]], so
-   * stored answers equal the inline [[bm25TopK]] answers (spec-pinned).
-   */
   /**
    * Incremental maintenance: append a document batch WITHOUT rebuilding.
    * Already-indexed doc_ids are anti-joined away first, so a replayed
    * batch is a no-op (the same idempotency contract as the near-dup and
-   * IVF appends). Work is batch-bounded everywhere except the two
-   * unavoidable store touches: the id anti-join (one pass over the
-   * docstats id column) and the tokenstats merge, which rewrites ONLY
-   * the buckets the batch's tokens hash into (dynamic partition
-   * overwrite of a localCheckpoint-materialized merge — never
-   * read-and-overwrite in place). After the append, serving answers
-   * equal a fresh rebuild over the union corpus exactly (spec-pinned:
-   * df, avgdl, and n_docs all shift — the merge has to get every one
-   * of them right).
+   * IVF appends). Every write is an insert: the batch appends its
+   * docstats rows and its postings, and the one-row corpusstats swaps to
+   * the summed totals. No stored table is read, merged and rewritten, so
+   * the work is batch-bounded except for the id anti-join (one pass over
+   * the docstats id column). After the append, serving answers equal a
+   * fresh rebuild over the union corpus exactly (spec-pinned: df, avgdl,
+   * and n_docs all shift — df because serving counts it from the
+   * postings, the other two through the corpusstats sums).
    */
   def appendToBm25Index(spark: org.apache.spark.sql.SparkSession, path: String,
                         batch: DataFrame): Unit = {
     graft.storage.IndexStore.requireMeta(spark, path, Seq("buckets" -> IndexBuckets))
     // revival: a batch re-registering a DELETED doc purges the id's stale
-    // rows first — postings/docstats by anti-join, then the two stats
-    // tables REBUILD from the repaired base tables (they are corpus
-    // aggregates; a targeted decrement would drift on any crash replay) —
-    // and only then does the tombstone clear, so a crash at any point
-    // replays idempotently. Store-sized work (rewrites + two aggregates,
-    // a compaction's order of cost) but targeted in SCOPE: other pending
-    // tombstones stay pending, a batch of revivals pays once, and normal
-    // appends never enter this branch.
+    // rows first — postings/docstats by anti-join, then corpusstats
+    // REBUILDS from the repaired docstats (a corpus aggregate; a targeted
+    // decrement would drift on any crash replay) — and only then does the
+    // tombstone clear, so a crash at any point replays idempotently.
+    // Store-sized work (rewrites + an aggregate, a compaction's order of
+    // cost) but targeted in SCOPE: other pending tombstones stay pending,
+    // a batch of revivals pays once, and normal appends never enter this
+    // branch.
     deletedDocs(spark, path).foreach { d =>
       val revived = batch.select(col("doc_id")).distinct()
         .join(broadcast(d), Seq("doc_id"), "left_semi").localCheckpoint()
@@ -206,78 +192,60 @@ object Retrieval {
           revived, Seq("doc_id"))
       }
     }
+    // the screened batch is materialized ONCE, eagerly, before any write:
+    // the corpus deltas, the docstats append and the postings append all
+    // read it. localCheckpoint, NOT cache: it must (a) resolve the
+    // anti-join against the PRE-append store, and (b) survive the docstats
+    // append below — a cached plan still references the docstats path,
+    // and Spark's refreshByPath on that append would RECOMPUTE it against
+    // the post-append listing (anti-joining the batch away → empty
+    // postings). Lineage truncation makes the materialized batch immune.
     val fresh = graft.storage.IndexStore.screenFresh(batch, path, "docstats", Seq("doc_id"))
-    // localCheckpoint, NOT cache: it must (a) resolve the anti-join against
-    // the PRE-append store, and (b) survive the docstats append below —
-    // a cached plan still references the docstats path, and Spark's
-    // refreshByPath on that append would RECOMPUTE it against the
-    // post-append listing (anti-joining the batch away → empty postings).
-    // Lineage truncation makes the materialized batch immune to that.
-    val tf = postingsFor(fresh)
-      .withColumn("bucket", tokenBucket(col("token"))).localCheckpoint()
+      .select(col("doc_id"), col("text"), size(words).cast("long").as("dl"))
+      .localCheckpoint()
     try {
-      // corpus deltas are computed against the PRE-append store, before any
-      // write lands
       val add = fresh.agg(count(lit(1)).cast("long").as("n_docs"),
-        coalesce(sum(size(words).cast("long")), lit(0L)).as("dl_sum")).collect()(0)
-      val old = spark.read.parquet(s"$path/corpusstats").collect()(0)
-      // The replay-idempotency screen (docstats) is written FIRST: a crash
-      // anywhere after this line makes the replayed batch a full no-op, so
-      // postings/tokenstats can never be double-applied. The failure mode
-      // this chooses is the benign one — a crash between here and the
-      // postings append leaves the batch's docs registered but unsearchable
-      // (zero postings), repaired by a rebuild; the alternative order
-      // (postings first) silently double-counts tf/df on replay.
-      fresh.select(col("doc_id"), size(words).cast("long").as("dl"))
-        .write.mode("append").parquet(s"$path/docstats")
-      val batchDf = tf.groupBy(col("token"), col("bucket"))
-        .agg(count(lit(1)).cast("long").as("df"))
-      val affected = batchDf.select(col("bucket")).distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-      if (affected.nonEmpty) {
-        // merge batch df into ONLY the affected buckets; EAGER
-        // materialization is load-bearing here (unlike bm25TopK's lazy
-        // share): the merge READS the partitions the write below
-        // overwrites — a lazy checkpoint would still be reading the live
-        // files at write time
-        val merged = spark.read.parquet(s"$path/tokenstats")
-          .filter(col("bucket").isin(affected: _*))
-          .unionByName(batchDf)
-          .groupBy(col("token"), col("bucket"))
-          .agg(sum(col("df")).cast("long").as("df"))
-          .localCheckpoint()
-        // the tokenstats bucket-merge and the postings append are
-        // unordered w.r.t. each other (either half-landed state is healed
-        // by compaction's rebuildStats, exactly as before) — overlap (§2.6)
-        graft.storage.IndexStore.inParallel(Seq(
-          () => merged.repartition(col("bucket"))
-            .write.mode("overwrite").partitionBy("bucket")
-            .option("partitionOverwriteMode", "dynamic") // per-writer, race-free
-            .parquet(s"$path/tokenstats"),
-          () => graft.storage.IndexStore.writeBucketed(tf, path, "postings", overwrite = false)))
+        coalesce(sum(col("dl")), lit(0L)).as("dl_sum")).collect()(0)
+      // a replayed batch screens to nothing and writes nothing
+      if (add.getAs[Long]("n_docs") > 0) {
+        val old = spark.read.parquet(s"$path/corpusstats").collect()(0)
+        // The replay-idempotency screen (docstats) is written FIRST: a
+        // crash anywhere after this line makes the replayed batch a full
+        // no-op, so postings can never be double-applied. The failure mode
+        // this chooses is the benign one — a crash between here and the
+        // postings append leaves the batch's docs registered but
+        // unsearchable (zero postings), repaired by [[compactBm25Index]];
+        // the alternative order (postings first) silently double-counts
+        // tf and df on replay.
+        fresh.select(col("doc_id"), col("dl"))
+          .write.mode("append").parquet(s"$path/docstats")
+        graft.storage.IndexStore.writeBucketed(
+          postingsFor(fresh).withColumn("bucket", tokenBucket(col("token"))),
+          path, "postings", overwrite = false)
+        // corpus stats: one stored row + one batch row → new exact totals
+        // (add/old were captured before any write, against the pre-state),
+        // swapped through the SHARED crash-safe helper — it checks every
+        // rename and its recovery discipline restores a copy stranded at
+        // .corpusstats.old by a crash between the two renames
+        import spark.implicits._
+        graft.storage.AtomicSwap.swapTable(spark, path, "corpusstats")(_ =>
+          Seq((old.getAs[Long]("n_docs") + add.getAs[Long]("n_docs"),
+              old.getAs[Long]("dl_sum") + add.getAs[Long]("dl_sum")))
+            .toDF("n_docs", "dl_sum")
+            .coalesce(1).write.parquet(s"$path/.corpusstats.compact"))
       }
-      // corpus stats: one stored row + one batch row → new exact totals
-      // (add/old were captured before any write, against the pre-state),
-      // swapped through the SHARED crash-safe helper — it checks every
-      // rename and its recovery discipline restores a copy stranded at
-      // .corpusstats.old by a crash between the two renames
-      import spark.implicits._
-      graft.storage.AtomicSwap.swapTable(spark, path, "corpusstats")(_ =>
-        Seq((old.getAs[Long]("n_docs") + add.getAs[Long]("n_docs"),
-            old.getAs[Long]("dl_sum") + add.getAs[Long]("dl_sum")))
-          .toDF("n_docs", "dl_sum")
-          .coalesce(1).write.parquet(s"$path/.corpusstats.compact"))
-    } finally tf.unpersist() // checkpoint blocks; freed by the cleaner on GC otherwise
+    } finally fresh.unpersist() // checkpoint blocks; freed by the cleaner on GC otherwise
   }
 
   /**
-   * Compact the stored index after append waves: each table rewrites to
-   * one well-sized file set (postings/tokenstats back to one layout per
-   * bucket, docstats to a parallelism-sized set) behind the crash-safe
-   * double-rename swap (`live → .old`, `.compact → live` — a crash at
-   * any point leaves a servable or recoverable copy, the
-   * compactNearDupIndex discipline). Serving answers are unchanged —
-   * spec-pinned equal to pre-compaction.
+   * Compact the stored index after append waves: postings rewrite back
+   * to one file layout per bucket and docstats to a parallelism-sized
+   * set, each behind the crash-safe double-rename swap (`live → .old`,
+   * `.compact → live` — a crash at any point leaves a servable or
+   * recoverable copy, the compactNearDupIndex discipline); corpusstats
+   * then rebuilds from the compacted docstats ([[rebuildStats]]).
+   * Serving answers are unchanged — spec-pinned equal to
+   * pre-compaction.
    *
    * Compaction also REPAIRS the append path's documented crash window:
    * appendToBm25Index writes the docstats replay-screen BEFORE postings,
@@ -301,17 +269,18 @@ object Retrieval {
       .join(postedIds, Seq("doc_id"), "left_anti")
       .select(col("doc_id")).localCheckpoint()
     // the physical half of [[deleteFromBm25Index]]: tombstoned docs purge
-    // inside the rewrites this compaction performs anyway — and because
-    // the two stats tables rebuild from the purged base tables below,
-    // post-compaction scores equal a FRESH REBUILD over the surviving
-    // corpus (df/avgdl/n_docs all shed the deleted docs here, never
-    // before — the documented stale-stats-until-compaction semantics)
+    // inside the rewrites this compaction performs anyway — serving counts
+    // df from the purged postings and corpusstats rebuilds from the purged
+    // docstats below, so post-compaction scores equal a FRESH REBUILD over
+    // the surviving corpus (df/avgdl/n_docs all shed the deleted docs
+    // here, never before — the documented stale-stats-until-compaction
+    // semantics)
     val dead = deletedDocs(spark, path).map(_.localCheckpoint())
     def purge(df: DataFrame): DataFrame =
       dead.fold(df)(d => df.join(broadcast(d), Seq("doc_id"), "left_anti"))
     // the two base-table rewrites are independent (disjoint swaps; their
     // inputs are checkpointed above) — concurrent; the stats rebuild must
-    // FOLLOW both (it reads the post-swap base tables), and the tombstone
+    // FOLLOW both (it reads the post-swap docstats), and the tombstone
     // drop stays last (crash discipline)
     IndexStore.inParallel(Seq(
       () => IndexStore.compactBucketed(spark, path, "postings", purge),
@@ -321,32 +290,24 @@ object Retrieval {
     dead.foreach(_ => IndexStore.dropDeletes(spark, path, "deleted_docs"))
   }
 
-  /** Rebuild the two derived stats tables from their (purged/repaired)
-    * base tables, behind the crash-safe swap. The invariants are
-    * tokenstats ≡ aggregate(postings) and corpusstats ≡
-    * aggregate(docstats) — rebuilding (instead of compacting the stored
-    * copies) heals BOTH append crash windows (tokenstats merged but
-    * postings never landed; postings landed but corpusstats write never
-    * ran) and is what makes a tombstone purge shift every score exactly
-    * as a fresh rebuild would. Cost is one aggregate over each base
-    * table — the same magnitude as the rewrites compaction already pays. */
+  /** Rebuild corpusstats from the (purged/repaired) docstats, behind the
+    * crash-safe swap. The invariant is corpusstats ≡ aggregate(docstats);
+    * rebuilding (instead of compacting the stored row) heals the append
+    * crash window in which docstats landed but the corpusstats swap never
+    * ran, and is what makes a tombstone purge shift n_docs and avgdl
+    * exactly as a fresh rebuild would (df shifts on its own: serving
+    * counts it from the purged postings). Cost is one aggregate over
+    * docstats. */
   private def rebuildStats(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    // the two derived tables rebuild from DIFFERENT base tables behind
-    // their own swaps — concurrent (§2.6)
-    graft.storage.IndexStore.inParallel(Seq(
-      () => graft.storage.IndexStore.replaceBucketed(spark, path, "tokenstats",
-        spark.read.parquet(s"$path/postings")
-          .groupBy(col("token"), col("bucket"))
-          .agg(count(lit(1)).cast("long").as("df"))),
-      () => graft.storage.AtomicSwap.swapTable(spark, path, "corpusstats")(_ =>
-        spark.read.parquet(s"$path/docstats")
-          .agg(count(lit(1)).cast("long").as("n_docs"),
-            coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
-          .coalesce(1).write.parquet(s"$path/.corpusstats.compact"))))
+    graft.storage.AtomicSwap.swapTable(spark, path, "corpusstats")(_ =>
+      spark.read.parquet(s"$path/docstats")
+        .agg(count(lit(1)).cast("long").as("n_docs"),
+          coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
+        .coalesce(1).write.parquet(s"$path/.corpusstats.compact"))
 
-  /** Purge `ids`' rows from the two base tables and restore the stats
-    * invariants — the revival path's physical delete (store-sized
-    * rewrites, targeted in scope: only `ids` purge). */
+  /** Purge `ids`' rows from the two base tables and restore the
+    * corpusstats invariant — the revival path's physical delete
+    * (store-sized rewrites, targeted in scope: only `ids` purge). */
   private def purgeDocs(spark: org.apache.spark.sql.SparkSession, path: String,
                         ids: DataFrame): Unit = {
     def purge(df: DataFrame): DataFrame =
@@ -372,7 +333,7 @@ object Retrieval {
    * postings against `deleted_docs/` (broadcast anti-join, delete-rate-
    * sized; ranks recompute over the survivors), while the RANKING STATS
    * (df, n_docs, avgdl) keep their build-time values until the next
-   * [[compactBm25Index]] purges the rows and rebuilds the stats tables —
+   * [[compactBm25Index]] purges the rows and rebuilds corpusstats —
    * the standard search-engine takedown semantics (immediate result
    * removal, deferred stats refresh). Idempotent; a later
    * re-registration of the id is [[appendToBm25Index]]'s revival path.
@@ -384,6 +345,27 @@ object Retrieval {
       docIds, registry = "docstats", Seq("doc_id"))
   }
 
+  /**
+   * Serve from the stored index: NO corpus scan, no tokenization. The
+   * distinct query terms and their buckets are collected (|terms|-sized
+   * — the same model-sized-collect budget as IVF centroids) and pushed as
+   * STATIC filters on the postings scan: `bucket IN (...)` prunes
+   * partitions at plan time, stronger than DPP (which also wouldn't fire
+   * here: the unfiltered query frame has no selective predicate for the
+   * rule to reuse), and `token IN (...)` keeps exactly the query terms'
+   * rows within them, with no broadcast join. The scoring tail is
+   * byte-for-byte [[scoreAndRank]], so stored answers equal the inline
+   * [[bm25TopK]] answers (spec-pinned).
+   *
+   * Token df is counted from the same pruned postings, as
+   * [[bm25TopK]] counts it: a `groupBy(token)` count, combined map-side
+   * (its exchange carries one row per query token and map task) and
+   * broadcast back, so the store keeps no df table to maintain. The
+   * pruned postings are read twice, once for tf and once for df; a
+   * count window over them would read them once but shuffle and sort
+   * every matching posting by token, with all of one high-df token's
+   * postings in one task.
+   */
   def bm25StoredTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, k: Int,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
@@ -392,26 +374,27 @@ object Retrieval {
       .select(col("query_id"), explode(array_distinct(col("terms"))).as("token"))
     val qtb = qterms.select(col("token")).distinct()
       .withColumn("bucket", tokenBucket(col("token")))
-    val buckets = qtb.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    def pruned(table: String): DataFrame =
-      spark.read.parquet(s"$path/$table")
-        .filter(col("bucket").isin(buckets: _*))
-        .join(broadcast(qtb.select(col("bucket"), col("token"))),
-          Seq("bucket", "token"))
+      .collect() // (token, bucket)
+    val buckets = qtb.map(_.getInt(1)).distinct.sorted.toSeq
+    val tokens = qtb.map(_.getString(0)).sorted.toSeq
+    val postings = spark.read.parquet(s"$path/postings")
+      .filter(col("bucket").isin(buckets: _*) && col("token").isin(tokens: _*))
+      .select(col("doc_id"), col("token"), col("tf"), col("dl"))
+    // df counts every stored posting of the token, BEFORE the tombstone
+    // screen, so df/avgdl stay build-time until compaction (doc'd)
+    val dfreq = postings.groupBy(col("token"))
+      .agg(count(lit(1)).cast("long").as("df"))
     // pending delete tombstones screen the candidate postings (broadcast
     // anti-join, delete-rate-sized) — a deleted doc stops ranking the
     // instant [[deleteFromBm25Index]] lands, before any purge runs, and
     // ranks recompute over the survivors; absent tombstones leave the
-    // plan untouched. df/avgdl stay build-time until compaction (doc'd).
-    val tf0 = pruned("postings").select("doc_id", "token", "tf", "dl")
-    val tf = deletedDocs(spark, path).fold(tf0)(d =>
-      tf0.join(broadcast(d), Seq("doc_id"), "left_anti"))
-    val dfreq = pruned("tokenstats").select("token", "df")
+    // plan untouched
+    val tf = deletedDocs(spark, path).fold(postings)(d =>
+      postings.join(broadcast(d), Seq("doc_id"), "left_anti"))
     val stats = spark.read.parquet(s"$path/corpusstats")
       .select(col("n_docs"),
         (col("dl_sum").cast("double") / col("n_docs")).as("avgdl"))
-    scoreAndRank(tf, dfreq, stats, qterms, k, k1, b)
+    scoreAndRank(tf.join(broadcast(dfreq), Seq("token")), stats, qterms, k, k1, b)
   }
 
   /**

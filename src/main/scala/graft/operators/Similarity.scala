@@ -44,7 +44,16 @@ object Similarity {
     * is, by definition, narrow (at most a couple of partitions' worth of
     * rows), so the round-robin exchange it inserts is bounded. Callers
     * must only use it above ORDER-INSENSITIVE computation (exact decimal
-    * aggregates, per-row projections). */
+    * aggregates, per-row projections).
+    *
+    * Cost: `df.rdd` plans the input a second time on every call, as its
+    * own query (analysis, optimization, physical planning, codegen). For
+    * an exchange-free input, such as the one select [[pcaFit]] passes,
+    * that is all it costs: no job runs. An input that holds an exchange
+    * is worse: adaptive execution runs its shuffle stages to learn the
+    * final partition count (one job for a one-shuffle aggregate, measured
+    * in local mode: docs/BENCH_NOTES.md, "`spreadDegenerate` and
+    * `df.rdd`"), and the query that follows recomputes them. */
   private def spreadDegenerate(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions * 2 >= target) df else df.repartition(target)

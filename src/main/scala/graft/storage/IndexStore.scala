@@ -137,15 +137,6 @@ object IndexStore {
     AtomicSwap.swapTable(spark, path, table)(df =>
       writeCompactTmp(transform(df), s"$path/.$table.compact", partCol))
 
-  /** Crash-safe REPLACEMENT of a partition-column table with a frame
-    * derived from OTHER tables (not a transform of the live copy) — for
-    * stats tables rebuilt from their base, e.g. BM25's
-    * tokenstats ≡ aggregate(postings). */
-  def replaceBucketed(spark: SparkSession, path: String, table: String,
-                      out: => DataFrame, partCol: String = "bucket"): Unit =
-    AtomicSwap.swapTable(spark, path, table)(_ =>
-      writeCompactTmp(out, s"$path/.$table.compact", partCol))
-
   /** A dynamic partitionBy of an EMPTY frame emits no part files at all
     * (only _SUCCESS), and a table with no schema-bearing footer fails
     * every subsequent read — bricking the store the moment a purge drops

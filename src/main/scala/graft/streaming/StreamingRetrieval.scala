@@ -15,7 +15,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
  * Exactly-once effect WITHOUT a transactional sink: foreachBatch is
  * at-least-once, and the append's docstats screen (written before any
  * other table) makes a replayed batch a full no-op — so a micro-batch
- * retried after a crash cannot double-count tf/df. The one crash
+ * retried after a crash cannot append its postings twice (which would
+ * double-count tf, and df, which serving counts from the postings) or
+ * add its docs to corpusstats twice. The one crash
  * window (screen landed, postings didn't) is repaired by the next
  * [[Retrieval.compactBm25Index]], which deregisters orphans so a
  * re-crawl lands them; a first-batch crash after the initial build is
@@ -35,10 +37,10 @@ object StreamingRetrieval {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch0: DataFrame, _: Long) =>
         // ONE materialization of the micro-batch feeds its multiple
-        // passes (the build tokenizes into a cached postings frame but
-        // ALSO scans the batch for corpusstats + docstats; the append
-        // adds the screen anti-join pass) — trigger-sized, unpersisted
-        // per batch
+        // passes (the build scans the batch once per table: postings,
+        // corpusstats, docstats; the append reads it in the screen
+        // anti-join, and in the revival probe while tombstones are
+        // pending) — trigger-sized, unpersisted per batch
         val batch = batch0.persist()
         try {
           val spark = batch.sparkSession

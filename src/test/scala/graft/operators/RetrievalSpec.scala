@@ -77,14 +77,19 @@ class RetrievalSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).sorted.toSeq
     assert(stored == inline, "stored-index search must match the inline path")
     // serving reads only the query terms' buckets: a STATIC partition
-    // filter on the bucket column of both store scans (postings +
-    // tokenstats — AQE hides scan nodes from executedPlan.collect, so
-    // assert on the formatted explain)
+    // filter on the bucket column of every postings scan, and df comes
+    // from those scans — no tokenstats table is read (AQE hides scan
+    // nodes from executedPlan.collect, so assert on the formatted explain,
+    // one node per blank-line-separated block)
     val plan = storedDf.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
-    val pruned = "PartitionFilters: \\[bucket#\\d+ IN".r.findAllIn(plan).length
-    assert(pruned >= 2,
-      s"expected bucket IN (...) partition filters on both store scans:\n$plan")
+    val postingsScans = plan.split("\n\n").filter(_.contains("/postings]"))
+    assert(postingsScans.nonEmpty, s"expected a postings scan:\n$plan")
+    postingsScans.foreach { scan =>
+      assert("PartitionFilters: \\[.*bucket#\\d+ IN".r.findFirstIn(scan).nonEmpty,
+        s"expected a bucket IN (...) partition filter on every postings scan:\n$scan")
+    }
+    assert(!plan.contains("tokenstats"), s"serving must not read a tokenstats table:\n$plan")
     // a tombstone-free store must serve WITHOUT the delete screen in the
     // plan — the anti-join only appears while deletes are pending
     assert(!plan.contains("LeftAnti"),
@@ -170,6 +175,42 @@ class RetrievalSpec extends SparkTestBase {
     assert(s.read.parquet(s"$path/corpusstats").collect()(0).getLong(0) == 31L)
     assert(s.read.parquet(s"$path/postings")
       .filter(col("doc_id") === 99L).count() == 4)
+  }
+
+  test("BM25 store layout: no tokenstats table after build, append or " +
+    "compact; a rebuild over a stale tokenstats with wrong df removes it, " +
+    "and the answers equal the inline bm25TopK") {
+    val s = spark
+    val docsA = docsDf((0 until 20).map(i =>
+      (i.toLong, s"cat w$i ${if (i % 2 == 0) "dog" else "bird fish"}")): _*)
+    val docsB = docsDf((20 until 30).map(i =>
+      (i.toLong, s"cat cat dog extra tokens here w$i plus more words")): _*)
+    val all = docsA.unionByName(docsB)
+    val queries = queriesDf((1L, Seq("cat", "fish")), (2L, Seq("dog", "w3")))
+    def answers(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).sorted.toSeq
+    val inline = answers(Retrieval.bm25TopK(all, queries, k = 8))
+    val path = java.nio.file.Files.createTempDirectory("graft-bm25layout").toString
+    def hasTokenstats = new java.io.File(s"$path/tokenstats").exists()
+    Retrieval.writeBm25Index(docsA, path)
+    assert(!hasTokenstats, "build must not write tokenstats")
+    Retrieval.appendToBm25Index(s, path, docsB)
+    assert(!hasTokenstats, "append must not write tokenstats")
+    Retrieval.compactBm25Index(s, path)
+    assert(!hasTokenstats, "compaction must not write tokenstats")
+    assert(answers(Retrieval.bm25StoredTopK(s, path, queries, k = 8)) == inline)
+    // the older four-table layout: a per-token df table, here with a df
+    // no token has
+    all.select(explode(split(col("text"), " ")).as("token")).distinct()
+      .withColumn("df", lit(999L))
+      .withColumn("bucket",
+        pmod(xxhash64(col("token")), lit(Retrieval.IndexBuckets.toLong)).cast("int"))
+      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/tokenstats")
+    assert(hasTokenstats)
+    Retrieval.writeBm25Index(all, path)
+    assert(!hasTokenstats, "a rebuild must drop a stale tokenstats")
+    assert(answers(Retrieval.bm25StoredTopK(s, path, queries, k = 8)) == inline,
+      "the rebuilt store must serve the inline answers")
   }
 
   // ---- takedown lifecycle (deleteFromBm25Index — immediate result

@@ -6,7 +6,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.GraftTestShims
 import java.nio.file.Files
 
-/** Store tables list on the driver, and the meta guard infers no schema.
+/** Store tables list on the driver, the meta guard infers no schema, and
+  * a BM25 append runs a fixed, small number of jobs.
   * Spark lists a table's directories in a job of one task per directory
   * once there are more of them than
   * `spark.sql.sources.parallelPartitionDiscovery.threshold`, 32 by
@@ -45,17 +46,20 @@ class StoreListingSpec extends SparkTestBase {
     finally before.fold(spark.conf.unset(ThresholdKey))(spark.conf.set(ThresholdKey, _))
   }
 
-  private lazy val bm25Store: String = {
+  /** A BM25 store of 100 docs over 400 distinct words: every one of the
+    * 64 token buckets is occupied. */
+  private def builtBm25Store(prefix: String): String = {
     val s = spark
     import s.implicits._
-    val path = Files.createTempDirectory("graft-listing").toString + "/bm25"
-    // 400 distinct words: every one of the 64 token buckets is occupied
+    val path = Files.createTempDirectory(prefix).toString + "/bm25"
     val docs = (0 until 100).map { i =>
       (i.toLong, (0 until 8).map(j => s"w${(i * 8 + j) % 400}").mkString(" "))
     }.toDF("doc_id", "text")
     Retrieval.writeBm25Index(docs, path)
     path
   }
+
+  private lazy val bm25Store: String = builtBm25Store("graft-listing")
 
   test("a BM25 postings read lists on the driver under the GraftSession " +
     "setting: at most 1 job, against 2 at Spark's default") {
@@ -91,6 +95,23 @@ class StoreListingSpec extends SparkTestBase {
       IndexStore.requireMeta(spark, nulled, Seq("buckets" -> 64, "shingle_k" -> 0))
     }
     assert(e.getMessage.contains("shingle_k"), e.getMessage)
+  }
+
+  /** The BM25 append used to launch 24 jobs on this store and wave: it
+    * collected the wave's token buckets, read and merged their stored df
+    * rows into a checkpoint, and rewrote them with a dynamic partition
+    * overwrite beside the postings append. With df counted at serve time
+    * the append materializes the screened wave once and only inserts. */
+  test("a BM25 append of a small wave onto a built store launches at most " +
+    "14 jobs (24 while it merged a stored df table)") {
+    val s = spark
+    import s.implicits._
+    val path = builtBm25Store("graft-append-jobs")
+    val wave = (100 until 110).map { i =>
+      (i.toLong, (0 until 8).map(j => s"w${(i * 3 + j) % 400}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val n = withListing(tuned = true)(jobsOf(Retrieval.appendToBm25Index(spark, path, wave)))
+    assert(n <= 14, s"the append ran $n jobs, against 24 while it merged a stored df table")
   }
 
   test("builder and tune both set the listing threshold to at least the " +
