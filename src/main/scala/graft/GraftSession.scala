@@ -8,6 +8,9 @@ import org.apache.spark.sql.SparkSession
  * Scale posture: AQE on (runtime re-plan, skew-join splitting), shuffle
  * partitions sized for the local[32] harness (on a real cluster this is
  * overridden to ~2-3x total cores), UTC session time zone for oracle parity.
+ * Two settings are pinned to measured values, not left at Spark's defaults:
+ * the driver-side listing threshold ([[StoreListingThreshold]]) and the
+ * size of the generated-class cache ([[CodegenCacheEntries]]).
  */
 object GraftSession {
 
@@ -30,6 +33,30 @@ object GraftSession {
    */
   val StoreListingThreshold: Int = 256
 
+  /**
+   * Spark's `spark.sql.codegen.cache.maxEntries`: how many compiled
+   * generated classes the JVM keeps in `CodeGenerator`'s LRU cache.
+   * Spark's default is 100, and one `refreshTiers` alone compiles 88–104
+   * classes, so each refresh evicted the previous one's classes and
+   * compiled them all again. Any plan repeated after 100 other classes
+   * (a REST read, a `compressBlock`, a maintainer's micro-batch) was
+   * compiled again too.
+   *
+   * The working sets measured with `CodegenMetrics` compile counts are
+   * 326 distinct classes per `perfbench` `rest` round (three set-ups,
+   * ingest, maintenance, reads) and 303 per `corpus_index` lifecycle.
+   * 1000 leaves about 3x headroom; a 4 000-entry cache gave the same
+   * compile counts. Keeping the working set costs about 2 MB of
+   * Metaspace after a full GC, against a run that let the small cache
+   * evict and unload (`docs/BENCH_NOTES.md`, "Generated classes compiled
+   * once per process").
+   *
+   * The setting is static and JVM-wide: `CodeGenerator` sizes its cache
+   * once, at the process's first code generation, so it is set in
+   * [[builder]] and [[tune]] cannot change it.
+   */
+  val CodegenCacheEntries: Int = 1000
+
   def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
               // shuffle width follows the core count (SPARK_GRAFT_CPUS)
               // so a smaller harness host doesn't pay 32-way task overhead
@@ -49,6 +76,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         StoreListingThreshold.toString)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()
@@ -59,7 +87,10 @@ object GraftSession {
   /** Ensure nanos-as-long and the store listing threshold are set on an
     * externally created session (the driver contract hands us a session
     * we didn't build). Dynamic conf — affects subsequent parquet schema
-    * conversion and file listing. */
+    * conversion and file listing. The generated-class cache size
+    * ([[CodegenCacheEntries]]) is static and JVM-wide, fixed at the
+    * process's first code generation: a session this program did not
+    * build keeps its host's cache size. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
