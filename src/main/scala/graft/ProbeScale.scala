@@ -691,8 +691,8 @@ object ProbeScale {
         ("flat", pp => Similarity.writeIvfIndex(e2, pp,
           kCells = 4 * n, iters = 2, sampleN = Some(4096)),
           "target/tmp/probe-ivfhier-flat"),
-        ("hier", pp => Similarity.writeIvfIndexHier(e2, pp,
-          kCells = 4 * n, iters = 2, sampleN = Some(4096)),
+        ("hier", pp => Similarity.writeIvfIndex(e2, pp,
+          kCells = 4 * n, iters = 2, sampleN = Some(4096), hier = true),
           "target/tmp/probe-ivfhier-hier"))) {
         rmrf(spark, p)
         var t0 = System.nanoTime()

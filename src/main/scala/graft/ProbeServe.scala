@@ -159,8 +159,8 @@ object ProbeServe {
     Seq(1, 8, 16).foreach { c =>
       val path = s"target/tmp/probeserve_ivfhiersc_$c"
       rmrf(spark, path)
-      Similarity.writeIvfIndexHier(scaled(embs, "vec_id", c, vecCount), path,
-        kCells = 4 * c, iters = 2, sampleN = Some(4096))
+      Similarity.writeIvfIndex(scaled(embs, "vec_id", c, vecCount), path,
+        kCells = 4 * c, iters = 2, sampleN = Some(4096), hier = true)
       val t = timeMin3(() =>
         Similarity.ivfStoredTopKHier(spark, path, probeVecs, 10,
           nprobeCoarse = 1, nprobe = 2).count())

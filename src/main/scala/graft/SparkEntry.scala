@@ -3733,9 +3733,9 @@ object SparkEntry {
       val path = "target/tmp/ivfhierst_" + d.replaceAll("[^a-zA-Z0-9]", "_")
       rmrf(s, path)
       val e = embs(s, d)
-      Similarity.writeIvfIndexHier(
+      Similarity.writeIvfIndex(
         e.filter(col("vec_id") < 100 || col("vec_id") >= 110), path,
-        kCells = 4, iters = 2)
+        kCells = 4, iters = 2, hier = true)
       Similarity.appendToIvfIndex(s, path,
         e.filter(col("vec_id") >= 100 && col("vec_id") < 110))
       Similarity.deleteFromIvfIndex(s, path,
@@ -3768,7 +3768,7 @@ object SparkEntry {
       rmrf(s, path)
       val e = embs(s, d)
       val q = e.filter(col("vec_id") < 10)
-      Similarity.writeIvfIndexHier(e, path, kCells = 4, iters = 2)
+      Similarity.writeIvfIndex(e, path, kCells = 4, iters = 2, hier = true)
       Similarity.recallAtK(Similarity.bruteForceTopK(e, q, 10),
         Similarity.ivfStoredTopKHier(s, path, q, 10, nprobeCoarse = 1, nprobe = 1))
     },

@@ -7,8 +7,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // optional 3rd arg: comma-separated query subset (dev iteration)
+    // optional 3rd arg: comma-separated query subset (dev iteration); a
+    // misspelled name must fail the run, never shrink it silently
     val subset = args.lift(2).map(_.split(",").toSet)
+    subset.map(_ -- SparkEntry.queries.keySet).filter(_.nonEmpty).foreach { unknown =>
+      throw new IllegalArgumentException(
+        s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the master so the WHOLE correctness
     // path (parquet dumps → DuckDB compare) can run on a real multi-JVM

@@ -80,11 +80,19 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
   }
 
+  /** The query side of an exact cosine rank: (query_id, qv, qv_nrm). */
+  private def queryVecs(queries: DataFrame): DataFrame =
+    withNorm(queries.select(col("vec_id").as("query_id"), dvec("embedding").as("qv")), "qv")
+      .withColumnRenamed("nrm", "qv_nrm")
+
+  /** A (cell, centroid) frame with its `centroid_nrm` column — the
+    * probe side of every IVF search. */
+  private def normedCentroids(cents: DataFrame): DataFrame =
+    withNorm(cents, "centroid").withColumnRenamed("nrm", "centroid_nrm")
+
   /** Exact top-k cosine neighbors for each query vector (self excluded). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = broadcast(
-      withNorm(queries.select(col("vec_id").as("query_id"), dvec("embedding").as("qv")), "qv")
-        .withColumnRenamed("nrm", "qv_nrm"))
+    val q = broadcast(queryVecs(queries))
     val c = withNorm(corpus.select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv")), "cv")
       .withColumnRenamed("nrm", "cv_nrm")
     rankPairs(c.crossJoin(q), k)
@@ -361,8 +369,7 @@ object Similarity {
    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int = 2,
               cellCol: String = "label"): DataFrame = {
-    val cents = withNorm(centroids(corpus, cellCol), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
+    val cents = normedCentroids(centroids(corpus, cellCol))
     val c = withNorm(corpus.select(col(cellCol).as("cell"),
       col("vec_id").as("neighbor_id"), dvec("embedding").as("cv")), "cv")
       .withColumnRenamed("nrm", "cv_nrm")
@@ -375,8 +382,7 @@ object Similarity {
     * centroid, centroid_nrm); output carries (query_id, qv, qv_nrm,
     * cell). */
   private def probeCells(queries: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
-    val q = withNorm(queries.select(col("vec_id").as("query_id"), dvec("embedding").as("qv")), "qv")
-      .withColumnRenamed("nrm", "qv_nrm")
+    val q = queryVecs(queries)
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("cdist").desc, col("cell").asc)
     q.crossJoin(broadcast(cents)) // |queries| × |cells| — both tiny
@@ -534,9 +540,7 @@ object Similarity {
     val c = withNorm(corpus.select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv")), "cv")
       .withColumnRenamed("nrm", "cv_nrm")
       .withColumn("cell", assignCell(model, "cv", "cv_nrm"))
-    val cents = withNorm(
-      model.toDF("cell", "centroid"), "centroid").withColumnRenamed("nrm", "centroid_nrm")
-    ivfSearch(c, queries, cents, k, nprobe)
+    ivfSearch(c, queries, normedCentroids(model.toDF("cell", "centroid")), k, nprobe)
   }
 
   /**
@@ -582,9 +586,7 @@ object Similarity {
       dvec("embedding").as("cv")), "cv")
       .withColumnRenamed("nrm", "cv_nrm")
       .withColumn("cell", assignCell(model, "cv", "cv_nrm"))
-    val cents = withNorm(model.toDF("cell", "centroid"), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
-    ivfSearch(c, queries, cents, k, nprobe)
+    ivfSearch(c, queries, normedCentroids(model.toDF("cell", "centroid")), k, nprobe)
   }
 
   // ------------------------------------------------------------------
@@ -704,16 +706,6 @@ object Similarity {
     f(col(coarseCol), col(vecCol).cast("array<double>"), col(nrmCol))
   }
 
-  /** Corpus frame → (vec_id, embedding, cell) through a [[HierIvfModel]]
-    * — the O(n·√cells) assignment pass shared by the inline search and
-    * the store build. */
-  private def hierAssigned(corpus: DataFrame, m: HierIvfModel): DataFrame =
-    withNorm(corpus.select(col("vec_id"), col("embedding"),
-      dvec("embedding").as("v")), "v")
-      .withColumn("coarse", assignCell(m.coarse, "v", "nrm"))
-      .withColumn("cell", hierAssignLeaf(m.leaves, m.kChild, "coarse", "v", "nrm"))
-      .select("vec_id", "embedding", "cell")
-
   /** Inline hierarchical-IVF top-k — [[ivfKmeansTopK]]'s serve over the
     * two-level assignment (probes stay FLAT over the leaf centroids —
     * queries are request-sized). Recall sits within a band of the flat
@@ -724,68 +716,55 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val m = hierKmeansModel(corpus, kCells, iters, dim)
-    val c = hierAssigned(corpus, m)
+    val c = assignCells(corpus, Some((m.coarse, m.kChild)), m.leaves)
+      .select("vec_id", "embedding", "cell")
       .select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv"), col("cell"))
     val cWithNorm = withNorm(c, "cv").withColumnRenamed("nrm", "cv_nrm")
-    val cents = withNorm(m.leaves.toDF("cell", "centroid"), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
-    ivfSearch(cWithNorm, queries, cents, k, nprobe)
+    ivfSearch(cWithNorm, queries, normedCentroids(m.leaves.toDF("cell", "centroid")), k, nprobe)
   }
 
-  /**
-   * [[writeIvfIndex]] with hierarchical assignment — the flat layout
-   * (vectors partitioned by leaf cell + a flat `centroids` table of the
-   * leaf model) PLUS a `coarse` side table persisting the routing model
-   * (pruned coarse centroids + kChild). Every existing serve / append /
-   * delete / compact / facts path works on the store unchanged (flat
-   * paths never read `coarse`); the corpus-sized build pass drops from
-   * O(n·cells) to O(n·√cells), and the persisted routing model lets
-   * [[ivfStoredTopKHier]] score O(2·√cells) centroids per QUERY and
-   * [[appendToIvfIndex]] assign batches through the same √cells rule.
-   * `sampleN` bounds BOTH training levels ([[trainingSample]]); the
-   * full corpus still assigns through the sampled model.
-   *
-   * Write order: old `coarse` clears FIRST (a crash mid-build must
-   * never leave a stale routing model beside a new leaf model), then
-   * vectors → centroids → coarse; a crash before the coarse write
-   * leaves a valid FLAT store (routed serving refuses loudly, flat
-   * serving and appends are correct).
-   */
-  def writeIvfIndexHier(corpus: DataFrame, path: String,
-                        kCells: Int = 4, iters: Int = 2,
-                        sampleN: Option[Int] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    graft.storage.IndexStore.clearSideTables(spark, path,
-      Seq("deleted_vecs", "cellfacts", FactsPendingMarker, "coarse"))
-    val m = hierKmeansModel(
-      sampleN.fold(corpus)(n => trainingSample(corpus, n).localCheckpoint()),
-      kCells, iters)
-    // STRICT write order (the scaladoc contract): vectors → centroids →
-    // coarse. Centroids is the streaming maintainer's bootstrap-vs-append
-    // discriminator (its existence must imply the vectors landed), and
-    // coarse — the routed-serving discriminator hierModelOf keys off —
-    // lands dead LAST: an in-place rebuild over a live store that crashed
-    // mid-overlap must never leave a NEW routing model beside the OLD
-    // generation's vectors/centroids (routed serving would silently pair
-    // mismatched generations). Coarse is cells-sized — overlapping it
-    // bought nothing; the r14 overlap here was a crash-ordering bug.
-    hierAssigned(corpus, m)
-      .repartition(col("cell")) // file discipline, as in writeIvfIndex
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
-    m.leaves.toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    writeCoarseModel(spark, path, m)
+  /** The routing half of a hier cell model: the PRUNED coarse centroids
+    * (childless cells already removed) and the children per coarse cell
+    * (leaf = coarse·kChild + child). */
+  private type Routing = (Seq[(Int, Array[Double])], Int)
+
+  /** Flat or hier cell training, the one choice every cell-store build
+    * and the IVF retrain make: the leaf centroids, plus the coarse routing
+    * of a [[hierKmeansModel]] (None for flat [[kmeansCentroids]]). */
+  private def trainCells(train: DataFrame, kCells: Int, iters: Int, hier: Boolean,
+                         dim: Int = Dim): (Seq[(Int, Array[Double])], Option[Routing]) =
+    if (hier) {
+      val m = hierKmeansModel(train, kCells, iters, dim)
+      (m.leaves, Some((m.coarse, m.kChild)))
+    } else (kmeansCentroids(train, kCells, iters, dim), None)
+
+  /** `df`'s `keep` columns plus the `cell` its `vecCol` vector falls in —
+    * the one assignment rule of every build, append and retrain, so an
+    * appended row lands where a build would put it: the flat argmax over
+    * `leaves` (O(cells) per vector), or through a hier `routing` the
+    * coarse argmax and then that coarse cell's children only
+    * (O(2·√cells)). Working columns `v`, `nrm` (and `coarse`) ride along;
+    * callers select what they store. */
+  private def assignCells(df: DataFrame, routing: Option[Routing],
+                          leaves: Seq[(Int, Array[Double])],
+                          keep: Seq[String] = Seq("vec_id", "embedding"),
+                          vecCol: String = "embedding"): DataFrame = {
+    val normed = withNorm(df.select(keep.map(col) :+ col(vecCol).as("v"): _*), "v")
+    routing.fold(normed.withColumn("cell", assignCell(leaves, "v", "nrm"))) {
+      case (coarse, kChild) =>
+        normed.withColumn("coarse", assignCell(coarse, "v", "nrm"))
+          .withColumn("cell", hierAssignLeaf(leaves, kChild, "coarse", "v", "nrm"))
+    }
   }
 
-  /** Persist the routing half of a [[HierIvfModel]] beside the leaf
-    * model: `coarse/` rows are (coarse, centroid, k_child) — the PRUNED
-    * coarse set (childless cells already removed), so routed assignment
+  /** Persist the routing half of a hier model beside the leaf model:
+    * `coarse/` rows are (coarse, centroid, k_child), so routed assignment
     * and serving never reach a coarse cell without children. */
   private def writeCoarseModel(spark: org.apache.spark.sql.SparkSession,
-                               path: String, m: HierIvfModel): Unit = {
+                               path: String, routing: Routing): Unit = {
     import spark.implicits._
-    m.coarse.map { case (cc, ce) => (cc, ce, m.kChild) }
+    val (coarse, kChild) = routing
+    coarse.map { case (cc, ce) => (cc, ce, kChild) }
       .toDF("coarse", "centroid", "k_child")
       .write.mode("overwrite").parquet(s"$path/coarse")
   }
@@ -793,7 +772,7 @@ object Similarity {
   /** The persisted routing model of a hier store, or None for a flat
     * store (the `coarse/` side table is the discriminator). */
   private def hierModelOf(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Option[(Seq[(Int, Array[Double])], Int)] = {
+                          path: String): Option[Routing] = {
     val p = new org.apache.hadoop.fs.Path(s"$path/coarse")
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
     else {
@@ -816,37 +795,86 @@ object Similarity {
    * analog of an ANN index structure: at serving time a query touches
    * only its probed cells' files. At 100 TB the build is the training
    * passes plus ONE partitioned write; no query ever re-trains or
-   * re-assigns.
+   * re-assigns. `sampleN` bounds the training passes
+   * ([[trainingSample]]); the full corpus still assigns and lands through
+   * the sampled model.
+   *
+   * `hier = true` trains through [[hierKmeansModel]] — the fix for the
+   * superlinear build at cells ∝ corpus: the corpus-sized assignment
+   * pass drops from O(n·cells) to O(n·√cells) — and persists the routing
+   * model (`coarse/`: pruned coarse centroids + kChild) beside the same
+   * flat layout. Every serve / append / delete / compact / facts path
+   * works on either store (flat paths never read `coarse`); the routing
+   * model lets [[ivfStoredTopKHier]] score O(2·√cells) centroids per
+   * QUERY and [[appendToIvfIndex]] assign batches through the same
+   * √cells rule. `sampleN` then bounds BOTH training levels.
    */
   def writeIvfIndex(corpus: DataFrame, path: String,
                     kCells: Int = 4, iters: Int = 2,
-                    sampleN: Option[Int] = None): Unit = {
+                    sampleN: Option[Int] = None,
+                    hier: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    // a REBUILD at a path whose previous store had pending deletes must
-    // not inherit them ([[graft.storage.IndexStore.clearSideTables]]);
-    // `coarse` clears too — a flat rebuild over a former hier store must
-    // not leave a stale routing model beside the new flat leaf model
+    clearForRebuild(spark, path)
+    val (leaves, routing) = trainCells(trainSetOf(corpus, sampleN), kCells, iters, hier)
+    commitCells(spark, path,
+      assignCells(corpus, routing, leaves).select("vec_id", "embedding", "cell"),
+      leaves, routing)
+  }
+
+  /** A rebuild at a path must not inherit the previous store's side
+    * tables ([[graft.storage.IndexStore.clearSideTables]]): its pending
+    * deletes, its drift facts, or a routing model — a stale `coarse`
+    * beside a new flat leaf model would route wrongly. */
+  private def clearForRebuild(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
     graft.storage.IndexStore.clearSideTables(spark, path,
       Seq("deleted_vecs", "cellfacts", FactsPendingMarker, "coarse"))
-    // sampleN bounds the training passes ([[trainingSample]]) — the full
-    // corpus still assigns and lands through the sampled model
-    val model = kmeansCentroids(
-      sampleN.fold(corpus)(n => trainingSample(corpus, n).localCheckpoint()),
-      kCells, iters)
-    withNorm(corpus.select(col("vec_id"), col("embedding"), dvec("embedding").as("v")), "v")
-      .withColumn("cell", assignCell(model, "v", "nrm"))
-      .select("vec_id", "embedding", "cell")
-      // repartition-before-partitionBy file discipline (IndexStore
-      // primitive 3): file count ∝ cells, not tasks × cells — measured
-      // 3x serve inflation at 64 cells without it (ProbeServe)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
-    // centroids land LAST, never concurrently: the table is the
-    // streaming maintainer's bootstrap-vs-append discriminator — its
-    // existence must imply the vectors landed
-    model.toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$path/centroids")
+
+  /** The training set: the bounded [[trainingSample]] when `sampleN` is
+    * set (checkpointed — every training pass re-reads it), else the whole
+    * corpus. */
+  private def trainSetOf(corpus: DataFrame, sampleN: Option[Int]): DataFrame =
+    sampleN.fold(corpus)(n => trainingSample(corpus, n).localCheckpoint())
+
+  /** Write cell-assigned rows partitioned by `cell`, repartitioned on it
+    * first (IndexStore primitive 3): file count ∝ cells, not tasks ×
+    * cells — measured 3x serve inflation at 64 cells without it
+    * (ProbeServe). `mode` is overwrite for a build, append for an append,
+    * and errorifexists (Spark's default) inside a swap unit. */
+  private def writeCells(rows: DataFrame, dir: String, mode: String): Unit =
+    rows.repartition(col("cell")).write.mode(mode).partitionBy("cell").parquet(dir)
+
+  /**
+   * Land a freshly built cell store (IVF, IVF-PQ, PCA-IVF) in the one
+   * write order its crash safety rests on:
+   *  1. the cell-partitioned `vectors`, together with the family's other
+   *     model tables (for PCA-IVF, `centroids`, written concurrently);
+   *  2. the family's bootstrap-versus-append discriminator — `centroids`
+   *     for IVF and IVF-PQ, `model` (`pcamodel`) for PCA-IVF. The
+   *     streaming maintainer builds while it is absent and appends once
+   *     it exists, so its existence must imply the tables before it
+   *     landed;
+   *  3. `coarse`, the routing model of a hier build and the routed-serving
+   *     discriminator, dead LAST: a rebuild over a live store that crashed
+   *     midway must never leave a NEW routing model beside the OLD
+   *     generation's tables (routed serving would silently pair
+   *     mismatched generations); a crash before it leaves a valid FLAT
+   *     store.
+   */
+  private def commitCells(spark: org.apache.spark.sql.SparkSession, path: String,
+                          vectors: DataFrame, leaves: Seq[(Int, Array[Double])],
+                          routing: Option[Routing],
+                          model: Option[() => Unit] = None): Unit = {
+    import spark.implicits._
+    val writeVectors = () => writeCells(vectors, s"$path/vectors", "overwrite")
+    val writeCentroids = () =>
+      leaves.toDF("cell", "centroid").write.mode("overwrite").parquet(s"$path/centroids")
+    model match {
+      case None => writeVectors(); writeCentroids()
+      case Some(discriminator) =>
+        graft.storage.IndexStore.inParallel(Seq(writeVectors, writeCentroids))
+        discriminator()
+    }
+    routing.foreach(writeCoarseModel(spark, path, _))
   }
 
   /**
@@ -866,21 +894,10 @@ object Similarity {
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                        batch: DataFrame, updateFacts: Boolean = false): Unit = {
     val fresh = reviveAndScreen(spark, path, batch)
-    val normed = withNorm(fresh.select(col("vec_id"), col("embedding"),
-      dvec("embedding").as("v")), "v")
     // a hier store (persisted `coarse/` routing model) assigns through
-    // the SAME two-level rule as its build — coarse argmax then that
-    // cell's children only — so appends stay coherent with the build's
-    // assignment AND score O(2·√cells) centroids per vector instead of
-    // O(cells); flat stores keep the flat argmax
-    val assigned = (hierModelOf(spark, path) match {
-      case Some((coarse, kChild)) =>
-        normed.withColumn("coarse", assignCell(coarse, "v", "nrm"))
-          .withColumn("cell",
-            hierAssignLeaf(readCentroids(spark, path), kChild, "coarse", "v", "nrm"))
-      case None =>
-        normed.withColumn("cell", assignCell(readCentroids(spark, path), "v", "nrm"))
-    }).select("vec_id", "embedding", "cell")
+    // the SAME two-level rule as its build; flat stores keep the flat argmax
+    val assigned = assignCells(fresh, hierModelOf(spark, path), readCentroids(spark, path))
+      .select("vec_id", "embedding", "cell")
     // updateFacts: the SAME screened/assigned frame feeds the write and
     // the facts merge (checkpointed so the screen runs once) — the drift
     // maintainer's O(cells) statistic stays in lock-step with the store.
@@ -896,8 +913,7 @@ object Similarity {
     val out = if (updateFacts) assigned.localCheckpoint() else assigned
     val staleAttempt = updateFacts && factsPendingMarkerExists(spark, path)
     if (updateFacts) touchFactsPendingMarker(spark, path)
-    out.repartition(col("cell")) // file discipline, as in the build
-      .write.mode("append").partitionBy("cell").parquet(s"$path/vectors")
+    writeCells(out, s"$path/vectors", "append")
     if (updateFacts) {
       if (staleAttempt) rebuildCellFacts(spark, path)
       else mergeCellFacts(spark, path, cellFactsOf(out))
@@ -930,72 +946,99 @@ object Similarity {
   }
 
   /**
-   * Top-k search against a [[writeIvfIndex]] index. The probe set joins
-   * the cell-partitioned scan on the PARTITION column, so dynamic
-   * partition pruning restricts the read to the probed cells' files —
-   * the serving path reads nprobe/kCells of the corpus, which is the
-   * entire point of the index. Results are bit-identical to
-   * [[ivfKmeansTopK]] with the same training parameters (spec-asserted).
+   * Top-k search against a [[writeIvfIndex]] index: the queries probe
+   * the stored centroids and [[probedServe]] ranks the probed cells'
+   * vectors exactly — the serving path reads nprobe/kCells of the
+   * corpus, which is the entire point of the index. Results are
+   * bit-identical to [[ivfKmeansTopK]] with the same training parameters
+   * (spec-asserted).
    */
   def ivfStoredTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                     queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    val cents = withNorm(spark.read.parquet(s"$path/centroids"), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
-    // STATIC partition pruning: DPP does not fire for a probe side built
-    // from a request-sized frame (no selective scan filter — the
-    // bm25StoredTopK pattern), so collect the probed cell ids — at most
-    // |queries| × nprobe ints — and push them as a literal isin over the
-    // partition column; the scan then reads ONLY the probed cells' files.
-    // The per-query cell join below still restricts each query to its own
-    // probes; the static filter is the union superset.
-    val probes = probeCells(queries, cents, nprobe).localCheckpoint()
-    val probed = probes.select("cell").distinct().collect().map(_.get(0)).toSeq
-    // pending delete tombstones screen the probed vectors (broadcast
-    // anti-join, delete-rate-sized) — a deleted vector stops ranking the
-    // instant [[deleteFromIvfIndex]] lands, before any purge runs;
-    // absent tombstones leave the plan untouched
-    val vecs = deleteScreen(spark, path)(
-      spark.read.parquet(s"$path/vectors")
-        .where(col("cell").isin(probed: _*)))
-    val c = withNorm(vecs
-      .select(col("cell"), col("vec_id").as("neighbor_id"), dvec("embedding").as("cv")), "cv")
-      .withColumnRenamed("nrm", "cv_nrm")
-    rankPairs(c.join(broadcast(probes), Seq("cell")), k)
+    val cents = normedCentroids(spark.read.parquet(s"$path/centroids"))
+    probedServe(spark, path, queries, probeCells(queries, cents, nprobe).localCheckpoint(), k)
   }
 
   /**
-   * Hier-ROUTED top-k over a [[writeIvfIndexHier]] store — the serve
-   * counterpart of the √cells build: [[ivfStoredTopK]] scores every
+   * Hier-ROUTED top-k over a `writeIvfIndex(hier = true)` store — the
+   * serve counterpart of the √cells build: [[ivfStoredTopK]] scores every
    * leaf centroid per query (O(cells) dots — fine at fixed cells, but
    * with cells ∝ corpus that flat probe is serve-side superlinear,
-   * ProbeServe's `ivf-sc` row), whereas this path routes each query
-   * through the persisted coarse model (`coarse/`, √cells dots), keeps
-   * the top `nprobeCoarse` coarse cells, scores ONLY their children
-   * (nprobeCoarse·kChild ≈ √cells dots), and probes the top `nprobe`
-   * leaves — O(2·√cells) per query, and the leaf-centroid SCAN prunes
-   * to the probed coarse cells' label ranges before any scoring.
+   * ProbeServe's `ivf-sc` row), whereas this path probes through
+   * [[routedProbes]] — O(2·√cells) per query — and then runs the same
+   * [[probedServe]] finish.
    *
    * Exactness hooks (spec-pinned): with nprobeCoarse ≥ |coarse| the
    * candidate leaf set per query is ALL leaves, so the result is
    * bit-equal to [[ivfStoredTopK]] at the same `nprobe`; additionally
    * probing every leaf reproduces brute force regardless of assignment.
-   * Refuses loudly on a store without a routing model — silent flat
-   * fallback would hide the O(cells) cost the caller opted out of.
    */
   def ivfStoredTopKHier(spark: org.apache.spark.sql.SparkSession, path: String,
                         queries: DataFrame, k: Int,
-                        nprobeCoarse: Int = 1, nprobe: Int = 2): DataFrame = {
-    val probes = routedProbes(spark, path, queries, nprobeCoarse, nprobe)
-    // the shared probed-cell scan (static partition pushdown + tombstone
-    // screen + exact rank) — identical to ivfStoredTopK's finish
+                        nprobeCoarse: Int = 1, nprobe: Int = 2): DataFrame =
+    probedServe(spark, path, queries, routedProbes(spark, path, queries, nprobeCoarse, nprobe), k)
+
+  /**
+   * The probed-cell finish of every stored serve (IVF, IVF-PQ, residual
+   * IVF-PQ, PCA-IVF; flat or routed). `probes` is the entry point's
+   * checkpointed (query_id, qv, …, cell) frame — [[probeCells]] or
+   * [[routedProbes]], in the store's vector space.
+   *
+   * STATIC partition pruning: DPP does not fire for a probe side built
+   * from a request-sized frame (no selective scan filter — the
+   * bm25StoredTopK pattern), so the probed cell ids — at most |queries| ×
+   * nprobe ints — are collected and pushed as a literal `cell IN` over the
+   * partition column; every vectors read then scans ONLY the probed
+   * cells' files, and the per-query cell join still restricts each query
+   * to its own probes. Pending delete tombstones screen every read
+   * (broadcast anti-join, delete-rate-sized): a deleted vector stops
+   * ranking the instant [[deleteFromIvfIndex]] lands; absent tombstones
+   * leave the plan untouched.
+   *
+   * Without a `shortlist` stage the probed full-width embeddings rank
+   * exactly. With one, the family's stage 1 cuts the screened probed
+   * read to (query_id, neighbor_id) candidates, and [[exactRerank]] reads
+   * the full-width embeddings of those candidates only. Stage 1 alone
+   * would screen correctly (stage 2 only reads shortlisted ids), but both
+   * reads screen, so a shortlist computed before a concurrent delete
+   * cannot resurrect the id at rerank.
+   */
+  private def probedServe(spark: org.apache.spark.sql.SparkSession, path: String,
+                          queries: DataFrame, probes: DataFrame, k: Int,
+                          shortlist: Option[DataFrame => DataFrame] = None): DataFrame = {
     val probed = probes.select("cell").distinct().collect().map(_.get(0)).toSeq
-    val vecs = deleteScreen(spark, path)(
-      spark.read.parquet(s"$path/vectors")
-        .where(col("cell").isin(probed: _*)))
-    val c = withNorm(vecs
-      .select(col("cell"), col("vec_id").as("neighbor_id"), dvec("embedding").as("cv")), "cv")
-      .withColumnRenamed("nrm", "cv_nrm")
-    rankPairs(c.join(broadcast(probes), Seq("cell")), k)
+    val screen = deleteScreen(spark, path)
+    def probedVecs =
+      screen(spark.read.parquet(s"$path/vectors").where(col("cell").isin(probed: _*)))
+    shortlist match {
+      case None => rankProbed(probedVecs, probes, "embedding", k)
+      case Some(stage1) =>
+        val shortIds = stage1(probedVecs)
+        exactRerank(probedVecs, queries, shortIds, k)
+    }
+  }
+
+  /** Exact cosine rank of the probed vectors' `vecCol` against each
+    * query's own probed cells (an equi-join on cell, no corpus cross
+    * join). */
+  private def rankProbed(vecs: DataFrame, probes: DataFrame, vecCol: String,
+                         k: Int): DataFrame =
+    rankPairs(withNorm(vecs.select(col("cell"), col("vec_id").as("neighbor_id"),
+      col(vecCol).as("cv")), "cv").withColumnRenamed("nrm", "cv_nrm")
+      .join(broadcast(probes), Seq("cell")), k)
+
+  /** Stage 2 of every two-stage serve: EXACT cosine over the full-width
+    * embeddings of a (query_id, neighbor_id) shortlist. The shortlist id
+    * set broadcasts into the `vecs` read, so norms and cosines are
+    * computed ONLY for the shortlist·|queries| surviving pairs —
+    * non-shortlisted vectors cost a broadcast-hash probe and nothing
+    * else. */
+  private def exactRerank(vecs: DataFrame, queries: DataFrame, shortIds: DataFrame,
+                          k: Int): DataFrame = {
+    val pruned = vecs.select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv"))
+      .join(broadcast(shortIds), Seq("neighbor_id"))
+    rankPairs(withNorm(pruned, "cv").withColumnRenamed("nrm", "cv_nrm")
+      .join(broadcast(queryVecs(queries)), Seq("query_id")), k)
   }
 
   /**
@@ -1019,18 +1062,15 @@ object Similarity {
       throw new IllegalStateException(
         s"$path has no coarse routing model — not a hier store " +
           "(use the flat stored-top-k path instead)"))
-    val coarseCents = withNorm(coarse.toDF("cell", "centroid"), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
     // stage 1: route queries over the √cells coarse model
-    val qc = probeCells(queries, coarseCents, nprobeCoarse)
+    val qc = probeCells(queries, normedCentroids(coarse.toDF("cell", "centroid")), nprobeCoarse)
       .withColumnRenamed("cell", "coarse").localCheckpoint()
     val probedCoarse = qc.select("coarse").distinct().collect().map(_.getInt(0)).toSeq
     // stage 2: score only the probed coarse cells' children
-    val leafCands = withNorm(
+    val leafCands = normedCentroids(
       spark.read.parquet(s"$path/centroids")
         .where(floor(col("cell") / lit(kChild)).cast("int").isin(probedCoarse: _*))
-        .withColumn("coarse", floor(col("cell") / lit(kChild)).cast("int")),
-      "centroid").withColumnRenamed("nrm", "centroid_nrm")
+        .withColumn("coarse", floor(col("cell") / lit(kChild)).cast("int")))
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("cdist").desc, col("cell").asc)
     qc.join(broadcast(leafCands), Seq("coarse"))
@@ -1150,13 +1190,14 @@ object Similarity {
    * At 100 TB this is the same cost as the original build (training
    * passes + one partitioned write), scheduled off the drift signal;
    * appends and deletes stay cheap in between.
+   *
+   * `hier = true` retrains through [[hierKmeansModel]] — the √cells
+   * assignment path — so a drift-triggered retrain at cells ∝ corpus
+   * keeps the build-cost curve of `writeIvfIndex(hier = true)`
+   * (O(n·√cells) instead of O(n·cells)); the resulting store is
+   * INDISTINGUISHABLE from a fresh hier build over the live corpus
+   * (spec-pinned), and serving stays the shared flat-leaf path.
    */
-  /** `hier = true` retrains through [[hierKmeansModel]] — the √cells
-    * assignment path — so a drift-triggered retrain at cells ∝ corpus
-    * keeps the build-cost curve [[writeIvfIndexHier]] established
-    * (O(n·√cells) instead of O(n·cells)); the resulting store is
-    * INDISTINGUISHABLE from a fresh writeIvfIndexHier over the live
-    * corpus (spec-pinned), and serving stays the shared flat-leaf path. */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       kCells: Int = 4, iters: Int = 2,
                       sampleN: Option[Int] = None,
@@ -1170,30 +1211,18 @@ object Similarity {
     val live = dead.fold(corpus)(d =>
       corpus.join(broadcast(d), Seq("vec_id"), "left_anti"))
     graft.storage.AtomicSwap.swapDir(spark, store.getParent.toString, store.getName) { tmp =>
-      val trainSet = sampleN.fold(live)(n => trainingSample(live, n).localCheckpoint())
-      val (assigned, model, hierM) =
-        if (hier) {
-          val m = hierKmeansModel(trainSet, kCells, iters)
-          (hierAssigned(live, m), m.leaves, Some(m))
-        } else {
-          val m = kmeansCentroids(trainSet, kCells, iters)
-          (withNorm(live.select(col("vec_id"), col("embedding"),
-            dvec("embedding").as("v")), "v")
-            .withColumn("cell", assignCell(m, "v", "nrm"))
-            .select("vec_id", "embedding", "cell"), m, None)
-        }
+      val (leaves, routing) = trainCells(trainSetOf(live, sampleN), kCells, iters, hier)
       // vectors/centroids/coarse are independent — concurrent; the facts
       // rebuild below stays AFTER them (it reads the new $tmp/vectors)
       graft.storage.IndexStore.inParallel(Seq[() => Unit](
-        () => assigned
-          .repartition(col("cell"))
-          .write.partitionBy("cell").parquet(s"$tmp/vectors"),
-        () => model.toDF("cell", "centroid").write.parquet(s"$tmp/centroids")) ++
+        () => writeCells(assignCells(live, routing, leaves).select("vec_id", "embedding", "cell"),
+          s"$tmp/vectors", "errorifexists"),
+        () => leaves.toDF("cell", "centroid").write.parquet(s"$tmp/centroids")) ++
         // a hier retrain persists the new ROUTING model in the same swap
         // unit (routed serving/appends must never pair an old coarse model
         // with a new leaf model); a flat retrain writes none, so a stale
         // coarse dir from a former hier generation vanishes with the swap
-        hierM.map(m => () => writeCoarseModel(spark, tmp, m)))
+        routing.map(r => () => writeCoarseModel(spark, tmp, r)))
       // deleted_vecs is deliberately NOT carried over: the tombstoned
       // rows never entered the new store — the retrain IS their purge
       // a facts table rebuilds INSIDE the swap (over the new assignment)
@@ -1611,16 +1640,36 @@ object Similarity {
     val cbs = pqCodebooks(corpus)
     val enc = pqEncoded(corpus, cbs, Seq(col("vec_id").as("neighbor_id")))
     val q = broadcast(queries.select(col("vec_id").as("query_id"), dvec("embedding").as("qv")))
+    adcRanked(enc.crossJoin(q), adcMicroUdf(cbs)(col("codes"), col("qv")), k)
+      .select(col("query_id"), col("neighbor_id"), adcScore)
+  }
+
+  /** The micro-unit ADC rank shared by every PQ search: self pairs drop,
+    * the integer `score` ranks desc with the neighbor-asc tiebreak, and
+    * the top `k` per query survive (carrying `score_micro`). */
+  private def adcRanked(pairs: DataFrame, score: org.apache.spark.sql.Column,
+                        k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("score_micro").desc, col("neighbor_id").asc)
-    enc.crossJoin(q)
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score_micro", adcMicroUdf(cbs)(col("codes"), col("qv")))
+    pairs.filter(col("neighbor_id") =!= col("query_id"))
+      .withColumn("score_micro", score)
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("score_micro").cast("double") / lit(1000000.0), 6).as("adc_score"))
   }
+
+  /** The ADC score column of an inline PQ search, back in score units. */
+  private def adcScore: org.apache.spark.sql.Column =
+    round(col("score_micro").cast("double") / lit(1000000.0), 6).as("adc_score")
+
+  /** PQ stage 1 of a stored two-stage serve ([[probedServe]]): the
+    * probed cells' CODES — the scan reads cell + vec_id + codes, never a
+    * raw vector — ADC-scored by `score` against each query's own probes,
+    * down to a `shortlist` of (query_id, neighbor_id) per query. */
+  private def adcShortlist(probes: DataFrame, shortlist: Int,
+                           score: org.apache.spark.sql.Column)(vecs: DataFrame): DataFrame =
+    adcRanked(vecs.select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
+      .join(broadcast(probes), Seq("cell")), score, shortlist)
+      .select(col("query_id"), col("neighbor_id"))
 
   /**
    * IVF-PQ (IVFADC, Jégou et al. 2011 §IV): the two scale levers
@@ -1643,18 +1692,12 @@ object Similarity {
     // vec_id here would be a pointless whole-corpus shuffle
     val enc = pqEncoded(corpus, cbs,
       Seq(col(cellCol).as("cell"), col("vec_id").as("neighbor_id")))
-    val cents = withNorm(model.toDF("cell", "centroid"), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
-    val probes = probeCells(queries, cents, nprobe).drop("qv_nrm")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col("neighbor_id").asc)
-    enc.join(broadcast(probes), Seq("cell")) // equi-join on cell — probed codes only
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score_micro", adcMicroUdf(cbs)(col("codes"), col("qv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("score_micro").cast("double") / lit(1000000.0), 6).as("adc_score"))
+    val probes = probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe)
+      .drop("qv_nrm")
+    // equi-join on cell — probed codes only
+    adcRanked(enc.join(broadcast(probes), Seq("cell")),
+      adcMicroUdf(cbs)(col("codes"), col("qv")), k)
+      .select(col("query_id"), col("neighbor_id"), adcScore)
   }
 
   /**
@@ -1665,53 +1708,34 @@ object Similarity {
    * PQ codebooks are NOT a separate table: they DERIVE from the stored
    * centroids ([[pqCodebooksFrom]] slices each centroid into subspace
    * means), so the store cannot hold codebooks that disagree with its
-   * cells — one table fewer to keep atomic.
+   * cells — one table fewer to keep atomic. `sampleN` bounds the
+   * training passes; codebooks derive from the (sampled) centroids, so
+   * the whole model pair is sample-bounded.
+   *
+   * `hier = true` trains the cells through [[hierKmeansModel]] and
+   * persists the coarse routing model (`coarse/`) beside the leaf
+   * centroids — the corpus-sized assignment pass scores O(2·√cells)
+   * centroids per vector instead of O(cells), appends auto-route
+   * ([[appendToIvfPqIndex]]), and [[ivfPqStoredTopKHier]] serves with
+   * routed probes; codebooks derive from the LEAF model either way, so
+   * the codes and both serve paths are model-coherent by construction.
    */
-  /** `hier = true` trains the cells through [[hierKmeansModel]] and
-    * persists the coarse routing model (`coarse/`) beside the leaf
-    * centroids — the corpus-sized assignment pass scores O(2·√cells)
-    * centroids per vector instead of O(cells), appends auto-route
-    * ([[appendToIvfPqIndex]]), and [[ivfPqStoredTopKHier]] serves with
-    * routed probes; codebooks derive from the LEAF model either way, so
-    * the codes and both serve paths are model-coherent by construction. */
   def writeIvfPqIndex(corpus: DataFrame, path: String,
                       kCells: Int = 4, iters: Int = 2,
                       sampleN: Option[Int] = None,
                       hier: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    graft.storage.IndexStore.clearSideTables(spark, path,
-      Seq("deleted_vecs", "cellfacts", FactsPendingMarker, "coarse"))
-    // sampleN bounds the training passes; codebooks derive from the
-    // (sampled) centroids, so the whole model pair is sample-bounded
-    val trainSet = sampleN.fold(corpus)(n => trainingSample(corpus, n).localCheckpoint())
-    val normed = withNorm(corpus.select(col("vec_id"), col("embedding"),
-      dvec("embedding").as("v")), "v")
-    val (assigned, model, hierM) =
-      if (hier) {
-        val m = hierKmeansModel(trainSet, kCells, iters)
-        (normed.withColumn("coarse", assignCell(m.coarse, "v", "nrm"))
-          .withColumn("cell", hierAssignLeaf(m.leaves, m.kChild, "coarse", "v", "nrm")),
-          m.leaves, Some(m))
-      } else {
-        val m = kmeansCentroids(trainSet, kCells, iters)
-        (normed.withColumn("cell", assignCell(m, "v", "nrm")), m, None)
-      }
-    val cbs = pqCodebooksFrom(model)
-    // STRICT write order: vectors → centroids (the streaming maintainer's
-    // bootstrap-vs-append discriminator) → coarse LAST — the routed
-    // discriminator must never precede the generation it describes (a
-    // crash mid-rebuild would pair a NEW routing model with the OLD
-    // store); a crash before coarse leaves a valid FLAT store
-    assigned
-      .withColumn("codes", pqEncodeUdf(cbs)(dvec("embedding")))
-      .select("vec_id", "embedding", "codes", "cell")
-      .repartition(col("cell")) // file discipline, as in writeIvfIndex
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors")
-    model.toDF("cell", "centroid")
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    hierM.foreach(m => writeCoarseModel(spark, path, m))
+    clearForRebuild(spark, path)
+    val (leaves, routing) = trainCells(trainSetOf(corpus, sampleN), kCells, iters, hier)
+    commitCells(spark, path, pqRows(assignCells(corpus, routing, leaves), leaves), leaves, routing)
   }
+
+  /** Cell-assigned rows with their PQ codes, encoded through the
+    * codebooks `leaves` derive — the stored IVF-PQ row. */
+  private def pqRows(assigned: DataFrame, leaves: Seq[(Int, Array[Double])]): DataFrame =
+    assigned
+      .withColumn("codes", pqEncodeUdf(pqCodebooksFrom(leaves))(dvec("embedding")))
+      .select("vec_id", "embedding", "codes", "cell")
 
   /**
    * Incremental IVF-PQ maintenance — [[appendToIvfIndex]]'s contract
@@ -1725,25 +1749,9 @@ object Similarity {
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String, batch: DataFrame): Unit = {
     val model = readCentroids(spark, path)
-    val cbs = pqCodebooksFrom(model)
     val fresh = reviveAndScreen(spark, path, batch)
-    val normed = withNorm(fresh.select(col("vec_id"), col("embedding"),
-      dvec("embedding").as("v")), "v")
-    // a hier store routes the batch through its persisted two-level rule
-    // (O(batch·√cells), coherent with the build); flat stores keep the
-    // flat argmax — the appendToIvfIndex contract
-    val assigned = hierModelOf(spark, path) match {
-      case Some((coarse, kChild)) =>
-        normed.withColumn("coarse", assignCell(coarse, "v", "nrm"))
-          .withColumn("cell", hierAssignLeaf(model, kChild, "coarse", "v", "nrm"))
-      case None =>
-        normed.withColumn("cell", assignCell(model, "v", "nrm"))
-    }
-    assigned
-      .withColumn("codes", pqEncodeUdf(cbs)(dvec("embedding")))
-      .select("vec_id", "embedding", "codes", "cell")
-      .repartition(col("cell")) // file discipline, as in the build
-      .write.mode("append").partitionBy("cell").parquet(s"$path/vectors")
+    writeCells(pqRows(assignCells(fresh, hierModelOf(spark, path), model), model),
+      s"$path/vectors", "append")
   }
 
   /**
@@ -1766,36 +1774,13 @@ object Similarity {
                       shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val spark2 = spark; import spark2.implicits._
-    val model = readCentroids(spark, path)
-    val cbs = pqCodebooksFrom(model)
     // ONE centroids read serves both the codebooks and the probe frame
     // (the ivfPqTopK posture — no second scan to drift against)
-    val cents = withNorm(model.toDF("cell", "centroid"), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
-    val probes = probeCells(queries, cents, nprobe).drop("qv_nrm").localCheckpoint()
-    val probed = probes.select("cell").distinct().collect().map(_.get(0)).toSeq
-    val screened = deleteScreen(spark, path)
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col("neighbor_id").asc)
-    val shortIds = screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score_micro", adcMicroUdf(cbs)(col("codes"), col("qv")))
-      .withColumn("rnk", row_number().over(wShort))
-      .filter(col("rnk") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(
-      withNorm(queries.select(col("vec_id").as("query_id"),
-        dvec("embedding").as("qv")), "qv")
-        .withColumnRenamed("nrm", "qv_nrm"))
-    val pruned = screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv"))
-      .join(broadcast(shortIds), Seq("neighbor_id"))
-    rankPairs(withNorm(pruned, "cv").withColumnRenamed("nrm", "cv_nrm")
-      .join(q, Seq("query_id")), k)
+    val model = readCentroids(spark, path)
+    val probes = probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe)
+      .drop("qv_nrm").localCheckpoint()
+    probedServe(spark, path, queries, probes, k, Some(adcShortlist(probes, shortlist,
+      adcMicroUdf(pqCodebooksFrom(model))(col("codes"), col("qv"))) _))
   }
 
   /**
@@ -1814,44 +1799,12 @@ object Similarity {
                           nprobeCoarse: Int = 1, nprobe: Int = 2,
                           shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
-    val spark2 = spark; import spark2.implicits._
     val cbs = pqCodebooksFrom(readCentroids(spark, path))
-    val probes = routedProbes(spark, path, queries, nprobeCoarse, nprobe)
-      .drop("qv_nrm")
-    val probed = probes.select("cell").distinct().collect().map(_.get(0)).toSeq
-    val screened = deleteScreen(spark, path)
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col("neighbor_id").asc)
-    val shortIds = screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score_micro", adcMicroUdf(cbs)(col("codes"), col("qv")))
-      .withColumn("rnk", row_number().over(wShort))
-      .filter(col("rnk") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(
-      withNorm(queries.select(col("vec_id").as("query_id"),
-        dvec("embedding").as("qv")), "qv")
-        .withColumnRenamed("nrm", "qv_nrm"))
-    val pruned = screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv"))
-      .join(broadcast(shortIds), Seq("neighbor_id"))
-    rankPairs(withNorm(pruned, "cv").withColumnRenamed("nrm", "cv_nrm")
-      .join(q, Seq("query_id")), k)
+    val probes = routedProbes(spark, path, queries, nprobeCoarse, nprobe).drop("qv_nrm")
+    probedServe(spark, path, queries, probes, k, Some(adcShortlist(probes, shortlist,
+      adcMicroUdf(cbs)(col("codes"), col("qv"))) _))
   }
 
-  /**
-   * Two-stage PQ serving: ADC shortlist → EXACT re-rank — the standard
-   * production shape (compressed codes prune the corpus to `shortlist`
-   * candidates per query, then true cosine on raw vectors orders the
-   * final k). The shortlist id set broadcasts into the raw-vector read,
-   * so norms and cosines are computed ONLY for the shortlist·|queries|
-   * surviving pairs — non-shortlisted vectors cost a broadcast-hash
-   * probe and nothing else.
-   */
   // ------------------------------------------------------------------
   // RESIDUAL IVFADC (Jégou et al. 2011 §IV-A as published): PQ encodes
   // the residual x − centroid(cell), not x itself — the coarse quantizer
@@ -2000,19 +1953,11 @@ object Similarity {
     val cbs = residualCodebooks(resid, kCodes, iters)
     val enc = resid.select(col("cell"), col("vec_id").as("neighbor_id"),
       residAssignUdf(cbs)(col("rv")).as("codes"))
-    val cents = withNorm(model.toDF("cell", "centroid"), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
-    val probes = probeCells(queries, cents, nprobe).drop("qv_nrm")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col("neighbor_id").asc)
-    enc.join(broadcast(probes), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score_micro",
-        residAdcMicroUdf(model, cbs)(col("cell"), col("codes"), col("qv")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("score_micro").cast("double") / lit(1000000.0), 6).as("adc_score"))
+    val probes = probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe)
+      .drop("qv_nrm")
+    adcRanked(enc.join(broadcast(probes), Seq("cell")),
+      residAdcMicroUdf(model, cbs)(col("cell"), col("codes"), col("qv")), k)
+      .select(col("query_id"), col("neighbor_id"), adcScore)
   }
 
   /**
@@ -2052,9 +1997,7 @@ object Similarity {
             .limit(math.max(kCells, kCodes)))
           .dropDuplicates("vec_id").localCheckpoint())
       val model = kmeansCentroids(trainSet, kCells, iters)
-      val resid = withNorm(corpus.select(col("vec_id"), col("embedding"),
-        dvec("embedding").as("v")), "v")
-        .withColumn("cell", assignCell(model, "v", "nrm"))
+      val resid = assignCells(corpus, None, model)
         .withColumn("rv", residualUdf(model)(col("cell"), dvec("embedding")))
         .select("vec_id", "embedding", "cell", "rv")
         .localCheckpoint() // feeds every training pass + the encode
@@ -2065,10 +2008,9 @@ object Similarity {
       // three independent writes (checkpointed resid + two driver-resident
       // models) inside the same swap unit — concurrent (§2.6)
       graft.storage.IndexStore.inParallel(Seq(
-        () => resid.select(col("vec_id"), col("embedding"),
-            residAssignUdf(cbs)(col("rv")).as("codes"), col("cell"))
-          .repartition(col("cell")) // file discipline, as in writeIvfIndex
-          .write.partitionBy("cell").parquet(s"$tmp/vectors"),
+        () => writeCells(resid.select(col("vec_id"), col("embedding"),
+          residAssignUdf(cbs)(col("rv")).as("codes"), col("cell")),
+          s"$tmp/vectors", "errorifexists"),
         () => model.toDF("cell", "centroid").write.parquet(s"$tmp/centroids"),
         () => cbs.zipWithIndex.flatMap { case (band, j) =>
             band.map { case (code, c) => (j, code, c.toSeq) }
@@ -2099,14 +2041,11 @@ object Similarity {
     val model = readCentroids(spark, path)
     val cbs = readResidCb(spark, path)
     val fresh = reviveAndScreen(spark, path, batch)
-    withNorm(fresh.select(col("vec_id"), col("embedding"),
-      dvec("embedding").as("v")), "v")
-      .withColumn("cell", assignCell(model, "v", "nrm"))
+    writeCells(assignCells(fresh, None, model)
       .withColumn("rv", residualUdf(model)(col("cell"), dvec("embedding")))
       .select(col("vec_id"), col("embedding"),
-        residAssignUdf(cbs)(col("rv")).as("codes"), col("cell"))
-      .repartition(col("cell")) // file discipline, as in the build
-      .write.mode("append").partitionBy("cell").parquet(s"$path/vectors")
+        residAssignUdf(cbs)(col("rv")).as("codes"), col("cell")),
+      s"$path/vectors", "append")
   }
 
   /**
@@ -2128,48 +2067,27 @@ object Similarity {
     val spark2 = spark; import spark2.implicits._
     val model = readCentroids(spark, path)
     val cbs = readResidCb(spark, path)
-    val cents = withNorm(model.toDF("cell", "centroid"), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
-    val probes = probeCells(queries, cents, nprobe).drop("qv_nrm").localCheckpoint()
-    val probed = probes.select("cell").distinct().collect().map(_.get(0)).toSeq
-    val screened = deleteScreen(spark, path)
-    val wShort = Window.partitionBy(col("query_id"))
-      .orderBy(col("score_micro").desc, col("neighbor_id").asc)
-    val shortIds = screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("cell"), col("vec_id").as("neighbor_id"), col("codes"))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("score_micro",
-        residAdcMicroUdf(model, cbs)(col("cell"), col("codes"), col("qv")))
-      .withColumn("rnk", row_number().over(wShort))
-      .filter(col("rnk") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(
-      withNorm(queries.select(col("vec_id").as("query_id"),
-        dvec("embedding").as("qv")), "qv")
-        .withColumnRenamed("nrm", "qv_nrm"))
-    val pruned = screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv"))
-      .join(broadcast(shortIds), Seq("neighbor_id"))
-    rankPairs(withNorm(pruned, "cv").withColumnRenamed("nrm", "cv_nrm")
-      .join(q, Seq("query_id")), k)
+    val probes = probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe)
+      .drop("qv_nrm").localCheckpoint()
+    probedServe(spark, path, queries, probes, k, Some(adcShortlist(probes, shortlist,
+      residAdcMicroUdf(model, cbs)(col("cell"), col("codes"), col("qv"))) _))
   }
 
+  /**
+   * Two-stage PQ serving: ADC shortlist → EXACT re-rank — the standard
+   * production shape (compressed codes prune the corpus to `shortlist`
+   * candidates per query, then true cosine on raw vectors orders the
+   * final k). The shortlist id set broadcasts into the raw-vector read,
+   * so norms and cosines are computed ONLY for the shortlist·|queries|
+   * surviving pairs — non-shortlisted vectors cost a broadcast-hash
+   * probe and nothing else.
+   */
   def pqRerankTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                    shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val shortIds = pqTopK(corpus, queries, shortlist)
       .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(
-      withNorm(queries.select(col("vec_id").as("query_id"), dvec("embedding").as("qv")), "qv")
-        .withColumnRenamed("nrm", "qv_nrm"))
-    // prune FIRST: the norm/cosine work runs on shortlist survivors only
-    val pruned = corpus.select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv"))
-      .join(broadcast(shortIds), Seq("neighbor_id"))
-    rankPairs(withNorm(pruned, "cv").withColumnRenamed("nrm", "cv_nrm")
-      .join(q, Seq("query_id")), k)
+    exactRerank(corpus, queries, shortIds, k)
   }
 
   // ------------------------------------------------------------------
@@ -2333,14 +2251,7 @@ object Similarity {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val shortIds = truncatedTopK(corpus, queries, shortlist, dims)
       .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(
-      withNorm(queries.select(col("vec_id").as("query_id"), dvec("embedding").as("qv")), "qv")
-        .withColumnRenamed("nrm", "qv_nrm"))
-    // prune FIRST: full-width norms/cosines run on shortlist survivors only
-    val pruned = corpus.select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv"))
-      .join(broadcast(shortIds), Seq("neighbor_id"))
-    rankPairs(withNorm(pruned, "cv").withColumnRenamed("nrm", "cv_nrm")
-      .join(q, Seq("query_id")), k)
+    exactRerank(corpus, queries, shortIds, k)
   }
 
   // ------------------------------------------------------------------
@@ -2507,15 +2418,7 @@ object Similarity {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val shortIds = pcaTopK(corpus, queries, shortlist, model)
       .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(
-      withNorm(queries.select(col("vec_id").as("query_id"),
-        dvec("embedding").as("qv")), "qv")
-        .withColumnRenamed("nrm", "qv_nrm"))
-    val pruned = corpus.select(col("vec_id").as("neighbor_id"),
-      dvec("embedding").as("cv"))
-      .join(broadcast(shortIds), Seq("neighbor_id"))
-    rankPairs(withNorm(pruned, "cv").withColumnRenamed("nrm", "cv_nrm")
-      .join(q, Seq("query_id")), k)
+    exactRerank(corpus, queries, shortIds, k)
   }
 
   /**
@@ -2594,67 +2497,58 @@ object Similarity {
    * so they persist together like [[retrainIvfIndex]]'s model+vectors
    * unit. Build cost at 100 TB: the PCA fit's partials×2080 aggregate,
    * the k-means passes (all in dims-wide space), and ONE partitioned
-   * write.
+   * write. `sampleN` bounds BOTH trained models ([[trainingSample]]):
+   * the basis fits the sample's Gram, the cells train on the sample's
+   * projections; the FULL corpus still projects and lands through them.
+   *
+   * `hier = true` trains the PCA-space cells through
+   * [[hierKmeansModel]] (dim = `dims`) and persists the coarse routing
+   * model beside the leaf centroids — the corpus-sized assignment pass
+   * scores O(2·√cells) PROJECTED centroids per vector, appends
+   * auto-route ([[appendToPcaIvfIndex]]), and
+   * [[pcaIvfStoredTopKHier]] serves with routed probes; both routing
+   * levels live in the SAME PCA space as the flat cells.
    */
-  /** `hier = true` trains the PCA-space cells through
-    * [[hierKmeansModel]] (dim = `dims`) and persists the coarse routing
-    * model beside the leaf centroids — the corpus-sized assignment pass
-    * scores O(2·√cells) PROJECTED centroids per vector, appends
-    * auto-route ([[appendToPcaIvfIndex]]), and
-    * [[pcaIvfStoredTopKHier]] serves with routed probes; both routing
-    * levels live in the SAME PCA space as the flat cells. */
   def writePcaIvfIndex(corpus: DataFrame, path: String, dims: Int = 16,
                        kCells: Int = 4, iters: Int = 2,
                        sampleN: Option[Int] = None,
                        hier: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    // a REBUILD must not inherit a previous store's pending deletes
-    // (the writeIvfIndex contract — the two stores share the
-    // deleted_vecs side table and the IndexStore delete mechanics)
-    graft.storage.IndexStore.clearSideTables(spark, path,
-      Seq("deleted_vecs", "cellfacts", FactsPendingMarker, "coarse"))
-    // sampleN bounds BOTH trained models ([[trainingSample]]): the basis
-    // fits the sample's Gram, the cells train on the sample's
-    // projections; the FULL corpus still projects and lands through them
-    val trainSet = sampleN.fold(corpus)(n =>
-      trainingSample(corpus, n).localCheckpoint())
+    clearForRebuild(spark, path)
+    val (model, rows, leaves, routing) = pcaCells(corpus, sampleN, dims, kCells, iters, hier)
+    commitCells(spark, path, rows, leaves, routing,
+      Some(() => writePcaModel(spark, model, s"$path/pcamodel", "overwrite")))
+  }
+
+  /** The PCA-IVF model pair trained on `corpus` — the basis, then the
+    * cells in its space, flat or hier ([[trainCells]]); with `sampleN`
+    * both train on the bounded sample — and the FULL corpus projected
+    * and assigned through it, as stored rows (vec_id, embedding, pvec,
+    * cell). Shared by the build and the retrain. */
+  private def pcaCells(corpus: DataFrame, sampleN: Option[Int], dims: Int,
+                       kCells: Int, iters: Int, hier: Boolean)
+  : (PcaModel, DataFrame, Seq[(Int, Array[Double])], Option[Routing]) = {
+    val trainSet = trainSetOf(corpus, sampleN)
     val model = pcaFit(trainSet, dims)
     val proj = pcaProject(corpus, model)
-    val cellTrain = (if (sampleN.isEmpty) proj else pcaProject(trainSet, model))
-      .select(col("vec_id"), col("pvec").as("embedding"))
-    val normed = withNorm(proj.select(col("vec_id"), col("embedding"), col("pvec"),
-      col("pvec").as("v")), "v")
-    val (assigned, cells, hierM) =
-      if (hier) {
-        val m = hierKmeansModel(cellTrain, kCells, iters, dim = dims)
-        (normed.withColumn("coarse", assignCell(m.coarse, "v", "nrm"))
-          .withColumn("cell", hierAssignLeaf(m.leaves, m.kChild, "coarse", "v", "nrm")),
-          m.leaves, Some(m))
-      } else {
-        val m = kmeansCentroids(cellTrain, kCells, iters, dim = dims)
-        (normed.withColumn("cell", assignCell(m, "v", "nrm")), m, None)
-      }
-    // vectors + centroids are independent — concurrent (§2.6). The BASIS
-    // lands next, never concurrently: pcamodel is the streaming
-    // maintainer's bootstrap-vs-append discriminator — its existence must
-    // imply the store tables landed. Coarse — the ROUTED discriminator —
-    // lands strictly LAST, after pcamodel: a crash mid-rebuild must never
-    // leave a NEW routing model beside an OLD generation's tables (routed
-    // serving would silently pair mismatched generations); a crash before
-    // coarse leaves a valid FLAT store.
-    graft.storage.IndexStore.inParallel(Seq[() => Unit](
-      () => assigned
-        .select("vec_id", "embedding", "pvec", "cell")
-        .repartition(col("cell")) // file discipline, as in writeIvfIndex
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/vectors"),
-      () => cells.toDF("cell", "centroid")
-        .write.mode("overwrite").parquet(s"$path/centroids")))
+    val (leaves, routing) = trainCells(
+      (if (sampleN.isEmpty) proj else pcaProject(trainSet, model))
+        .select(col("vec_id"), col("pvec").as("embedding")),
+      kCells, iters, hier, dim = dims)
+    val rows = assignCells(proj, routing, leaves, Seq("vec_id", "embedding", "pvec"), "pvec")
+      .select("vec_id", "embedding", "pvec", "cell")
+    (model, rows, leaves, routing)
+  }
+
+  /** Persist a [[PcaModel]] as the store's `pcamodel` table: one row
+    * (c, component, energy) per basis vector. */
+  private def writePcaModel(spark: org.apache.spark.sql.SparkSession, model: PcaModel,
+                            dir: String, mode: String): Unit = {
+    import spark.implicits._
     model.components.toSeq.zipWithIndex
       .map { case (c, i) => (i, c.toSeq, model.energies(i)) }
       .toDF("c", "component", "energy")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/pcamodel")
-    hierM.foreach(m => writeCoarseModel(spark, path, m))
+      .coalesce(1).write.mode(mode).parquet(dir)
   }
 
   /** The store's own PCA basis — dims×Dim doubles, driver-resident. */
@@ -2683,22 +2577,11 @@ object Similarity {
     val model = readPcaModel(spark, path)
     val cells = readCentroids(spark, path)
     val fresh = reviveAndScreen(spark, path, batch)
-    val normed = withNorm(pcaProject(fresh, model)
-      .select(col("vec_id"), col("embedding"), col("pvec"), col("pvec").as("v")), "v")
     // a hier store routes the projected batch through its persisted
-    // two-level rule (both levels in PCA space — the build's own rule);
-    // flat stores keep the flat argmax
-    val assigned = hierModelOf(spark, path) match {
-      case Some((coarse, kChild)) =>
-        normed.withColumn("coarse", assignCell(coarse, "v", "nrm"))
-          .withColumn("cell", hierAssignLeaf(cells, kChild, "coarse", "v", "nrm"))
-      case None =>
-        normed.withColumn("cell", assignCell(cells, "v", "nrm"))
-    }
-    assigned
-      .select("vec_id", "embedding", "pvec", "cell")
-      .repartition(col("cell")) // file discipline, as in the build
-      .write.mode("append").partitionBy("cell").parquet(s"$path/vectors")
+    // two-level rule (both levels in PCA space — the build's own rule)
+    writeCells(assignCells(pcaProject(fresh, model), hierModelOf(spark, path), cells,
+      Seq("vec_id", "embedding", "pvec"), "pvec")
+      .select("vec_id", "embedding", "pvec", "cell"), s"$path/vectors", "append")
   }
 
   /**
@@ -2733,27 +2616,12 @@ object Similarity {
     graft.storage.AtomicSwap.swapDir(spark, store.getParent.toString, store.getName) { tmp =>
       // sampleN bounds the basis fit and cell training (writePcaIvfIndex's
       // rule); the SAMPLE may checkpoint — it is bounded by construction
-      val trainSet = sampleN.fold(live)(n =>
-        trainingSample(live, n).localCheckpoint())
-      val model = pcaFit(trainSet, dims)
-      val proj = pcaProject(live, model)
-      val cells = kmeansCentroids(
-        (if (sampleN.isEmpty) proj else pcaProject(trainSet, model))
-          .select(col("vec_id"), col("pvec").as("embedding")),
-        kCells, iters, dim = dims)
+      val (model, rows, cells, _) = pcaCells(live, sampleN, dims, kCells, iters, hier = false)
       // three independent writes inside the same swap unit — concurrent
       graft.storage.IndexStore.inParallel(Seq(
-        () => withNorm(proj.select(col("vec_id"), col("embedding"), col("pvec"),
-            col("pvec").as("v")), "v")
-          .withColumn("cell", assignCell(cells, "v", "nrm"))
-          .select("vec_id", "embedding", "pvec", "cell")
-          .repartition(col("cell"))
-          .write.partitionBy("cell").parquet(s"$tmp/vectors"),
+        () => writeCells(rows, s"$tmp/vectors", "errorifexists"),
         () => cells.toDF("cell", "centroid").write.parquet(s"$tmp/centroids"),
-        () => model.components.toSeq.zipWithIndex
-          .map { case (c, i) => (i, c.toSeq, model.energies(i)) }
-          .toDF("c", "component", "energy")
-          .coalesce(1).write.parquet(s"$tmp/pcamodel")))
+        () => writePcaModel(spark, model, s"$tmp/pcamodel", "errorifexists")))
       // deleted_vecs is deliberately NOT carried over: the tombstoned
       // rows never entered the new store — the retrain IS their purge
     }
@@ -2778,38 +2646,21 @@ object Similarity {
                        shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val model = readPcaModel(spark, path)
-    val cents = withNorm(spark.read.parquet(s"$path/centroids"), "centroid")
-      .withColumnRenamed("nrm", "centroid_nrm")
-    val probes = probeCells(
-      pcaProject(queries, model)
-        .select(col("vec_id"), col("pvec").as("embedding")),
-      cents, nprobe).localCheckpoint()
-    val probed = probes.select("cell").distinct().collect().map(_.get(0)).toSeq
-    // pending delete tombstones screen the probed read (ivfStoredTopK's
-    // contract): a deleted vector stops ranking the instant the
-    // tombstone lands; absent tombstones leave the plan untouched. The
-    // stage-1 screen alone suffices for correctness (stage 2 only reads
-    // shortlisted ids), but both reads screen so a shortlist computed
-    // before a concurrent delete cannot resurrect the id at rerank.
-    val screened = deleteScreen(spark, path)
-    val c = withNorm(screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("pvec").as("cv")), "cv")
-      .withColumnRenamed("nrm", "cv_nrm")
-    val shortIds = rankPairs(c.join(broadcast(probes), Seq("cell")), shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(
-      withNorm(queries.select(col("vec_id").as("query_id"),
-        dvec("embedding").as("qv")), "qv")
-        .withColumnRenamed("nrm", "qv_nrm"))
-    val pruned = screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv"))
-      .join(broadcast(shortIds), Seq("neighbor_id"))
-    rankPairs(withNorm(pruned, "cv").withColumnRenamed("nrm", "cv_nrm")
-      .join(q, Seq("query_id")), k)
+    val cents = normedCentroids(spark.read.parquet(s"$path/centroids"))
+    val probes = probeCells(pcaQueries(queries, model), cents, nprobe).localCheckpoint()
+    probedServe(spark, path, queries, probes, k, Some(pcaShortlist(probes, shortlist) _))
   }
+
+  /** Queries projected through a store's basis, shaped as probe input. */
+  private def pcaQueries(queries: DataFrame, model: PcaModel): DataFrame =
+    pcaProject(queries, model).select(col("vec_id"), col("pvec").as("embedding"))
+
+  /** PCA stage 1 of a stored two-stage serve ([[probedServe]]): exact
+    * cosine over the probed cells' PROJECTED vectors — the scan reads
+    * cell + vec_id + pvec, dims/Dim of the floats — down to a
+    * `shortlist` of (query_id, neighbor_id) per query. */
+  private def pcaShortlist(probes: DataFrame, shortlist: Int)(vecs: DataFrame): DataFrame =
+    rankProbed(vecs, probes, "pvec", shortlist).select(col("query_id"), col("neighbor_id"))
 
   /**
    * [[pcaIvfStoredTopK]] with ROUTED probing over a
@@ -2827,29 +2678,8 @@ object Similarity {
                            shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val model = readPcaModel(spark, path)
-    val probes = routedProbes(spark, path,
-      pcaProject(queries, model)
-        .select(col("vec_id"), col("pvec").as("embedding")),
-      nprobeCoarse, nprobe)
-    val probed = probes.select("cell").distinct().collect().map(_.get(0)).toSeq
-    val screened = deleteScreen(spark, path)
-    val c = withNorm(screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("cell"), col("vec_id").as("neighbor_id"),
-        col("pvec").as("cv")), "cv")
-      .withColumnRenamed("nrm", "cv_nrm")
-    val shortIds = rankPairs(c.join(broadcast(probes), Seq("cell")), shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(
-      withNorm(queries.select(col("vec_id").as("query_id"),
-        dvec("embedding").as("qv")), "qv")
-        .withColumnRenamed("nrm", "qv_nrm"))
-    val pruned = screened(spark.read.parquet(s"$path/vectors")
-      .where(col("cell").isin(probed: _*)))
-      .select(col("vec_id").as("neighbor_id"), dvec("embedding").as("cv"))
-      .join(broadcast(shortIds), Seq("neighbor_id"))
-    rankPairs(withNorm(pruned, "cv").withColumnRenamed("nrm", "cv_nrm")
-      .join(q, Seq("query_id")), k)
+    val probes = routedProbes(spark, path, pcaQueries(queries, model), nprobeCoarse, nprobe)
+    probedServe(spark, path, queries, probes, k, Some(pcaShortlist(probes, shortlist) _))
   }
 
   /**

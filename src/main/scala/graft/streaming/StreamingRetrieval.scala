@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.operators.Retrieval
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * Continuous corpus → searchable BM25 index: each micro-batch of
@@ -10,7 +10,10 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
  * ([[Retrieval.writeBm25Index]] on first contact, incremental
  * [[Retrieval.appendToBm25Index]] after), so the index trails the
  * crawl by one trigger instead of being rebuilt corpus-wide — the
- * retrieval-side twin of StreamingCorpus's dedup ingest.
+ * retrieval-side twin of StreamingCorpus's dedup ingest. The `meta`
+ * table decides bootstrap vs append, through the shared `maintain`
+ * skeleton: an empty first batch builds no store (the next non-empty
+ * batch does).
  *
  * Exactly-once effect WITHOUT a transactional sink: foreachBatch is
  * at-least-once, and the append's docstats screen (written before any
@@ -31,28 +34,7 @@ object StreamingRetrieval {
 
   def indexIngest(docs: DataFrame, indexPath: String, checkpoint: String,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // ONE materialization of the micro-batch feeds its multiple
-        // passes (the build scans the batch once per table: postings,
-        // corpusstats, docstats; the append reads it in the screen
-        // anti-join, and in the revival probe while tombstones are
-        // pending) — trigger-sized, unpersisted per batch
-        val batch = batch0.persist()
-        try {
-          val spark = batch.sparkSession
-          // the INDEX PATH's filesystem, not the default one — a scheme
-          // mismatch (hdfs default, file: index or vice versa) would make
-          // the probe answer false every trigger and silently rebuild
-          val meta = new org.apache.hadoop.fs.Path(s"$indexPath/meta")
-          val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(meta))
-            Retrieval.writeBm25Index(batch, indexPath)
-          else Retrieval.appendToBm25Index(spark, indexPath, batch)
-        } finally batch.unpersist()
-      }
-      .start()
+    maintain(docs, indexPath, checkpoint, trigger, "meta")(
+      Retrieval.writeBm25Index(_, indexPath))(
+      (batch, _) => Retrieval.appendToBm25Index(batch.sparkSession, indexPath, batch))
 }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.functions.{col, min}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /**
  * Continuous embedding stream → searchable IVF index: each micro-batch
@@ -12,7 +13,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
  * stored-model append ([[Similarity.appendToIvfIndex]]) — so nearest-
  * neighbor serving trails ingestion by one trigger instead of waiting
  * for a corpus-wide rebuild. The vector-side twin of
- * [[StreamingRetrieval.indexIngest]].
+ * [[StreamingRetrieval.indexIngest]]; every maintainer here runs the
+ * shared `maintain` skeleton (batch materialization, discriminator
+ * probe, empty-batch rule).
  *
  * Bootstrap-model posture: training on the FIRST wave and appending
  * with that model afterwards is the standard online-IVF operating
@@ -29,47 +32,20 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
  */
 object StreamingSimilarity {
 
-  /** `hier = true` bootstraps through [[Similarity.writeIvfIndexHier]]
-    * — the √cells assignment path for streams whose cell count scales
-    * with the corpus. The store layout is IDENTICAL (leaf centroids +
-    * cell-partitioned vectors), so appends, serving, and the whole
-    * lifecycle run the shared flat-leaf machinery unchanged; only the
-    * bootstrap (and, in the retrain variant, the drift response) pays
-    * the cheaper two-level training. */
+  /** `hier = true` bootstraps through `Similarity.writeIvfIndex(hier =
+    * true)` — the √cells assignment path for streams whose cell count
+    * scales with the corpus. The store layout is IDENTICAL (leaf
+    * centroids + cell-partitioned vectors), so appends, serving, and the
+    * whole lifecycle run the shared flat-leaf machinery unchanged; only
+    * the bootstrap (and, in the retrain variant, the drift response)
+    * pays the cheaper two-level training. */
   def ivfIngest(vecs: DataFrame, indexPath: String, checkpoint: String,
                 kCells: Int = 4, iters: Int = 2,
                 hier: Boolean = false,
                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // ONE materialization of the micro-batch feeds every pass over it
-        // (bootstrap training re-reads the batch per k-means iteration
-        // plus once for the assignment write — each pass re-scanned the
-        // source files otherwise). Trigger-sized, unpersisted per batch —
-        // bounded at any scale (guide §2: don't recompute what one
-        // bounded cache covers).
-        val batch = batch0.persist()
-        try {
-          val spark = batch.sparkSession
-          // an empty batch must not bootstrap-train (k-means on zero
-          // vectors fails loudly); the NEXT non-empty batch builds instead
-          if (!batch.isEmpty) {
-            // the INDEX PATH's filesystem, not the default one (the
-            // StreamingRetrieval scheme-mismatch gotcha)
-            val cents = new org.apache.hadoop.fs.Path(s"$indexPath/centroids")
-            val fs = cents.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (!fs.exists(cents)) {
-              if (hier) Similarity.writeIvfIndexHier(batch, indexPath, kCells, iters)
-              else Similarity.writeIvfIndex(batch, indexPath, kCells, iters)
-            }
-            else Similarity.appendToIvfIndex(spark, indexPath, batch)
-          }
-        } finally batch.unpersist()
-      }
-      .start()
+    maintain(vecs, indexPath, checkpoint, trigger, "centroids")(
+      Similarity.writeIvfIndex(_, indexPath, kCells, iters, hier = hier))(
+      (batch, _) => Similarity.appendToIvfIndex(batch.sparkSession, indexPath, batch))
 
   /**
    * Continuous embedding stream → searchable PCA-IVF store —
@@ -78,37 +54,17 @@ object StreamingSimilarity {
    * and builds the store ([[Similarity.writePcaIvfIndex]]); every later
    * batch projects through the STORED basis and appends into cells
    * assigned by the STORED centroids ([[Similarity.appendToPcaIvfIndex]]
-   * — batch-sized, replay-safe, models untouched). Serving sees each
-   * batch as soon as its append lands; both models age until the drift
-   * maintainer retrains, the standard operating contract.
+   * — batch-sized, replay-safe, models untouched). The BASIS
+   * (`pcamodel`) decides bootstrap vs append: the build lands it after
+   * vectors/centroids. Both models age until the drift maintainer
+   * retrains, the standard operating contract.
    */
   def pcaIvfIngest(vecs: DataFrame, indexPath: String, checkpoint: String,
                    dims: Int = 16, kCells: Int = 4, iters: Int = 2,
                    trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // one materialized batch feeds the PCA fit + k-means passes +
-        // assignment write of the bootstrap (see ivfIngest's note)
-        val batch = batch0.persist()
-        try {
-          val spark = batch.sparkSession
-          // existence of the BASIS decides bootstrap vs append — it is
-          // the store-table the build lands after vectors/centroids, so a
-          // half-built store re-bootstraps rather than appending through
-          // a missing model
-          val modelDir = new org.apache.hadoop.fs.Path(s"$indexPath/pcamodel")
-          val fs = modelDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!batch.isEmpty) {
-            if (!fs.exists(modelDir))
-              Similarity.writePcaIvfIndex(batch, indexPath, dims, kCells, iters)
-            else Similarity.appendToPcaIvfIndex(spark, indexPath, batch)
-          }
-        } finally batch.unpersist()
-      }
-      .start()
+    maintain(vecs, indexPath, checkpoint, trigger, "pcamodel")(
+      Similarity.writePcaIvfIndex(_, indexPath, dims, kCells, iters))(
+      (batch, _) => Similarity.appendToPcaIvfIndex(batch.sparkSession, indexPath, batch))
 
   /**
    * Continuous embedding stream → IVF-PQ store — the memory-bound
@@ -116,32 +72,14 @@ object StreamingSimilarity {
    * ([[Similarity.writeIvfPqIndex]] — codebooks derive from the trained
    * centroids), later batches append with cells AND codes from the
    * stored model ([[Similarity.appendToIvfPqIndex]]). The `centroids`
-   * table decides bootstrap vs append — it is the last table the build
-   * lands for this store.
+   * table decides bootstrap vs append.
    */
   def ivfPqIngest(vecs: DataFrame, indexPath: String, checkpoint: String,
                   kCells: Int = 4, iters: Int = 2,
                   trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // one materialized batch feeds the k-means passes + encode write
-        // of the bootstrap (see ivfIngest's note)
-        val batch = batch0.persist()
-        try {
-          val spark = batch.sparkSession
-          if (!batch.isEmpty) {
-            val cents = new org.apache.hadoop.fs.Path(s"$indexPath/centroids")
-            val fs = cents.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (!fs.exists(cents))
-              Similarity.writeIvfPqIndex(batch, indexPath, kCells, iters)
-            else Similarity.appendToIvfPqIndex(spark, indexPath, batch)
-          }
-        } finally batch.unpersist()
-      }
-      .start()
+    maintain(vecs, indexPath, checkpoint, trigger, "centroids")(
+      Similarity.writeIvfPqIndex(_, indexPath, kCells, iters))(
+      (batch, _) => Similarity.appendToIvfPqIndex(batch.sparkSession, indexPath, batch))
 
   /**
    * Continuous embedding stream → persisted SRP-LSH store —
@@ -158,26 +96,9 @@ object StreamingSimilarity {
   def srpIngest(vecs: DataFrame, indexPath: String, checkpoint: String,
                 numPlanes: Int = 8,
                 trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // one materialized batch feeds the plane derivation + bucketed
-        // write of the bootstrap (see ivfIngest's note)
-        val batch = batch0.persist()
-        try {
-          val spark = batch.sparkSession
-          if (!batch.isEmpty) {
-            val planes = new org.apache.hadoop.fs.Path(s"$indexPath/planes")
-            val fs = planes.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (!fs.exists(planes))
-              Similarity.writeSrpIndex(batch, indexPath, numPlanes)
-            else Similarity.appendToSrpIndex(spark, indexPath, batch)
-          }
-        } finally batch.unpersist()
-      }
-      .start()
+    maintain(vecs, indexPath, checkpoint, trigger, "planes")(
+      Similarity.writeSrpIndex(_, indexPath, numPlanes))(
+      (batch, _) => Similarity.appendToSrpIndex(batch.sparkSession, indexPath, batch))
 
   /**
    * Continuous embedding stream → persisted RESIDUAL-IVFADC store: the
@@ -192,27 +113,9 @@ object StreamingSimilarity {
                           kCells: Int = 4, iters: Int = 2,
                           kCodes: Int = 8, codeIters: Int = 2,
                           trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // one materialized batch feeds BOTH trainings (coarse + residual
-        // codebooks) and the encode write (see ivfIngest's note)
-        val batch = batch0.persist()
-        try {
-          val spark = batch.sparkSession
-          if (!batch.isEmpty) {
-            val cb = new org.apache.hadoop.fs.Path(s"$indexPath/residcb")
-            val fs = cb.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            if (!fs.exists(cb))
-              Similarity.writeIvfPqResidualIndex(batch, indexPath,
-                kCells, iters, kCodes, codeIters)
-            else Similarity.appendToIvfPqResidualIndex(spark, indexPath, batch)
-          }
-        } finally batch.unpersist()
-      }
-      .start()
+    maintain(vecs, indexPath, checkpoint, trigger, "residcb")(
+      Similarity.writeIvfPqResidualIndex(_, indexPath, kCells, iters, kCodes, codeIters))(
+      (batch, _) => Similarity.appendToIvfPqResidualIndex(batch.sparkSession, indexPath, batch))
 
   /**
    * [[ivfIngest]] with the drift-response loop CLOSED: after each
@@ -248,41 +151,21 @@ object StreamingSimilarity {
                            onRetrain: Long => Unit = _ => (),
                            hier: Boolean = false,
                            trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        // one materialized batch feeds the bootstrap's training passes /
-        // the append's screen+assign write (see ivfIngest's note)
-        val batch = batch0.persist()
-        try {
-        val spark = batch.sparkSession
-        import org.apache.spark.sql.functions.{col, min}
-        if (!batch.isEmpty) {
-          val cents = new org.apache.hadoop.fs.Path(s"$indexPath/centroids")
-          val fs = cents.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(cents)) {
-            if (hier) Similarity.writeIvfIndexHier(batch, indexPath, kCells, iters)
-            else Similarity.writeIvfIndex(batch, indexPath, kCells, iters)
-            Similarity.rebuildCellFacts(spark, indexPath)
-          } else {
-            // the append folds its per-cell facts in; a missing facts
-            // table (bootstrap/retrain crash window) self-heals inside
-            // mergeCellFacts with one rebuild pass
-            Similarity.appendToIvfIndex(spark, indexPath, batch,
-              updateFacts = true)
-            // O(cells) drift read — facts + centroids, never the corpus
-            val worst = Similarity.ivfDriftFromFacts(spark, indexPath)
-              .agg(min(col("drift_cosine"))).collect()(0)
-            if (!worst.isNullAt(0) && worst.getDouble(0) < driftCosine) {
-              Similarity.retrainIvfIndex(spark, indexPath, kCells, iters,
-                hier = hier)
-              onRetrain(batchId)
-            }
-          }
-        }
-        } finally batch.unpersist()
+    maintain(vecs, indexPath, checkpoint, trigger, "centroids") { batch =>
+      Similarity.writeIvfIndex(batch, indexPath, kCells, iters, hier = hier)
+      Similarity.rebuildCellFacts(batch.sparkSession, indexPath)
+    } { (batch, batchId) =>
+      val spark = batch.sparkSession
+      // the append folds its per-cell facts in; a missing facts table
+      // (bootstrap/retrain crash window) self-heals inside mergeCellFacts
+      // with one rebuild pass
+      Similarity.appendToIvfIndex(spark, indexPath, batch, updateFacts = true)
+      // O(cells) drift read — facts + centroids, never the corpus
+      val worst = Similarity.ivfDriftFromFacts(spark, indexPath)
+        .agg(min(col("drift_cosine"))).collect()(0)
+      if (!worst.isNullAt(0) && worst.getDouble(0) < driftCosine) {
+        Similarity.retrainIvfIndex(spark, indexPath, kCells, iters, hier = hier)
+        onRetrain(batchId)
       }
-      .start()
+    }
 }

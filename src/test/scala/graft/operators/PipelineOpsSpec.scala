@@ -389,8 +389,8 @@ class PipelineOpsSpec extends SparkTestBase {
     val inline = rows(Similarity.ivfHierTopK(e.filter(col("vec_id") < 50), q, 10,
       nprobe = 2, kCells = 4, iters = 2))
     val path = java.nio.file.Files.createTempDirectory("graft-ivfhier").toString + "/ix"
-    Similarity.writeIvfIndexHier(e.filter(col("vec_id") < 50), path,
-      kCells = 4, iters = 2)
+    Similarity.writeIvfIndex(e.filter(col("vec_id") < 50), path,
+      kCells = 4, iters = 2, hier = true)
     assert(rows(Similarity.ivfStoredTopK(s, path, q, 10, nprobe = 2)) == inline,
       "the flat serve path must answer the hier store bit-equal to inline")
     // full probe ≡ brute force — exactness holds for ANY assignment
@@ -413,8 +413,8 @@ class PipelineOpsSpec extends SparkTestBase {
     // full-corpus assignment always finds children (no crash), and the
     // full-probe exactness hook still holds
     val sampled = java.nio.file.Files.createTempDirectory("graft-ivfhier-s").toString + "/ix"
-    Similarity.writeIvfIndexHier(e, sampled, kCells = 4, iters = 2,
-      sampleN = Some(8))
+    Similarity.writeIvfIndex(e, sampled, kCells = 4, iters = 2,
+      sampleN = Some(8), hier = true)
     val sLeaves = s.read.parquet(s"$sampled/centroids").count().toInt
     assert(rows(Similarity.ivfStoredTopK(s, sampled, q, 10, nprobe = sLeaves)) ==
       rows(Similarity.bruteForceTopK(e, q, 10)),
@@ -424,8 +424,8 @@ class PipelineOpsSpec extends SparkTestBase {
     // the live corpus (same deterministic two-level training)
     Similarity.retrainIvfIndex(s, path, kCells = 4, iters = 2, hier = true)
     val fresh = java.nio.file.Files.createTempDirectory("graft-ivfhier-f").toString + "/ix"
-    Similarity.writeIvfIndexHier(e.filter(col("vec_id") =!= 7L), fresh,
-      kCells = 4, iters = 2)
+    Similarity.writeIvfIndex(e.filter(col("vec_id") =!= 7L), fresh,
+      kCells = 4, iters = 2, hier = true)
     assert(s.read.parquet(s"$path/centroids").collect().map(_.toSeq).toSet ==
       s.read.parquet(s"$fresh/centroids").collect().map(_.toSeq).toSet,
       "hier retrain must train the same leaf model as a fresh hier build")
@@ -460,8 +460,8 @@ class PipelineOpsSpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     val path = java.nio.file.Files.createTempDirectory("graft-ivfhier-rt").toString + "/ix"
-    Similarity.writeIvfIndexHier(e.filter(col("vec_id") < 50), path,
-      kCells = 4, iters = 2)
+    Similarity.writeIvfIndex(e.filter(col("vec_id") < 50), path,
+      kCells = 4, iters = 2, hier = true)
     val nCoarse = s.read.parquet(s"$path/coarse").count().toInt
     val leaves = s.read.parquet(s"$path/centroids").count().toInt
     // probing EVERY coarse cell makes the candidate leaf set per query all

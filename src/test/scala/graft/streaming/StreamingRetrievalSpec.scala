@@ -53,4 +53,34 @@ class StreamingRetrievalSpec extends SparkTestBase {
     assert(answers() == streamed)
     assert(s.read.parquet(s"$idx/corpusstats").collect()(0).getLong(0) == 20L)
   }
+
+  test("an empty first batch builds no BM25 store and the next non-empty " +
+    "batch bootstraps; an empty later batch leaves the serve answers unchanged") {
+    val s = spark
+    import s.implicits._
+    val src = Files.createTempDirectory("graft-sbm25e-src").toString
+    val idx = Files.createTempDirectory("graft-sbm25e").toString + "/idx"
+    val ckpt = Files.createTempDirectory("graft-sbm25e-ckpt").toString
+    val wave = (0 until 12).map(i => (i.toLong, s"cat w$i ${if (i % 2 == 0) "dog" else "bird"}"))
+      .toDF("doc_id", "text")
+    // each drain reads only the files landed since the last one
+    def land(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.coalesce(1).write.mode("append").parquet(src)
+      StreamingRetrieval.indexIngest(s.readStream.schema(wave.schema).parquet(src), idx, ckpt)
+        .awaitTermination()
+    }
+    land(wave.limit(0))
+    assert(!new java.io.File(idx).exists(), "an empty first batch must build no store")
+    land(wave)
+    val queries = Seq((1L, Seq("cat", "bird")), (2L, Seq("dog"))).toDF("query_id", "terms")
+    def answers(p: String) = Retrieval.bm25StoredTopK(s, p, queries, k = 8).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).sorted.toSeq
+    val rebuilt = Files.createTempDirectory("graft-sbm25e-reb").toString
+    Retrieval.writeBm25Index(wave, rebuilt)
+    val built = answers(idx)
+    assert(built == answers(rebuilt), "the first non-empty batch must bootstrap the store")
+    land(wave.limit(0))
+    assert(answers(idx) == built, "an empty later batch must leave the answers unchanged")
+    assert(s.read.parquet(s"$idx/corpusstats").collect()(0).getLong(0) == 12L)
+  }
 }

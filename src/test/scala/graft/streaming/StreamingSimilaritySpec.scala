@@ -155,7 +155,7 @@ class StreamingSimilaritySpec extends SparkTestBase {
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
       idx, ckpt, kCells = 4, iters = 2, hier = true).awaitTermination()
     val batch = Files.createTempDirectory("graft-shier-batch").toString
-    Similarity.writeIvfIndexHier(waveA, batch, kCells = 4, iters = 2)
+    Similarity.writeIvfIndex(waveA, batch, kCells = 4, iters = 2, hier = true)
     Similarity.appendToIvfIndex(s, batch, waveB)
     def res(p: String) = Similarity.ivfStoredTopK(s, p,
       waveA.filter(col("vec_id") < 5), 10, nprobe = 2)
@@ -203,5 +203,40 @@ class StreamingSimilaritySpec extends SparkTestBase {
       "healed facts must equal the full recompute exactly")
     // vectors were NOT double-inserted by the replay
     assert(s.read.parquet(s"$idx/vectors").count() == 40L)
+  }
+
+  test("an empty first batch builds no IVF store and the next non-empty " +
+    "batch bootstraps; an empty later batch leaves the serve answers unchanged") {
+    val s = spark
+    import s.implicits._
+    def vecs(ids: Range) = ids.map { i =>
+      (i.toLong, (0 until Similarity.Dim).map(j =>
+        math.sin(i * 31 + j).toFloat).toArray)
+    }.toDF("vec_id", "embedding")
+    val src = Files.createTempDirectory("graft-sempty-src").toString
+    val idx = Files.createTempDirectory("graft-sempty").toString + "/idx"
+    val ckpt = Files.createTempDirectory("graft-sempty-ckpt").toString
+    val waveA = vecs(0 until 30)
+    val schema = waveA.schema
+    // each drain reads only the files landed since the last one
+    def land(df: org.apache.spark.sql.DataFrame): Unit = {
+      df.coalesce(1).write.mode("append").parquet(src)
+      StreamingSimilarity.ivfIngest(
+        s.readStream.schema(schema).parquet(src), idx, ckpt, kCells = 4, iters = 2)
+        .awaitTermination()
+    }
+    land(waveA.limit(0))
+    assert(!new java.io.File(idx).exists(), "an empty first batch must build no store")
+    land(waveA)
+    val q = waveA.filter(col("vec_id") < 5)
+    def res(p: String) = Similarity.ivfStoredTopK(s, p, q, 10, nprobe = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val batch = Files.createTempDirectory("graft-sempty-batch").toString
+    Similarity.writeIvfIndex(waveA, batch, kCells = 4, iters = 2)
+    val built = res(idx)
+    assert(built == res(batch), "the first non-empty batch must bootstrap the store")
+    land(waveA.limit(0))
+    assert(res(idx) == built, "an empty later batch must leave the answers unchanged")
+    assert(s.read.parquet(s"$idx/vectors").count() == 30L)
   }
 }

@@ -38,6 +38,11 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
+    unknown = sorted(only - set(oracle))
+    if unknown:
+        # a misspelled name must fail the check, never shrink it to nothing
+        print(f"unknown query names: {', '.join(unknown)}")
+        sys.exit(2)
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
