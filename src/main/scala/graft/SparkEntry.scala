@@ -7141,7 +7141,8 @@ object SparkEntry {
    * one block, so a serving-plan regression can hide inside build noise
    * between rounds; these twins open a PREBUILT store ([[prebuilt]]
    * builds on the first call only) and time the fixed serve batch alone
-   * — the per-round bench analog of the `graft.ProbeServe` curves. Same
+   * — the per-round bench analog of the serve curves in
+   * `docs/BENCH_NOTES.md` ("Round 14 serve curves"). Same
    * oracles as their stored twins: the store changes WHEN it is built,
    * never what it answers.
    */
@@ -7578,7 +7579,8 @@ object SparkEntry {
     // Lloyd trains on the deterministic 64-vector hash sample (oracle-
     // reproducible, unlike an RNG sample), the FULL corpus assigns
     // through the sampled model; training cost stops scaling with the
-    // corpus (ProbeScale pins the build curve) ---------------------------
+    // corpus (`docs/BENCH_NOTES.md`, "Round 13 bounded-sample build
+    // probe", records the build curve) ------------------------------------
     ("knn_ivf_sampled", (s: SparkSession, d: String) => {
       val e = embs(s, d)
       Similarity.ivfKmeansSampledTopK(e, e.filter(col("vec_id") < 10), 10,
@@ -7626,6 +7628,15 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allDefs.map { case (n, f, _) => n -> f }.toMap
+
+  /** Throws, naming every one, if any of `names` is not in [[queries]]:
+    * a misspelt name must fail a run, never shrink it silently. Needs no
+    * session, so a main can check its arguments before Spark starts. */
+  def requireKnown(names: Iterable[String]): Unit = {
+    val unknown = names.toSeq.distinct.filterNot(queries.contains).sorted
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(s"unknown query names: ${unknown.mkString(", ")}")
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

@@ -249,10 +249,8 @@ object MetricsOps {
    * Verification frame for the P² sketch: per bucket, the EXACT A1 stats
    * (incl. exact p90/p99/median) plus the sketch's estimates (`sk_*`) and
    * each estimate's realized rank — the fraction of the bucket at or
-   * below it (`r90`/`r99`/`r50`). Shared by the accuracy-banded oracle
-   * query (gauge_stats_p2sketch) and the band-calibration probe
-   * (ProbeP2Band) so the enforced band and the measured envelope can
-   * never desynchronize.
+   * below it (`r90`/`r99`/`r50`). The accuracy-banded oracle query
+   * (gauge_stats_p2sketch) enforces its band on these realized ranks.
    */
   def p2SketchAccuracy(dp: DataFrame, b: Buckets,
                        valueCol: String = "n_value"): DataFrame = {

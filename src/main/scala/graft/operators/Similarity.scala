@@ -224,8 +224,9 @@ object Similarity {
    * bucket's files — 1/2^numPlanes of the corpus in expectation — which
    * is the entire point of persisting the bucketing. Size `numPlanes`
    * so a bucket holds at least a parquet row-group of vectors: the
-   * ProbeServe `srp-sc` row shows that once partitions drop below that
-   * floor (thousands of 2-vector directories), listing overhead swamps
+   * `srp-sc` row (`docs/BENCH_NOTES.md`, "SRP store serve curves") shows
+   * that once partitions drop below that floor (thousands of 2-vector
+   * directories), listing overhead swamps
    * the data saved — planes ∝ log₂(corpus) is the 100 TB rule, a fixed
    * small plane count the small-corpus one. Takedown reuses
    * [[deleteFromIvfIndex]] verbatim (same vectors/deleted_vecs layout);
@@ -838,8 +839,9 @@ object Similarity {
   /** Write cell-assigned rows partitioned by `cell`, repartitioned on it
     * first (IndexStore primitive 3): file count ∝ cells, not tasks ×
     * cells — measured 3x serve inflation at 64 cells without it
-    * (ProbeServe). `mode` is overwrite for a build, append for an append,
-    * and errorifexists (Spark's default) inside a swap unit. */
+    * (`docs/BENCH_NOTES.md`, "Round-10 serving-latency profile"). `mode`
+    * is overwrite for a build, append for an append, and errorifexists
+    * (Spark's default) inside a swap unit. */
   private def writeCells(rows: DataFrame, dir: String, mode: String): Unit =
     rows.repartition(col("cell")).write.mode(mode).partitionBy("cell").parquet(dir)
 
@@ -963,8 +965,9 @@ object Similarity {
    * Hier-ROUTED top-k over a `writeIvfIndex(hier = true)` store — the
    * serve counterpart of the √cells build: [[ivfStoredTopK]] scores every
    * leaf centroid per query (O(cells) dots — fine at fixed cells, but
-   * with cells ∝ corpus that flat probe is serve-side superlinear,
-   * ProbeServe's `ivf-sc` row), whereas this path probes through
+   * with cells ∝ corpus that flat probe is serve-side superlinear, the
+   * `ivf-sc` row of `docs/BENCH_NOTES.md`, "Round 14 continuation:
+   * hier-ROUTED serving"), whereas this path probes through
    * [[routedProbes]] — O(2·√cells) per query — and then runs the same
    * [[probedServe]] finish.
    *

@@ -183,18 +183,8 @@ object Sketches {
    * hash-engine-specific, so only the exact values and the band boolean
    * cross the oracle boundary (the cms/hll precedent above).
    */
-  /** Debug frame behind [[sourceOverlapKMV]]'s band constant: per pair,
-    * the raw estimate, the exact value, and the deviation in σ units. */
-  private[graft] def sourceOverlapDebug(docs: DataFrame, shingleK: Int,
-                                        k: Int): DataFrame =
-    sourceOverlapKMV(docs, shingleK, k, debug = true)
-
   def sourceOverlapKMV(docs: DataFrame, shingleK: Int = 3,
-                       k: Int = 256): DataFrame =
-    sourceOverlapKMV(docs, shingleK, k, debug = false)
-
-  private def sourceOverlapKMV(docs: DataFrame, shingleK: Int,
-                               k: Int, debug: Boolean): DataFrame = {
+                       k: Int = 256): DataFrame = {
     require(k > 0, "k must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
@@ -233,13 +223,7 @@ object Sketches {
         col("src_a") < col("src_b"))
       .withColumn("kmv_est", kmvJaccard(col("sig_a"), col("sig_b")))
       .select(col("src_a"), col("src_b"), col("kmv_est"))
-    val joined = exact.join(est, Seq("src_a", "src_b"))
-    if (debug)
-      joined.select(col("src_a"), col("src_b"), col("jaccard"), col("kmv_est"),
-        (abs(col("kmv_est") - col("jaccard")) /
-          sqrt(greatest(col("jaccard") * (lit(1.0) - col("jaccard")), lit(1e-12))
-            / lit(k.toDouble))).as("abs_sigma"))
-    else joined
+    exact.join(est, Seq("src_a", "src_b"))
       .select(col("src_a"), col("src_b"),
         col("n_a"), col("n_b"), col("n_shared"),
         round(col("jaccard"), 6).as("jaccard"),

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.SparkTestBase
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftTestShims}
+import org.apache.spark.GraftBus
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -24,9 +25,9 @@ class CellStoreJobsSpec extends SparkTestBase {
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
     }
-    GraftTestShims.drainListeners(spark)
+    GraftBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
-    try { f; GraftTestShims.drainListeners(spark); n.get }
+    try { f; GraftBus.drain(spark.sparkContext); n.get }
     finally spark.sparkContext.removeSparkListener(l)
   }
 

@@ -3,6 +3,7 @@ package graft.storage
 import graft.{GraftSession, SparkTestBase}
 import graft.operators.{Dedup, Retrieval}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.GraftTestShims
 import java.nio.file.Files
 
@@ -31,9 +32,9 @@ class StoreListingSpec extends SparkTestBase {
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
     }
-    GraftTestShims.drainListeners(spark)
+    GraftBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
-    try { f; GraftTestShims.drainListeners(spark); n.get }
+    try { f; GraftBus.drain(spark.sparkContext); n.get }
     finally spark.sparkContext.removeSparkListener(l)
   }
 

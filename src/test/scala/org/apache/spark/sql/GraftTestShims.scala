@@ -3,10 +3,6 @@ package org.apache.spark.sql
 /** Test access to Spark internals that the public API does not expose. */
 object GraftTestShims {
 
-  /** Block until every posted listener event has been delivered. */
-  def drainListeners(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
-
   /** The settings a session builder will apply, by key. The field is
     * protected in Scala but public in bytecode, so reflection reads it. */
   def builderOptions(b: SparkSessionBuilder): Map[String, String] =
