@@ -3,7 +3,7 @@ package graft
 import graft.model._
 import graft.operators._
 import graft.sources.EventsAdapter
-import graft.storage.GraftStorage
+import graft.storage.{GraftStorage, IndexStore, StoreTables}
 import graft.tagquery.TagQueryParser
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -3740,8 +3740,8 @@ object SparkEntry {
         e.filter(col("vec_id") >= 100 && col("vec_id") < 110))
       Similarity.deleteFromIvfIndex(s, path,
         e.filter(col("vec_id") % 97 === 0).select("vec_id"))
-      val nCoarse = s.read.parquet(s"$path/coarse").count().toInt
-      val nLeaves = s.read.parquet(s"$path/centroids").count().toInt
+      val nCoarse = IndexStore.table(s, path, StoreTables.Cells.Coarse).count().toInt
+      val nLeaves = IndexStore.table(s, path, StoreTables.Cells.Centroids).count().toInt
       Similarity.ivfStoredTopKHier(s, path, e.filter(col("vec_id") < 10), 10,
         nprobeCoarse = nCoarse, nprobe = nLeaves)
         .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
@@ -3808,8 +3808,8 @@ object SparkEntry {
         e.filter(col("vec_id") >= 100 && col("vec_id") < 110))
       Similarity.deleteFromIvfIndex(s, path,
         e.filter(col("vec_id") % 97 === 0).select("vec_id"))
-      val nCoarse = s.read.parquet(s"$path/coarse").count().toInt
-      val nLeaves = s.read.parquet(s"$path/centroids").count().toInt
+      val nCoarse = IndexStore.table(s, path, StoreTables.Cells.Coarse).count().toInt
+      val nLeaves = IndexStore.table(s, path, StoreTables.Cells.Centroids).count().toInt
       Similarity.ivfPqStoredTopKHier(s, path, e.filter(col("vec_id") < 10), 10,
         nprobeCoarse = nCoarse, nprobe = nLeaves, shortlist = 1 << 20)
         .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
@@ -3841,8 +3841,8 @@ object SparkEntry {
         e.filter(col("vec_id") >= 100 && col("vec_id") < 110))
       Similarity.deleteFromIvfIndex(s, path,
         e.filter(col("vec_id") % 97 === 0).select("vec_id"))
-      val nCoarse = s.read.parquet(s"$path/coarse").count().toInt
-      val nLeaves = s.read.parquet(s"$path/centroids").count().toInt
+      val nCoarse = IndexStore.table(s, path, StoreTables.Cells.Coarse).count().toInt
+      val nLeaves = IndexStore.table(s, path, StoreTables.Cells.Centroids).count().toInt
       Similarity.pcaIvfStoredTopKHier(s, path, e.filter(col("vec_id") < 10), 10,
         nprobeCoarse = nCoarse, nprobe = nLeaves, shortlist = 1 << 20)
         .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
@@ -4649,7 +4649,7 @@ object SparkEntry {
         stream, s"$base/idx", s"$base/ckpt", kCells = 4, iters = 2,
         hier = true)
       q.awaitTermination()
-      val leaves = s.read.parquet(s"$base/idx/centroids").count().toInt
+      val leaves = IndexStore.table(s, s"$base/idx", StoreTables.Cells.Centroids).count().toInt
       Similarity.ivfStoredTopK(s, s"$base/idx", e.filter(col("vec_id") < 10),
         10, nprobe = leaves)
         .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"))
@@ -5251,7 +5251,7 @@ object SparkEntry {
       Dedup.writeNearDupIndex(dd.filter(col("doc_id") >= 50), path, shingleK = 3)
       Dedup.appendToNearDupIndex(dd.filter(col("doc_id") < 50), path,
         shingleK = 3, threshold = 0.8, dropMatched = true).collect()
-      s.read.parquet(s"$path/sizes").select(col("doc_id"))
+      IndexStore.table(s, path, StoreTables.NearDup.Sizes).select(col("doc_id"))
         .filter(col("doc_id") < 50)
     },
       Some("""WITH w AS (SELECT doc_id, string_split(lower(text), ' ') AS ws FROM documents),

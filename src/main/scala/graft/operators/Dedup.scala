@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.storage.IndexStore
+import graft.storage.StoreTables.NearDup
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -399,17 +401,14 @@ object Dedup {
     // a REBUILD at a path whose previous store had pending deletes must
     // not inherit them — leftover tombstones would screen docs present
     // in the NEW corpus out of every lookup
-    graft.storage.IndexStore.clearSideTables(docs.sparkSession, path, Seq("deleted_docs"))
+    IndexStore.clearSideTables(docs.sparkSession, path, Seq("deleted_docs"))
     writeIndexTables(docs, path, shingleK, bands, rowsPerBand, overwrite = true)
     // build params persist with the store: lookups and appends with
     // mismatched parameters would compute incompatible hashes and
     // silently return near-empty results — validated instead
-    graft.storage.IndexStore.writeMeta(docs.sparkSession, path,
-      metaFields(shingleK, bands, rowsPerBand))
+    IndexStore.writeMeta(docs.sparkSession, path,
+      NearDup.Meta.row(shingleK, bands, rowsPerBand))
   }
-
-  private def metaFields(shingleK: Int, bands: Int, rowsPerBand: Int): Seq[(String, Int)] =
-    Seq("shingle_k" -> shingleK, "bands" -> bands, "rows_per_band" -> rowsPerBand)
 
   /** The four-table write sequence shared by build and append (one
     * shingle-hash pass feeds all four; only the SaveMode differs — a
@@ -430,7 +429,7 @@ object Dedup {
         // write task fans out a file into every bucket directory
         // (tasks×buckets small files; measured to dominate build cost);
         // with it each bucket's rows land together (file count ∝ buckets)
-        def writeBands(): Unit = graft.storage.IndexStore.writeBucketed(
+        def writeBands(): Unit = IndexStore.writeBucketed(
           lshBands(sig, bands, rowsPerBand)
             .withColumn("bucket", pmod(col("band_hash"), lit(IndexBuckets.toLong)).cast("int")),
           path, "bands", overwrite)
@@ -444,7 +443,7 @@ object Dedup {
           // caller's meta write after this call is the commit marker
           // (requireIndexParams refuses a store whose meta never landed)
           sig.count() // materialize BEFORE the concurrent writers race to compute it
-          graft.storage.IndexStore.inParallel(
+          IndexStore.inParallel(
             Seq(() => writeBands(), () => writeSigs(), () => writeShingles(),
               () => writeSizes()))
         }
@@ -457,7 +456,7 @@ object Dedup {
           // strictly LAST, so a half-landed batch is always re-applied by
           // the replay rather than screened away
           sig.count() // materialize before the concurrent writers race
-          graft.storage.IndexStore.inParallel(
+          IndexStore.inParallel(
             Seq(() => writeBands(), () => writeSigs(), () => writeShingles()))
           writeSizes()
         }
@@ -490,11 +489,11 @@ object Dedup {
       dead.fold(df)(d => df.join(broadcast(d), Seq("doc_id"), "left_anti"))
     // the four rewrites are independent (disjoint tables, each behind its
     // own swap; `dead` is checkpointed above) — run concurrently (§2.6)
-    graft.storage.IndexStore.inParallel(
-      (() => graft.storage.IndexStore.compactBucketed(spark, path, "bands", purge)) +:
+    IndexStore.inParallel(
+      (() => IndexStore.compactBucketed(spark, path, "bands", purge)) +:
       Seq("signatures", "shingles", "sizes").map(t =>
-        () => graft.storage.IndexStore.compactFlat(spark, path, t, purge)))
-    dead.foreach(_ => graft.storage.IndexStore.dropDeletes(spark, path, "deleted_docs"))
+        () => IndexStore.compactFlat(spark, path, t, purge)))
+    dead.foreach(_ => IndexStore.dropDeletes(spark, path, "deleted_docs"))
   }
 
   /**
@@ -520,21 +519,21 @@ object Dedup {
    */
   def deleteFromNearDupIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                              docIds: DataFrame): Unit =
-    graft.storage.IndexStore.appendDeletes(spark, path, "deleted_docs",
-      docIds, registry = "sizes", Seq("doc_id"))
+    IndexStore.appendDeletes(spark, path, NearDup.DeletedDocs,
+      docIds, registry = NearDup.Sizes, Seq("doc_id"))
 
   /** Pending doc tombstones, or None when none exist (the cheap common
     * case — serving plans stay anti-join-free). */
   private def deletedDocs(spark: org.apache.spark.sql.SparkSession,
                           path: String): Option[DataFrame] =
-    graft.storage.IndexStore.pendingDeletes(spark, path, "deleted_docs", Seq("doc_id"))
+    IndexStore.pendingDeletes(spark, path, NearDup.DeletedDocs, Seq("doc_id"))
 
   /** Fail fast when a caller's parameters disagree with the store's —
     * mismatched shingleK/bands/rowsPerBand would hash into nothing. */
   private def requireIndexParams(spark: org.apache.spark.sql.SparkSession, path: String,
                                  shingleK: Int, bands: Int, rowsPerBand: Int): Unit =
-    graft.storage.IndexStore.requireMeta(spark, path,
-      metaFields(shingleK, bands, rowsPerBand))
+    IndexStore.requireMeta(spark, path,
+      NearDup.Meta.row(shingleK, bands, rowsPerBand))
 
   /**
    * Incremental index maintenance — screen an arriving batch against the
@@ -593,18 +592,18 @@ object Dedup {
           df.join(broadcast(revived), Seq("doc_id"), "left_anti")
         // four independent table rewrites (compactNearDupIndex's shape) —
         // concurrent; the tombstone clear stays LAST (crash discipline)
-        graft.storage.IndexStore.inParallel(
-          (() => graft.storage.IndexStore.compactBucketed(spark, path, "bands", purge)) +:
+        IndexStore.inParallel(
+          (() => IndexStore.compactBucketed(spark, path, "bands", purge)) +:
           Seq("signatures", "shingles", "sizes").map(t =>
-            () => graft.storage.IndexStore.compactFlat(spark, path, t, purge)))
-        graft.storage.IndexStore.clearDeletes(spark, path, "deleted_docs",
+            () => IndexStore.compactFlat(spark, path, t, purge)))
+        IndexStore.clearDeletes(spark, path, NearDup.DeletedDocs,
           revived, Seq("doc_id"))
       }
     }
     // screen first — materialize the decision rows before mutating the store
     val screened = nearDupLookup(spark, path, batch, shingleK, threshold,
       bands, rowsPerBand).localCheckpoint(true)
-    val fresh = graft.storage.IndexStore.screenFresh(batch, path, "sizes", Seq("doc_id"))
+    val fresh = IndexStore.screenFresh(batch, path, NearDup.Sizes, Seq("doc_id"))
     val admitted =
       if (dropMatched)
         fresh.join(screened.select(col("query_id").as("doc_id")).distinct(),
@@ -660,7 +659,7 @@ object Dedup {
     // 2. candidate generation — the query band set (bands·|queries| rows)
     // BROADCASTS, which both sides the hash join correctly and lets the
     // DPP rule reuse the broadcast to prune the banded store's buckets
-    val candRaw = spark.read.parquet(s"$path/bands")
+    val candRaw = IndexStore.table(spark, path, NearDup.Bands)
       .select(col("bucket"), col("band"), col("band_hash"), col("doc_id").as("corpus_id"))
       .join(broadcast(qbands.select(col("bucket"), col("band"), col("band_hash"),
         col("doc_id").as("query_id"))), Seq("bucket", "band", "band_hash"))
@@ -675,7 +674,7 @@ object Dedup {
         Seq("corpus_id"), "left_anti"))
 
     // 3. estimate-prune (unbiased Jaccard estimate from component equality)
-    val storedSig = spark.read.parquet(s"$path/signatures")
+    val storedSig = IndexStore.table(spark, path, NearDup.signatures(numPerms))
     val qs = qsig.select(col("doc_id").as("query_id") +:
       (0 until numPerms).map(i => col(s"mh$i").as(s"q_m$i")): _*)
     val cs = storedSig.select(col("doc_id").as("corpus_id") +:
@@ -705,7 +704,7 @@ object Dedup {
     // 4. exact verify — corpus shingles first cut to candidate docs by a
     // broadcast semi-join (candidate ids are result-sized)
     val candIds = pruned.select(col("corpus_id").as("cand_id")).distinct()
-    val storedSh = spark.read.parquet(s"$path/shingles")
+    val storedSh = IndexStore.table(spark, path, NearDup.Shingles)
     val candSh = storedSh
       .join(broadcast(candIds), storedSh("doc_id") === candIds("cand_id"), "left_semi")
       .select(col("doc_id").as("corpus_id"), col("h"))
@@ -718,7 +717,7 @@ object Dedup {
       .groupBy(col("query_id"), col("corpus_id")).agg(countDistinct(col("h")).as("inter"))
     val qn = qsh.groupBy(col("doc_id")).agg(count(lit(1)).as("qn"))
       .withColumnRenamed("doc_id", "query_id")
-    val cn = spark.read.parquet(s"$path/sizes")
+    val cn = IndexStore.table(spark, path, NearDup.Sizes)
       .select(col("doc_id").as("corpus_id"), col("n").as("cn"))
     inter
       .join(broadcast(qn), Seq("query_id"))

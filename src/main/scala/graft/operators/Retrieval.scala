@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.storage.IndexStore
+import graft.storage.StoreTables.Bm25
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -133,17 +135,17 @@ object Retrieval {
   def writeBm25Index(docs: DataFrame, path: String): Unit = {
     val spark = docs.sparkSession
     // a REBUILD at a path whose previous store had pending deletes must
-    // not inherit them ([[graft.storage.IndexStore.clearSideTables]]); a
+    // not inherit them ([[IndexStore.clearSideTables]]); a
     // store from the older four-table layout also leaves a `tokenstats`
     // table that nothing reads any more
-    graft.storage.IndexStore.clearSideTables(spark, path, Seq("deleted_docs", "tokenstats"))
+    IndexStore.clearSideTables(spark, path, Seq("deleted_docs", "tokenstats"))
     // three independent table writes (disjoint output paths, no ordering
     // constraint) — concurrent (§2.6); META lands last, below. The
     // postings frame has one reader, so nothing is cached.
-    graft.storage.IndexStore.inParallel(Seq(
+    IndexStore.inParallel(Seq(
       // bucketed write via the shared lifecycle (file count ∝ buckets,
       // not tasks×buckets — IndexStore primitive 3)
-      () => graft.storage.IndexStore.writeBucketed(
+      () => IndexStore.writeBucketed(
         postingsFor(docs).withColumn("bucket", tokenBucket(col("token"))),
         path, "postings", overwrite = true),
       () => docs.agg(count(lit(1)).cast("long").as("n_docs"),
@@ -155,7 +157,7 @@ object Retrieval {
     // meta lands LAST, never concurrently: it is the streaming
     // maintainer's bootstrap-vs-append discriminator — its existence
     // must imply every table landed
-    graft.storage.IndexStore.writeMeta(spark, path, Seq("buckets" -> IndexBuckets))
+    IndexStore.writeMeta(spark, path, Bm25.Meta.row(IndexBuckets))
   }
 
   /**
@@ -173,7 +175,7 @@ object Retrieval {
    */
   def appendToBm25Index(spark: org.apache.spark.sql.SparkSession, path: String,
                         batch: DataFrame): Unit = {
-    graft.storage.IndexStore.requireMeta(spark, path, Seq("buckets" -> IndexBuckets))
+    IndexStore.requireMeta(spark, path, Bm25.Meta.row(IndexBuckets))
     // revival: a batch re-registering a DELETED doc purges the id's stale
     // rows first — postings/docstats by anti-join, then corpusstats
     // REBUILDS from the repaired docstats (a corpus aggregate; a targeted
@@ -188,7 +190,7 @@ object Retrieval {
         .join(broadcast(d), Seq("doc_id"), "left_semi").localCheckpoint()
       if (!revived.isEmpty) {
         purgeDocs(spark, path, revived)
-        graft.storage.IndexStore.clearDeletes(spark, path, "deleted_docs",
+        IndexStore.clearDeletes(spark, path, Bm25.DeletedDocs,
           revived, Seq("doc_id"))
       }
     }
@@ -200,7 +202,7 @@ object Retrieval {
     // and Spark's refreshByPath on that append would RECOMPUTE it against
     // the post-append listing (anti-joining the batch away → empty
     // postings). Lineage truncation makes the materialized batch immune.
-    val fresh = graft.storage.IndexStore.screenFresh(batch, path, "docstats", Seq("doc_id"))
+    val fresh = IndexStore.screenFresh(batch, path, Bm25.DocStats, Seq("doc_id"))
       .select(col("doc_id"), col("text"), size(words).cast("long").as("dl"))
       .localCheckpoint()
     try {
@@ -208,7 +210,7 @@ object Retrieval {
         coalesce(sum(col("dl")), lit(0L)).as("dl_sum")).collect()(0)
       // a replayed batch screens to nothing and writes nothing
       if (add.getAs[Long]("n_docs") > 0) {
-        val old = spark.read.parquet(s"$path/corpusstats").collect()(0)
+        val old = IndexStore.table(spark, path, Bm25.CorpusStats).collect()(0)
         // The replay-idempotency screen (docstats) is written FIRST: a
         // crash anywhere after this line makes the replayed batch a full
         // no-op, so postings can never be double-applied. The failure mode
@@ -219,7 +221,7 @@ object Retrieval {
         // tf and df on replay.
         fresh.select(col("doc_id"), col("dl"))
           .write.mode("append").parquet(s"$path/docstats")
-        graft.storage.IndexStore.writeBucketed(
+        IndexStore.writeBucketed(
           postingsFor(fresh).withColumn("bucket", tokenBucket(col("token"))),
           path, "postings", overwrite = false)
         // corpus stats: one stored row + one batch row → new exact totals
@@ -228,7 +230,7 @@ object Retrieval {
         // rename and its recovery discipline restores a copy stranded at
         // .corpusstats.old by a crash between the two renames
         import spark.implicits._
-        graft.storage.AtomicSwap.swapTable(spark, path, "corpusstats")(_ =>
+        graft.storage.AtomicSwap.swapTable(spark, path, Bm25.CorpusStats)(_ =>
           Seq((old.getAs[Long]("n_docs") + add.getAs[Long]("n_docs"),
               old.getAs[Long]("dl_sum") + add.getAs[Long]("dl_sum")))
             .toDF("n_docs", "dl_sum")
@@ -256,15 +258,14 @@ object Retrieval {
    * lands it.
    */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    import graft.storage.IndexStore
-    IndexStore.requireMeta(spark, path, Seq("buckets" -> IndexBuckets))
+    IndexStore.requireMeta(spark, path, Bm25.Meta.row(IndexBuckets))
     // orphan detection runs against the PRE-compaction store: docs the
     // append crash window registered without landing their postings
     // (pre-swap snapshot, lineage truncated so the swaps below cannot
     // invalidate or recompute it against the post-swap store)
-    val postedIds = spark.read.parquet(s"$path/postings")
+    val postedIds = IndexStore.table(spark, path, Bm25.Postings)
       .select(col("doc_id")).distinct()
-    val orphanIds = spark.read.parquet(s"$path/docstats")
+    val orphanIds = IndexStore.table(spark, path, Bm25.DocStats)
       .filter(col("dl") > 0)
       .join(postedIds, Seq("doc_id"), "left_anti")
       .select(col("doc_id")).localCheckpoint()
@@ -299,8 +300,8 @@ object Retrieval {
     * counts it from the purged postings). Cost is one aggregate over
     * docstats. */
   private def rebuildStats(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.storage.AtomicSwap.swapTable(spark, path, "corpusstats")(_ =>
-      spark.read.parquet(s"$path/docstats")
+    graft.storage.AtomicSwap.swapTable(spark, path, Bm25.CorpusStats)(_ =>
+      IndexStore.table(spark, path, Bm25.DocStats)
         .agg(count(lit(1)).cast("long").as("n_docs"),
           coalesce(sum(col("dl")), lit(0L)).as("dl_sum"))
         .coalesce(1).write.parquet(s"$path/.corpusstats.compact"))
@@ -312,9 +313,9 @@ object Retrieval {
                         ids: DataFrame): Unit = {
     def purge(df: DataFrame): DataFrame =
       df.join(broadcast(ids), Seq("doc_id"), "left_anti")
-    graft.storage.IndexStore.inParallel(Seq(
-      () => graft.storage.IndexStore.compactBucketed(spark, path, "postings", purge),
-      () => graft.storage.IndexStore.compactFlat(spark, path, "docstats", purge)))
+    IndexStore.inParallel(Seq(
+      () => IndexStore.compactBucketed(spark, path, "postings", purge),
+      () => IndexStore.compactFlat(spark, path, "docstats", purge)))
     rebuildStats(spark, path)
   }
 
@@ -322,7 +323,7 @@ object Retrieval {
     * case — serving plans stay anti-join-free). */
   private def deletedDocs(spark: org.apache.spark.sql.SparkSession,
                           path: String): Option[DataFrame] =
-    graft.storage.IndexStore.pendingDeletes(spark, path, "deleted_docs", Seq("doc_id"))
+    IndexStore.pendingDeletes(spark, path, Bm25.DeletedDocs, Seq("doc_id"))
 
   /**
    * Takedown / decontamination removal from the stored BM25 index — the
@@ -340,9 +341,9 @@ object Retrieval {
    */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession, path: String,
                           docIds: DataFrame): Unit = {
-    graft.storage.IndexStore.requireMeta(spark, path, Seq("buckets" -> IndexBuckets))
-    graft.storage.IndexStore.appendDeletes(spark, path, "deleted_docs",
-      docIds, registry = "docstats", Seq("doc_id"))
+    IndexStore.requireMeta(spark, path, Bm25.Meta.row(IndexBuckets))
+    IndexStore.appendDeletes(spark, path, Bm25.DeletedDocs,
+      docIds, registry = Bm25.DocStats, Seq("doc_id"))
   }
 
   /**
@@ -369,7 +370,7 @@ object Retrieval {
   def bm25StoredTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, k: Int,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    graft.storage.IndexStore.requireMeta(spark, path, Seq("buckets" -> IndexBuckets))
+    IndexStore.requireMeta(spark, path, Bm25.Meta.row(IndexBuckets))
     val qterms = queries
       .select(col("query_id"), explode(array_distinct(col("terms"))).as("token"))
     val qtb = qterms.select(col("token")).distinct()
@@ -377,7 +378,7 @@ object Retrieval {
       .collect() // (token, bucket)
     val buckets = qtb.map(_.getInt(1)).distinct.sorted.toSeq
     val tokens = qtb.map(_.getString(0)).sorted.toSeq
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = IndexStore.table(spark, path, Bm25.Postings)
       .filter(col("bucket").isin(buckets: _*) && col("token").isin(tokens: _*))
       .select(col("doc_id"), col("token"), col("tf"), col("dl"))
     // df counts every stored posting of the token, BEFORE the tombstone
@@ -391,7 +392,7 @@ object Retrieval {
     // plan untouched
     val tf = deletedDocs(spark, path).fold(postings)(d =>
       postings.join(broadcast(d), Seq("doc_id"), "left_anti"))
-    val stats = spark.read.parquet(s"$path/corpusstats")
+    val stats = IndexStore.table(spark, path, Bm25.CorpusStats)
       .select(col("n_docs"),
         (col("dl_sum").cast("double") / col("n_docs")).as("avgdl"))
     scoreAndRank(tf.join(broadcast(dfreq), Seq("token")), stats, qterms, k, k1, b)

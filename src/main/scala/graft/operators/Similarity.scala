@@ -1,6 +1,8 @@
 package graft.operators
 
 import graft.functions.GraftFunctions
+import graft.storage.{IndexStore, StoreTable}
+import graft.storage.StoreTables.{Cells, Srp}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
@@ -242,7 +244,7 @@ object Similarity {
       val planes = srpPlanes(corpus, numPlanes)
       // the two tables derive from the driver-resident plane model and
       // land at disjoint paths inside the same swap unit — concurrent
-      graft.storage.IndexStore.inParallel(Seq(
+      IndexStore.inParallel(Seq(
         () => corpus.select(col("vec_id"), col("embedding"))
           .withColumn("bucket", srpBucket(planes, "embedding"))
           .repartition(col("bucket")) // file discipline, as in writeIvfIndex
@@ -256,7 +258,7 @@ object Similarity {
     * — model-sized, like [[readCentroids]]). */
   private def readSrpPlanes(spark: org.apache.spark.sql.SparkSession,
                             path: String): Seq[(Int, Array[Double])] =
-    spark.read.parquet(s"$path/planes").collect()
+    IndexStore.table(spark, path, Srp.Planes).collect()
       .map(r => (r.getAs[Int]("pid"),
         r.getSeq[Double](r.fieldIndex("plane")).toArray))
       .sortBy(_._1).toSeq
@@ -287,10 +289,10 @@ object Similarity {
    */
   def compactSrpIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val dead = deletedVecs(spark, path).map(_.localCheckpoint())
-    graft.storage.IndexStore.compactBucketed(spark, path, "vectors",
+    IndexStore.compactBucketed(spark, path, "vectors",
       df => dead.fold(df)(d => df.join(broadcast(d), Seq("vec_id"), "left_anti")),
       partCol = "bucket")
-    dead.foreach(_ => graft.storage.IndexStore.dropDeletes(spark, path, "deleted_vecs"))
+    dead.foreach(_ => IndexStore.dropDeletes(spark, path, "deleted_vecs"))
   }
 
   /**
@@ -310,15 +312,13 @@ object Similarity {
       .withColumnRenamed("nrm", "qv_nrm")
       .withColumn("bucket", srpBucket(planes, "qv"))
       .localCheckpoint() // request-sized; feeds the bucket collect + join
-    // literal type matches the inferred partition-column type (int for
-    // small bucket values) so the IN stays a plain partition filter —
-    // a cast on the COLUMN would block partition pruning
+    // literals of the declared partition type, so the IN stays a plain
+    // partition filter — a cast on the COLUMN would block pruning
+    val narrow = planes.size < 32
     val buckets: Seq[Any] = q.select("bucket").distinct().collect()
-      .map(_.getLong(0)).map(b => if (b.isValidInt) b.toInt else b).toSeq
-    val vecs = deleteScreen(spark, path)(
-      spark.read.parquet(s"$path/vectors")
-        .where(col("bucket").isin(buckets: _*))
-        .withColumn("bucket", col("bucket").cast("long")))
+      .map(_.getLong(0)).map(b => if (narrow) b.toInt else b).toSeq
+    val vecs = deleteScreen(spark, path)(IndexStore.table(spark, path, Srp.vectors(planes.size))
+      .where(col("bucket").isin(buckets: _*)).withColumn("bucket", col("bucket").cast("long")))
     val c = withNorm(vecs.select(col("bucket"), col("vec_id").as("neighbor_id"),
       dvec("embedding").as("cv")), "cv")
       .withColumnRenamed("nrm", "cv_nrm")
@@ -773,17 +773,13 @@ object Similarity {
   /** The persisted routing model of a hier store, or None for a flat
     * store (the `coarse/` side table is the discriminator). */
   private def hierModelOf(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Option[Routing] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/coarse")
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else {
-      val rows = spark.read.parquet(s"$path/coarse")
-        .select("coarse", "centroid", "k_child").collect()
+                          path: String): Option[Routing] =
+    IndexStore.tableIfPresent(spark, path, Cells.Coarse).map { t =>
+      val rows = t.collect()
       val coarse = rows.map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
         .sortBy(_._1).toSeq
-      Some((coarse, rows.head.getInt(2)))
+      (coarse, rows.head.getInt(2))
     }
-  }
 
   // ------------------------------------------------------------------
   // persisted IVF index — build once, serve partition-pruned queries
@@ -823,11 +819,11 @@ object Similarity {
   }
 
   /** A rebuild at a path must not inherit the previous store's side
-    * tables ([[graft.storage.IndexStore.clearSideTables]]): its pending
+    * tables ([[IndexStore.clearSideTables]]): its pending
     * deletes, its drift facts, or a routing model — a stale `coarse`
     * beside a new flat leaf model would route wrongly. */
   private def clearForRebuild(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    graft.storage.IndexStore.clearSideTables(spark, path,
+    IndexStore.clearSideTables(spark, path,
       Seq("deleted_vecs", "cellfacts", FactsPendingMarker, "coarse"))
 
   /** The training set: the bounded [[trainingSample]] when `sampleN` is
@@ -873,7 +869,7 @@ object Similarity {
     model match {
       case None => writeVectors(); writeCentroids()
       case Some(discriminator) =>
-        graft.storage.IndexStore.inParallel(Seq(writeVectors, writeCentroids))
+        IndexStore.inParallel(Seq(writeVectors, writeCentroids))
         discriminator()
     }
     routing.foreach(writeCoarseModel(spark, path, _))
@@ -957,8 +953,9 @@ object Similarity {
    */
   def ivfStoredTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                     queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
-    val cents = normedCentroids(spark.read.parquet(s"$path/centroids"))
-    probedServe(spark, path, queries, probeCells(queries, cents, nprobe).localCheckpoint(), k)
+    val cents = normedCentroids(IndexStore.table(spark, path, Cells.Centroids))
+    probedServe(spark, path, Cells.IvfVectors, queries,
+      probeCells(queries, cents, nprobe).localCheckpoint(), k)
   }
 
   /**
@@ -979,7 +976,8 @@ object Similarity {
   def ivfStoredTopKHier(spark: org.apache.spark.sql.SparkSession, path: String,
                         queries: DataFrame, k: Int,
                         nprobeCoarse: Int = 1, nprobe: Int = 2): DataFrame =
-    probedServe(spark, path, queries, routedProbes(spark, path, queries, nprobeCoarse, nprobe), k)
+    probedServe(spark, path, Cells.IvfVectors, queries,
+      routedProbes(spark, path, queries, nprobeCoarse, nprobe), k)
 
   /**
    * The probed-cell finish of every stored serve (IVF, IVF-PQ, residual
@@ -1007,12 +1005,12 @@ object Similarity {
    * cannot resurrect the id at rerank.
    */
   private def probedServe(spark: org.apache.spark.sql.SparkSession, path: String,
-                          queries: DataFrame, probes: DataFrame, k: Int,
+                          vectors: StoreTable, queries: DataFrame, probes: DataFrame, k: Int,
                           shortlist: Option[DataFrame => DataFrame] = None): DataFrame = {
     val probed = probes.select("cell").distinct().collect().map(_.get(0)).toSeq
     val screen = deleteScreen(spark, path)
     def probedVecs =
-      screen(spark.read.parquet(s"$path/vectors").where(col("cell").isin(probed: _*)))
+      screen(IndexStore.table(spark, path, vectors).where(col("cell").isin(probed: _*)))
     shortlist match {
       case None => rankProbed(probedVecs, probes, "embedding", k)
       case Some(stage1) =>
@@ -1071,7 +1069,7 @@ object Similarity {
     val probedCoarse = qc.select("coarse").distinct().collect().map(_.getInt(0)).toSeq
     // stage 2: score only the probed coarse cells' children
     val leafCands = normedCentroids(
-      spark.read.parquet(s"$path/centroids")
+      IndexStore.table(spark, path, Cells.Centroids)
         .where(floor(col("cell") / lit(kChild)).cast("int").isin(probedCoarse: _*))
         .withColumn("coarse", floor(col("cell") / lit(kChild)).cast("int")))
     val wProbe = Window.partitionBy(col("query_id"))
@@ -1088,7 +1086,7 @@ object Similarity {
     * common case — serving plans stay anti-join-free). */
   private def deletedVecs(spark: org.apache.spark.sql.SparkSession,
                           path: String): Option[DataFrame] =
-    graft.storage.IndexStore.pendingDeletes(spark, path, "deleted_vecs", Seq("vec_id"))
+    IndexStore.pendingDeletes(spark, path, Cells.DeletedVecs, Seq("vec_id"))
 
   /** Tombstone screen for a store's vectors reads — resolved ONCE per
     * serve so every stage shares the same delete set; a tombstone-free
@@ -1105,7 +1103,7 @@ object Similarity {
     * that assigns cells or derives codebooks from them. */
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
                             path: String): Seq[(Int, Array[Double])] =
-    spark.read.parquet(s"$path/centroids").collect()
+    IndexStore.table(spark, path, Cells.Centroids).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toSeq
 
   /** The shared maintainer front half for the three append paths
@@ -1124,13 +1122,13 @@ object Similarity {
       val revived = batch.select(col("vec_id")).distinct()
         .join(broadcast(d), Seq("vec_id"), "left_semi").localCheckpoint()
       if (!revived.isEmpty) {
-        graft.storage.IndexStore.compactBucketed(spark, path, "vectors",
+        IndexStore.compactBucketed(spark, path, "vectors",
           _.join(broadcast(revived), Seq("vec_id"), "left_anti"), partCol = "cell")
-        graft.storage.IndexStore.clearDeletes(spark, path, "deleted_vecs",
+        IndexStore.clearDeletes(spark, path, Cells.DeletedVecs,
           revived, Seq("vec_id"))
       }
     }
-    graft.storage.IndexStore.screenFresh(batch, path, "vectors", Seq("vec_id"))
+    IndexStore.screenFresh(batch, path, Cells.VectorIds, Seq("vec_id"))
   }
 
   /**
@@ -1148,8 +1146,8 @@ object Similarity {
    */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                          vecIds: DataFrame): Unit =
-    graft.storage.IndexStore.appendDeletes(spark, path, "deleted_vecs",
-      vecIds, registry = "vectors", Seq("vec_id"))
+    IndexStore.appendDeletes(spark, path, Cells.DeletedVecs,
+      vecIds, registry = Cells.VectorIds, Seq("vec_id"))
 
   /**
    * Index maintenance compaction — merges the per-wave file increments
@@ -1163,13 +1161,13 @@ object Similarity {
    */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     val dead = deletedVecs(spark, path).map(_.localCheckpoint())
-    graft.storage.IndexStore.compactBucketed(spark, path, "vectors",
+    IndexStore.compactBucketed(spark, path, "vectors",
       df => dead.fold(df)(d => df.join(broadcast(d), Seq("vec_id"), "left_anti")),
       partCol = "cell")
-    dead.foreach(_ => graft.storage.IndexStore.dropDeletes(spark, path, "deleted_vecs"))
+    dead.foreach(_ => IndexStore.dropDeletes(spark, path, "deleted_vecs"))
     // the purge changed what the vectors table holds — a facts table
     // must follow it or the drift statistic keeps counting purged rows
-    if (dead.isDefined && tierHasCellFacts(spark, path))
+    if (dead.isDefined && hasCellFacts(spark, path))
       rebuildCellFacts(spark, path)
   }
 
@@ -1208,7 +1206,8 @@ object Similarity {
     import spark.implicits._
     val store = new org.apache.hadoop.fs.Path(path)
     val dead = deletedVecs(spark, path)
-    val corpus = spark.read.parquet(s"$path/vectors").select(col("vec_id"), col("embedding"))
+    val corpus = IndexStore.table(spark, path, Cells.IvfVectors)
+      .select(col("vec_id"), col("embedding"))
     // every read below happens inside the build phase, while the live
     // store is still in place — swapDir renames only after `build` ends
     val live = dead.fold(corpus)(d =>
@@ -1217,7 +1216,7 @@ object Similarity {
       val (leaves, routing) = trainCells(trainSetOf(live, sampleN), kCells, iters, hier)
       // vectors/centroids/coarse are independent — concurrent; the facts
       // rebuild below stays AFTER them (it reads the new $tmp/vectors)
-      graft.storage.IndexStore.inParallel(Seq[() => Unit](
+      IndexStore.inParallel(Seq[() => Unit](
         () => writeCells(assignCells(live, routing, leaves).select("vec_id", "embedding", "cell"),
           s"$tmp/vectors", "errorifexists"),
         () => leaves.toDF("cell", "centroid").write.parquet(s"$tmp/centroids")) ++
@@ -1231,8 +1230,8 @@ object Similarity {
       // a facts table rebuilds INSIDE the swap (over the new assignment)
       // so the O(cells) drift statistic can never pair old facts with a
       // new model generation
-      if (tierHasCellFacts(spark, path))
-        cellFactsOf(spark.read.parquet(s"$tmp/vectors"))
+      if (hasCellFacts(spark, path))
+        cellFactsOf(IndexStore.table(spark, tmp, Cells.IvfVectors))
           .coalesce(1).write.parquet(s"$tmp/cellfacts")
     }
   }
@@ -1241,11 +1240,8 @@ object Similarity {
   // per-cell running facts — the O(cells) drift statistic
   // ------------------------------------------------------------------
 
-  private def tierHasCellFacts(spark: org.apache.spark.sql.SparkSession,
-                               path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/cellfacts")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def hasCellFacts(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    IndexStore.tableIfPresent(spark, path, Cells.CellFacts).isDefined
 
   /** Per-cell running facts of an assigned vector frame: (cell, n,
     * per-dimension DECIMAL sums). Decimal sums merge associatively, so
@@ -1265,7 +1261,7 @@ object Similarity {
   def rebuildCellFacts(spark: org.apache.spark.sql.SparkSession,
                        path: String, dim: Int = Dim): Unit =
     graft.storage.AtomicSwap.swapDir(spark, path, "cellfacts") { tmp =>
-      cellFactsOf(spark.read.parquet(s"$path/vectors"), dim)
+      cellFactsOf(IndexStore.table(spark, path, Cells.IvfVectors), dim)
         .coalesce(1).write.parquet(tmp)
     }
 
@@ -1278,14 +1274,16 @@ object Similarity {
   private[graft] def mergeCellFacts(spark: org.apache.spark.sql.SparkSession,
                                     path: String, add: DataFrame,
                                     dim: Int = Dim): Unit =
-    if (!tierHasCellFacts(spark, path)) rebuildCellFacts(spark, path, dim)
-    else graft.storage.AtomicSwap.swapDir(spark, path, "cellfacts") { tmp =>
-      spark.read.parquet(s"$path/cellfacts").unionByName(add)
-        .groupBy(col("cell")).agg(
-          sum(col("n")).cast("long").as("n"),
-          array((0 until dim).map(i =>
-            sum(element_at(col("sums"), i + 1)).cast("decimal(38,10)")): _*).as("sums"))
-        .coalesce(1).write.parquet(tmp)
+    IndexStore.tableIfPresent(spark, path, Cells.CellFacts).fold(
+      rebuildCellFacts(spark, path, dim)) { facts =>
+      graft.storage.AtomicSwap.swapDir(spark, path, "cellfacts") { tmp =>
+        facts.unionByName(add)
+          .groupBy(col("cell")).agg(
+            sum(col("n")).cast("long").as("n"),
+            array((0 until dim).map(i =>
+              sum(element_at(col("sums"), i + 1)).cast("decimal(38,10)")): _*).as("sums"))
+          .coalesce(1).write.parquet(tmp)
+      }
     }
 
   /**
@@ -1300,9 +1298,9 @@ object Similarity {
    */
   def ivfDriftFromFacts(spark: org.apache.spark.sql.SparkSession,
                         path: String): DataFrame = {
-    val trained = spark.read.parquet(s"$path/centroids")
+    val trained = IndexStore.table(spark, path, Cells.Centroids)
       .select(col("cell").as("label"), col("centroid").as("embedding"))
-    val current = spark.read.parquet(s"$path/cellfacts")
+    val current = IndexStore.table(spark, path, Cells.CellFacts)
       .select(col("cell").as("label"),
         transform(col("sums"), x => x.cast("double") / col("n")).as("embedding"))
     centroidDrift(trained, current)
@@ -1782,7 +1780,7 @@ object Similarity {
     val model = readCentroids(spark, path)
     val probes = probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe)
       .drop("qv_nrm").localCheckpoint()
-    probedServe(spark, path, queries, probes, k, Some(adcShortlist(probes, shortlist,
+    probedServe(spark, path, Cells.PqVectors, queries, probes, k, Some(adcShortlist(probes, shortlist,
       adcMicroUdf(pqCodebooksFrom(model))(col("codes"), col("qv"))) _))
   }
 
@@ -1804,7 +1802,7 @@ object Similarity {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val cbs = pqCodebooksFrom(readCentroids(spark, path))
     val probes = routedProbes(spark, path, queries, nprobeCoarse, nprobe).drop("qv_nrm")
-    probedServe(spark, path, queries, probes, k, Some(adcShortlist(probes, shortlist,
+    probedServe(spark, path, Cells.PqVectors, queries, probes, k, Some(adcShortlist(probes, shortlist,
       adcMicroUdf(cbs)(col("codes"), col("qv"))) _))
   }
 
@@ -2010,7 +2008,7 @@ object Similarity {
       val cbs = residualCodebooks(residTrain, kCodes, codeIters)
       // three independent writes (checkpointed resid + two driver-resident
       // models) inside the same swap unit — concurrent (§2.6)
-      graft.storage.IndexStore.inParallel(Seq(
+      IndexStore.inParallel(Seq(
         () => writeCells(resid.select(col("vec_id"), col("embedding"),
           residAssignUdf(cbs)(col("rv")).as("codes"), col("cell")),
           s"$tmp/vectors", "errorifexists"),
@@ -2026,7 +2024,7 @@ object Similarity {
     * doubles — model-sized, like [[readCentroids]]). */
   private def readResidCb(spark: org.apache.spark.sql.SparkSession,
                           path: String): Seq[Seq[(Int, Array[Double])]] = {
-    val rows = spark.read.parquet(s"$path/residcb").collect()
+    val rows = IndexStore.table(spark, path, Cells.ResidCb).collect()
       .map(r => (r.getAs[Int]("js"), r.getAs[Int]("code"),
         r.getSeq[Double](r.fieldIndex("cvec")).toArray))
     (0 until PqM).map(j => rows.filter(_._1 == j)
@@ -2072,7 +2070,7 @@ object Similarity {
     val cbs = readResidCb(spark, path)
     val probes = probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe)
       .drop("qv_nrm").localCheckpoint()
-    probedServe(spark, path, queries, probes, k, Some(adcShortlist(probes, shortlist,
+    probedServe(spark, path, Cells.PqVectors, queries, probes, k, Some(adcShortlist(probes, shortlist,
       residAdcMicroUdf(model, cbs)(col("cell"), col("codes"), col("qv"))) _))
   }
 
@@ -2557,7 +2555,7 @@ object Similarity {
   /** The store's own PCA basis — dims×Dim doubles, driver-resident. */
   private def readPcaModel(spark: org.apache.spark.sql.SparkSession,
                            path: String): PcaModel = {
-    val rows = spark.read.parquet(s"$path/pcamodel").collect().sortBy(_.getInt(0))
+    val rows = IndexStore.table(spark, path, Cells.PcaModel).collect().sortBy(_.getInt(0))
     PcaModel(rows.map(_.getSeq[Double](1).toArray), rows.map(_.getDouble(2)))
   }
 
@@ -2608,7 +2606,7 @@ object Similarity {
     import spark.implicits._
     val store = new org.apache.hadoop.fs.Path(path)
     val dead = deletedVecs(spark, path)
-    val corpus = spark.read.parquet(s"$path/vectors")
+    val corpus = IndexStore.table(spark, path, Cells.PcaVectors)
       .select(col("vec_id"), col("embedding"))
     // NOT checkpointed: fit, project, and write each re-read the live
     // store (the retrainIvfIndex posture) — a corpus-sized checkpoint
@@ -2621,7 +2619,7 @@ object Similarity {
       // rule); the SAMPLE may checkpoint — it is bounded by construction
       val (model, rows, cells, _) = pcaCells(live, sampleN, dims, kCells, iters, hier = false)
       // three independent writes inside the same swap unit — concurrent
-      graft.storage.IndexStore.inParallel(Seq(
+      IndexStore.inParallel(Seq(
         () => writeCells(rows, s"$tmp/vectors", "errorifexists"),
         () => cells.toDF("cell", "centroid").write.parquet(s"$tmp/centroids"),
         () => writePcaModel(spark, model, s"$tmp/pcamodel", "errorifexists")))
@@ -2649,9 +2647,10 @@ object Similarity {
                        shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val model = readPcaModel(spark, path)
-    val cents = normedCentroids(spark.read.parquet(s"$path/centroids"))
+    val cents = normedCentroids(IndexStore.table(spark, path, Cells.Centroids))
     val probes = probeCells(pcaQueries(queries, model), cents, nprobe).localCheckpoint()
-    probedServe(spark, path, queries, probes, k, Some(pcaShortlist(probes, shortlist) _))
+    probedServe(spark, path, Cells.PcaVectors, queries, probes, k,
+      Some(pcaShortlist(probes, shortlist) _))
   }
 
   /** Queries projected through a store's basis, shaped as probe input. */
@@ -2682,7 +2681,8 @@ object Similarity {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val model = readPcaModel(spark, path)
     val probes = routedProbes(spark, path, pcaQueries(queries, model), nprobeCoarse, nprobe)
-    probedServe(spark, path, queries, probes, k, Some(pcaShortlist(probes, shortlist) _))
+    probedServe(spark, path, Cells.PcaVectors, queries, probes, k,
+      Some(pcaShortlist(probes, shortlist) _))
   }
 
   /**

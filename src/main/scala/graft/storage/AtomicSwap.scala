@@ -49,12 +49,20 @@ object AtomicSwap {
         "committer-based swap (versioned prefix + pointer flip) on object stores.")
     else None
 
-  /** `rewrite` receives the live table and must write its replacement to
-    * `$path/.$table.compact`. */
+  /** `rewrite` receives the live table `t`, opened with its declared
+    * schema, and must write its replacement to `$path/.${t.name}.compact`. */
+  def swapTable(spark: SparkSession, path: String, t: StoreTable)
+               (rewrite: DataFrame => Unit): Unit =
+    swapCore(spark, path, t.name)(_ => rewrite(IndexStore.table(spark, path, t)))
+
+  /** [[swapTable]] for a family-blind rewrite (a compaction shared by
+    * stores whose tables differ): the table is declared from its own
+    * files ([[IndexStore.storedTable]]) after the crash recovery, so a
+    * rewrite keeps every column the table holds. */
   def swapTable(spark: SparkSession, path: String, table: String)
                (rewrite: DataFrame => Unit): Unit =
     swapCore(spark, path, table)(_ =>
-      rewrite(spark.read.parquet(s"$path/$table")))
+      rewrite(IndexStore.table(spark, path, IndexStore.storedTable(spark, path, table))))
 
   /**
    * [[swapTable]] for a whole DIRECTORY TREE (a multi-table store):

@@ -50,11 +50,15 @@ object GraftStorage {
    * S1 — batch append of canonical datapoints. `sortWithinPartitions`
    * before write gives run-length-friendly pages and clustered row groups;
    * repartition by the physical partition columns keeps one task per
-   * output partition (no small-file explosion at 1000 executors).
+   * output partition (no small-file explosion at 1000 executors). The
+   * columns land with the raw table's declared types (a caller's untyped
+   * empty `tags` map, an int `time`), so the files hold what
+   * [[read]] declares; a column the declaration lacks is not written.
    */
-  def write(dp: DataFrame, path: String, mode: SaveMode = SaveMode.Append): Unit =
-    withSlice(dp)
-      .withColumn("ingest_seq", lit(nextIngestSeq()))
+  def write(dp: DataFrame, path: String, mode: SaveMode = SaveMode.Append): Unit = {
+    val in = withSlice(dp).withColumn("ingest_seq", lit(nextIngestSeq()))
+    in.select(StoreTables.Metrics.Raw.schema.fields.toSeq.filter(f => in.columns.contains(f.name))
+        .map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
       .repartition(col("tenant_id"), col("mtype"), col("time_slice"))
       .sortWithinPartitions(col("metric"), col("time"))
       .write
@@ -62,34 +66,15 @@ object GraftStorage {
       .option("compression", "zstd")
       .mode(mode)
       .parquet(path)
-
-  import org.apache.spark.sql.types._
-
-  /** Canonical on-disk schema of the raw tier (post-read normalization). */
-  val Schema: StructType = StructType(Seq(
-    StructField("metric", StringType), StructField("time", LongType),
-    StructField("n_value", DoubleType), StructField("l_value", LongType),
-    StructField("avail", IntegerType), StructField("s_value", StringType),
-    StructField("tags", MapType(StringType, StringType)),
-    StructField("ingest_seq", LongType),
-    StructField("tenant_id", StringType), StructField("mtype", IntegerType),
-    StructField("time_slice", LongType)))
+  }
 
   /** Range scan entry: partition pruning on (tenant, type, slice range)
-    * happens before any file is opened. Partition columns come back from
-    * directory names as INT — normalize to the canonical types. An empty
-    * or not-yet-created tier reads as an empty canonical frame (a tenant
-    * delete can legitimately empty the store). */
+    * happens before any file is opened. The declared partition types
+    * hold (tenant `007` stays `"007"`, never merged with tenant `7`).
+    * An absent tier reads as an empty frame, and so does an empty one (a
+    * tenant delete can legitimately empty the store). */
   def read(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
-      .withColumn("time_slice", col("time_slice").cast("long"))
-      .withColumn("mtype", col("mtype").cast("int"))
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-            e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schema)
-    }
+    IndexStore.tableOrEmpty(spark, path, StoreTables.Metrics.Raw)
 
   /** Read with last-write-wins resolved per (tenant, mtype, metric, time) —
     * the exactly-once view of a raw tier that may hold not-yet-compacted
@@ -345,7 +330,7 @@ object GraftStorage {
                       fromSlice: Long = Long.MinValue,
                       resolved: Option[DataFrame] = None): Unit = {
     require(bins > 0 && vMax > vMin, "need bins > 0 and vMax > vMin")
-    readHistMeta(spark, histPath) match {
+    histTierMeta(spark, histPath) match {
       case Some(m) =>
         require(m == ((vMin, vMax, bins)),
           s"histogram tier at $histPath was built with (vMin, vMax, bins) = $m; " +
@@ -467,8 +452,6 @@ object GraftStorage {
       .minOption
   }
 
-  private def histMetaPath(histPath: String) = s"$histPath/_histmeta"
-
   /**
    * Coverage watermark of a distribution tier: the lowest `fromSlice`
    * any refresh has materialized it from (Long.MinValue = all history).
@@ -510,8 +493,8 @@ object GraftStorage {
     * dispatch-level probe for percentile tier serving (existence check
     * only; [[rollupHistogram]] reads the actual edges). */
   def histTierHasMeta(spark: SparkSession, histPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(histMetaPath(histPath))
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val p = new org.apache.hadoop.fs.Path(StoreTables.Tiers.HistMeta.at(histPath))
+    rootFs(spark, histPath).exists(p)
   }
 
   /** The histogram tier's declared (vMin, vMax, bins), when built — the
@@ -519,25 +502,18 @@ object GraftStorage {
     * re-passing its edge config. */
   def histTierMeta(spark: SparkSession,
                    histPath: String): Option[(Double, Double, Int)] =
-    readHistMeta(spark, histPath)
+    IndexStore.tableIfPresent(spark, histPath, StoreTables.Tiers.HistMeta).map { t =>
+      val r = t.collect()
+      require(r.length == 1, s"histogram tier meta at $histPath must be one row")
+      (r(0).getAs[Double]("v_min"), r(0).getAs[Double]("v_max"), r(0).getAs[Int]("bins"))
+    }
 
   private def writeHistMeta(spark: SparkSession, histPath: String,
                             vMin: Double, vMax: Double, bins: Int): Unit = {
     import spark.implicits._
     Seq((vMin, vMax, bins)).toDF("v_min", "v_max", "bins")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(histMetaPath(histPath))
-  }
-
-  private def readHistMeta(spark: SparkSession,
-                           histPath: String): Option[(Double, Double, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(histMetaPath(histPath))
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
-    else {
-      val r = spark.read.parquet(p.toString).collect()
-      require(r.length == 1, s"histogram tier meta at $p must be one row")
-      Some((r(0).getAs[Double]("v_min"), r(0).getAs[Double]("v_max"),
-        r(0).getAs[Int]("bins")))
-    }
+      .coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(StoreTables.Tiers.HistMeta.at(histPath))
   }
 
   /**
@@ -565,7 +541,7 @@ object GraftStorage {
     require(b.start % RollupMs == 0 && b.step % RollupMs == 0,
       s"histogram tier serving needs hour-aligned buckets " +
         s"(start=${b.start}, step=${b.step})")
-    val (vMin, vMax, bins) = readHistMeta(spark, histPath).getOrElse(
+    val (vMin, vMax, bins) = histTierMeta(spark, histPath).getOrElse(
       throw new IllegalArgumentException(s"no histogram tier meta at $histPath"))
     if (tenant.isEmpty || mtypeCode.isEmpty) { // fully scoped skips the listing
       val scoped = tierTenantPartitions(spark, histPath).filter { case (t, m) =>
@@ -582,7 +558,7 @@ object GraftStorage {
     val scopeFilters =
       tenant.map(col("tenant_id") === _) ++ mtypeCode.map(col("mtype") === _)
     val h0 = scopeFilters.foldLeft(
-      spark.read.parquet(histPath)
+      IndexStore.table(spark, histPath, StoreTables.Tiers.Hist)
         .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs))(_ filter _)
     // optional id-set restriction (the tag-query → p95 dashboard path):
     // request-sized id set, broadcast semi-join pruning the tier scan
@@ -694,7 +670,7 @@ object GraftStorage {
     // prune to that tenant's partition directories at the LISTING, not
     // scan every tenant's hours (tenant_id leads the tier layout)
     val h0 = tenant.foldLeft(
-      spark.read.parquet(availPath)
+      IndexStore.table(spark, availPath, StoreTables.Tiers.Avail)
         .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs))(
       (d, t) => d.filter(col("tenant_id") === t))
     // optional id-set restriction (the tag-query → SLO dashboard path):
@@ -807,7 +783,7 @@ object GraftStorage {
     // request-sized id set broadcasts into a semi-join pruning the tier
     // scan BEFORE the boundary window (rollupStats' posture)
     val h0 = tenant.foldLeft(
-      spark.read.parquet(ctrPath)
+      IndexStore.table(spark, ctrPath, StoreTables.Tiers.CounterIncrease)
         .filter(col("hour") >= range.start / RollupMs &&
           col("hour") < range.end / RollupMs))(
       (d, t) => d.filter(col("tenant_id") === t))
@@ -940,7 +916,8 @@ object GraftStorage {
     val scopeFilters =
       tenant.map(col("tenant_id") === _) ++ mtypeCode.map(col("mtype") === _)
     val h0 = scopeFilters.foldLeft(
-      spark.read.parquet(ratePath).filter(col("hour") < b.end / RollupMs))(_ filter _)
+      IndexStore.table(spark, ratePath, StoreTables.Tiers.Rate)
+        .filter(col("hour") < b.end / RollupMs))(_ filter _)
     // request-sized id restriction, broadcast semi-join BEFORE the
     // boundary window (rollupStats' posture)
     val h = ids.fold(h0)(i =>
@@ -1014,7 +991,7 @@ object GraftStorage {
     val scopeFilters =
       tenant.map(col("tenant_id") === _) ++ mtypeCode.map(col("mtype") === _)
     val r0 = scopeFilters.foldLeft(
-      spark.read.parquet(rollupPath)
+      IndexStore.table(spark, rollupPath, StoreTables.Tiers.Sums)
         .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs))(_ filter _)
     // optional id-set restriction (the tag-query → dashboard path): the
     // resolved id set is request-sized, so it broadcasts into a semi-join
@@ -1049,17 +1026,13 @@ object GraftStorage {
   private def hourAligned(xs: Long*): Boolean = xs.forall(_ % RollupMs == 0)
 
   /** A tier can serve only when it HOLDS DATA: a refresh over a store
-    * with no rows of a family writes an empty dir (just _SUCCESS), and a
-    * parquet read of it dies on schema inference — such a family must
-    * fall back to raw, not 500. The data probe is the same partition
-    * glob the tenant guards use (metadata-only). */
-  private def tierExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$path/*/*/time_slice=*")))
-      .exists(_.nonEmpty)
-  }
+    * with no rows of a family writes an empty dir (just _SUCCESS), and
+    * such a family falls back to raw. The data probe is the same
+    * partition glob the tenant guards use (metadata-only; an absent tier
+    * globs to nothing). */
+  private def tierExists(spark: SparkSession, path: String): Boolean =
+    Option(rootFs(spark, path).globStatus(
+      new org.apache.hadoop.fs.Path(s"$path/*/*/time_slice=*"))).exists(_.nonEmpty)
 
   /** The tier-branch condition of every serve* dispatcher: `b` sits on
     * the tier hour grid, the tier is `built` (by default: it holds data)
@@ -1203,7 +1176,7 @@ object GraftStorage {
                           fromSlice: Long = Long.MinValue,
                           resolved: Option[DataFrame] = None): Unit = {
     require(bins > 0 && vMax > vMin, "need bins > 0 and vMax > vMin")
-    readHistMeta(spark, rateHistPath) match {
+    histTierMeta(spark, rateHistPath) match {
       case Some(m) =>
         require(m == ((vMin, vMax, bins)),
           s"rate histogram tier at $rateHistPath was built with (vMin, vMax, " +
@@ -1267,7 +1240,7 @@ object GraftStorage {
     require(b.start % RollupMs == 0 && b.step % RollupMs == 0,
       s"rate histogram serving needs hour-aligned buckets " +
         s"(start=${b.start}, step=${b.step})")
-    val (vMin, vMax, bins) = readHistMeta(spark, rateHistPath).getOrElse(
+    val (vMin, vMax, bins) = histTierMeta(spark, rateHistPath).getOrElse(
       throw new IllegalArgumentException(s"no histogram tier meta at $rateHistPath"))
     if (tenant.isEmpty || mtypeCode.isEmpty) { // fully scoped skips the listings
       val scoped = (tierTenantPartitions(spark, rateHistPath) ++
@@ -1293,7 +1266,8 @@ object GraftStorage {
       .partitionBy(col("tenant_id"), col("mtype"), col("metric"))
       .orderBy(col("hour"))
     val bounds = idFilter(scopedRead(ratePath,
-      spark.read.parquet(ratePath).filter(col("hour") < b.end / RollupMs)))
+      IndexStore.table(spark, ratePath, StoreTables.Tiers.Rate)
+        .filter(col("hour") < b.end / RollupMs)))
       .withColumn("prev_last_val", lag(col("last_val"), 1).over(w))
       .withColumn("prev_last_ts", lag(col("last_ts"), 1).over(w))
       .withColumn("brate",
@@ -1308,19 +1282,15 @@ object GraftStorage {
       .select(col("bucket"), col("bin"), lit(1L).as("cnt"))
     // within-hour binned counts, re-aggregated to the bucket grid. A
     // refreshed-but-EMPTY hist tier (sparse store: no hour anywhere
-    // holds two points — [[rateHistTierServes]]) contributes nothing
-    // and must not be read: parquet schema inference dies on a dir
-    // holding only the _histmeta/_covered_from side files, and the
-    // boundary reconstruction above already carries every rate pair
+    // holds two points — [[rateHistTierServes]]) reads as no rows, and
+    // the boundary reconstruction above already carries every rate pair
     // such a store has.
-    val merged =
-      if (tierTenantPartitions(spark, rateHistPath).isEmpty) bounds
-      else idFilter(scopedRead(rateHistPath,
-        spark.read.parquet(rateHistPath)
-          .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs)))
-        .withColumn("bucket", expr(s"(hour - $startHour) div $stepHours"))
-        .select(col("bucket"), col("bin"), col("cnt"))
-        .unionByName(bounds)
+    val merged = idFilter(scopedRead(rateHistPath,
+      IndexStore.table(spark, rateHistPath, StoreTables.Tiers.Hist)
+        .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs)))
+      .withColumn("bucket", expr(s"(hour - $startHour) div $stepHours"))
+      .select(col("bucket"), col("bin"), col("cnt"))
+      .unionByName(bounds)
     merged
       .groupBy(col("bucket"), col("bin"))
       .agg(sum(col("cnt")).as("cnt"))
@@ -1452,7 +1422,7 @@ object GraftStorage {
                       tenant: Option[String] = None,
                       mtypeCode: Option[Int] = None,
                       refreshedUntil: Option[Long] = None): DataFrame = {
-    val (vMin, vMax, bins) = readHistMeta(spark, histPath).getOrElse(
+    val (vMin, vMax, bins) = histTierMeta(spark, histPath).getOrElse(
       throw new IllegalArgumentException(s"no histogram tier meta at $histPath"))
     val scope = dispatchScope(spark, rawPath, tenant, mtypeCode, "histogram")
     // the tier counts as built once its meta read above succeeds — no

@@ -4,10 +4,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
- * The shared lifecycle primitives every persisted index tier composes —
- * near-dup (operators/Dedup), BM25 (operators/Retrieval), and the tag
- * index ([[TagIndex]]) all run the same five disciplines, extracted here
- * so the fourth index doesn't hand-copy them a fourth time:
+ * The store-table reader and the lifecycle primitives every persisted
+ * store composes: the cell stores and SRP (operators/Similarity),
+ * near-dup (operators/Dedup), BM25 (operators/Retrieval), the tag index
+ * ([[TagIndex]]) and the metrics store ([[GraftStorage]],
+ * api/MetricsService).
+ *
+ * **Every store is read through [[table]]** (or [[tableIfPresent]] where
+ * an absent table means something). It opens a table declared once in
+ * [[StoreTables]] with its declared schema, so an open runs no
+ * schema-inference job and no partition directory is re-typed by its
+ * value; an absent required table is refused by name.
+ *
+ * The seven primitives built on it:
  *
  *  1. **meta guard** — build parameters persist with the store as a
  *     single-row table; every probe/append/compact validates them first,
@@ -29,11 +38,59 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *     model-sized, collected, and pushed as a plan-time
  *     `bucket IN (...)` partition filter (DPP would not fire: query
  *     frames are LocalRelations with no selective scan to reuse).
+ *  6. **delete tombstones** — a delete appends keys to a side table,
+ *     serves screen against it, and compaction purges and clears it.
+ *  7. **overlapped independent jobs** — [[inParallel]].
  *
  * The payload math (what the tables contain, how appends merge) stays
- * with each index — only the lifecycle mechanics live here.
+ * with each store; only the reader and the lifecycle mechanics live
+ * here.
  */
 object IndexStore {
+
+  /** Open table `t` of the store at `path` with its declared schema —
+    * the one way a store table is read. Refuses an absent table by
+    * name. */
+  def table(spark: SparkSession, path: String, t: StoreTable): DataFrame =
+    tableIfPresent(spark, path, t).getOrElse(throw new IllegalStateException(
+      s"store table '${t.name}' is absent at ${t.at(path)}"))
+
+  /** [[table]], or None when the table does not exist: the side tables
+    * whose absence carries meaning (no tombstones, a flat store's missing
+    * routing model), and the metrics store's tables, where absent means
+    * empty ([[tableOrEmpty]]). */
+  def tableIfPresent(spark: SparkSession, path: String, t: StoreTable): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(t.at(path))
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
+    else Some(spark.read.schema(t.schema).parquet(p.toString))
+  }
+
+  /** [[tableIfPresent]], with an absent table read as empty. */
+  def tableOrEmpty(spark: SparkSession, path: String, t: StoreTable): DataFrame =
+    tableIfPresent(spark, path, t).getOrElse(
+      spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), t.schema))
+
+  /** An undeclared table, declared from its own files: the columns of one
+    * stored footer, read on the driver (no Spark job); its partition
+    * columns are the ones its directories name. A family-blind rewrite
+    * ([[AtomicSwap.swapTable]]) takes its schema from here, so it keeps
+    * every column the table holds. */
+  def storedTable(spark: SparkSession, path: String, name: String): StoreTable = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new org.apache.hadoop.fs.Path(s"$path/$name")
+    val files = dir.getFileSystem(conf).listFiles(dir, true)
+    def visible(f: org.apache.hadoop.fs.Path) = f.getName.endsWith(".parquet") &&
+      !f.toUri.getPath.stripPrefix(dir.toUri.getPath).split('/')
+        .exists(n => n.startsWith("_") || n.startsWith("."))
+    val file = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .find(visible).getOrElse(throw new IllegalStateException(
+        s"store table '$name' at $dir holds no data file"))
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val footer = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
+    StoreTable(name, new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(footer).toDDL)
+  }
 
   /**
    * Run INDEPENDENT store jobs concurrently (lifecycle primitive 7 —
@@ -78,25 +135,16 @@ object IndexStore {
   /** Persist build parameters as the store's single-row meta table. */
   def writeMeta(spark: SparkSession, path: String, fields: Seq[(String, Int)]): Unit = {
     val row = org.apache.spark.sql.Row.fromSeq(fields.map(_._2))
-    spark.createDataFrame(java.util.List.of(row), metaSchema(fields))
+    spark.createDataFrame(java.util.List.of(row), StoreTables.meta(fields.map(_._1): _*).schema)
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** The meta table's schema: one int column per field. A file read
-    * makes it nullable, so an absent column reads as null. */
-  private def metaSchema(fields: Seq[(String, Int)]) =
-    org.apache.spark.sql.types.StructType(fields.map { case (n, _) =>
-      org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.IntegerType,
-        nullable = false)
-    })
-
   /** Fail fast when a caller's parameters disagree with the store's.
-    * The expected fields are the read schema (all int, names known), so
-    * the guard runs one job — the collect — and no schema-inference job.
-    * A field the stored meta lacks reads as null and is refused by name,
-    * never taken as 0. */
+    * The expected fields declare the meta table (all int, names known),
+    * so the guard runs one job — the collect. A field the stored meta
+    * lacks reads as null and is refused by name, never taken as 0. */
   def requireMeta(spark: SparkSession, path: String, expected: Seq[(String, Int)]): Unit = {
-    val rows = spark.read.schema(metaSchema(expected)).parquet(s"$path/meta").collect()
+    val rows = table(spark, path, StoreTables.meta(expected.map(_._1): _*)).collect()
     require(rows.length == 1, s"index meta at $path/meta must be one row, found ${rows.length}")
     val missing = expected.indices.filter(rows(0).isNullAt).map(expected(_)._1)
     require(missing.isEmpty,
@@ -111,12 +159,15 @@ object IndexStore {
     * the replay-idempotency anti-join (primitive 2). The caller writes
     * its screen rows for the surviving batch FIRST, then the payload
     * tables. */
+  def screenFresh(batch: DataFrame, path: String, screen: StoreTable,
+                  keyCols: Seq[String]): DataFrame =
+    batch.join(table(batch.sparkSession, path, screen).select(keyCols.map(col): _*),
+      keyCols, "left_anti")
+
+  /** [[screenFresh]] against an undeclared screen table ([[storedTable]]). */
   def screenFresh(batch: DataFrame, path: String, screenTable: String,
                   keyCols: Seq[String]): DataFrame =
-    batch.join(
-      batch.sparkSession.read.parquet(s"$path/$screenTable")
-        .select(keyCols.map(col): _*),
-      keyCols, "left_anti")
+    screenFresh(batch, path, storedTable(batch.sparkSession, path, screenTable), keyCols)
 
   /** Bucket-partitioned write with the file-count discipline
     * (primitive 3): repartition on the partition column first. */
@@ -127,10 +178,11 @@ object IndexStore {
 
   /** Crash-safe compaction of a partition-column table (`bucket` for the
     * hash-bucketed stores, `cell` for IVF): back to one layout per
-    * partition, behind the atomic swap; `transform` hooks the index's
-    * purge step (e.g. dropping a tombstoned tenant's entries — the
-    * rewrite is the one moment removing partition-scattered rows costs
-    * nothing extra). */
+    * partition, behind the family-blind atomic swap (the cell families
+    * share it, so the rewrite keeps whatever columns the table holds);
+    * `transform` hooks the index's purge step (e.g. dropping a
+    * tombstoned tenant's entries — the rewrite is the one moment
+    * removing partition-scattered rows costs nothing extra). */
   def compactBucketed(spark: SparkSession, path: String, table: String,
                       transform: DataFrame => DataFrame = identity,
                       partCol: String = "bucket"): Unit =
@@ -138,14 +190,13 @@ object IndexStore {
       writeCompactTmp(transform(df), s"$path/.$table.compact", partCol))
 
   /** A dynamic partitionBy of an EMPTY frame emits no part files at all
-    * (only _SUCCESS), and a table with no schema-bearing footer fails
-    * every subsequent read — bricking the store the moment a purge drops
-    * the last row. The empty case is detected from the WRITTEN output
+    * (only _SUCCESS), and a table with no schema-bearing footer cannot
+    * be declared from its files ([[storedTable]]) — the next compaction
+    * would refuse it. The empty case is detected from the WRITTEN output
     * (an `isEmpty` probe up front would execute the whole compaction
     * plan a second time just to check); when it hits, land one empty
-    * footer inside a synthetic partition dir: readers infer the
-    * partition column from the dir name, later appends nest at the same
-    * depth. */
+    * footer inside a synthetic partition dir, so later appends nest at
+    * the same depth. */
   private def writeCompactTmp(out: DataFrame, tmp: String, partCol: String): Unit = {
     out.repartition(col(partCol)).write.partitionBy(partCol).parquet(tmp)
     val p = new org.apache.hadoop.fs.Path(tmp)
@@ -164,43 +215,36 @@ object IndexStore {
 
   /** Pending delete tombstones, or None when none exist (the cheap
     * common case — serving plans stay anti-join-free). */
-  def pendingDeletes(spark: SparkSession, path: String, table: String,
-                     keyCols: Seq[String]): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$table")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(spark.read.parquet(p.toString).select(keyCols.map(col): _*).distinct())
-  }
+  def pendingDeletes(spark: SparkSession, path: String, deletes: StoreTable,
+                     keyCols: Seq[String]): Option[DataFrame] =
+    tableIfPresent(spark, path, deletes).map(_.select(keyCols.map(col): _*).distinct())
 
   /** Tombstone-append-only delete: land the REGISTERED, not-yet-
     * tombstoned keys of `keys` (screened against `registry`, the store
     * table owning the key universe) in the delete table. The single
     * append IS the delete — a crash after it already serves correctly.
     * Idempotent: replayed and never-registered keys screen to empty. */
-  def appendDeletes(spark: SparkSession, path: String, table: String,
-                    keys: DataFrame, registry: String, keyCols: Seq[String]): Unit = {
+  def appendDeletes(spark: SparkSession, path: String, deletes: StoreTable,
+                    keys: DataFrame, registry: StoreTable, keyCols: Seq[String]): Unit = {
     val registered = keys.select(keyCols.map(col): _*).distinct()
-      .join(spark.read.parquet(s"$path/$registry").select(keyCols.map(col): _*),
-        keyCols, "left_semi")
-    val del = pendingDeletes(spark, path, table, keyCols)
+      .join(table(spark, path, registry).select(keyCols.map(col): _*), keyCols, "left_semi")
+    val del = pendingDeletes(spark, path, deletes, keyCols)
       .fold(registered)(d => registered.join(broadcast(d), keyCols, "left_anti"))
       .localCheckpoint()
     if (!del.isEmpty)
-      del.coalesce(1).write.mode("append").parquet(s"$path/$table")
+      del.coalesce(1).write.mode("append").parquet(deletes.at(path))
   }
 
   /** Drop `cleared` (a checkpointed key frame) from the delete table —
     * the revival hook; the table vanishes when the last tombstone clears
     * (an absent dir is the cheap common case every serve probes). */
-  def clearDeletes(spark: SparkSession, path: String, table: String,
+  def clearDeletes(spark: SparkSession, path: String, deletes: StoreTable,
                    cleared: DataFrame, keyCols: Seq[String]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$table")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val remaining = spark.read.parquet(p.toString).join(cleared, keyCols, "left_anti")
-    if (remaining.isEmpty) fs.delete(p, true)
-    else AtomicSwap.swapTable(spark, path, table)(df =>
+    val remaining = table(spark, path, deletes).join(cleared, keyCols, "left_anti")
+    if (remaining.isEmpty) rmrf(spark, deletes.at(path))
+    else AtomicSwap.swapTable(spark, path, deletes)(df =>
       df.join(cleared, keyCols, "left_anti").coalesce(1)
-        .write.parquet(s"$path/.$table.compact"))
+        .write.parquet(s"$path/.${deletes.name}.compact"))
   }
 
   /** Drop the whole delete table — compaction's final step, after the
@@ -225,17 +269,13 @@ object IndexStore {
     * catalog out of serving (and a later append would "revive" them by
     * purging their freshly built rows). Every build-with-overwrite clears
     * them first. */
-  def clearSideTables(spark: SparkSession, path: String, tables: Seq[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    tables.foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$path/$t")
-      p.getFileSystem(conf).delete(p, true)
-    }
-  }
+  def clearSideTables(spark: SparkSession, path: String, tables: Seq[String]): Unit =
+    tables.foreach(t => rmrf(spark, s"$path/$t"))
 
   /** Crash-safe compaction of a flat table to a parallelism-sized file
-    * set; `transform` hooks the index's repair step (e.g. the orphan
-    * anti-join that deregisters ids whose payload rows never landed). */
+    * set, behind the family-blind swap; `transform` hooks the index's
+    * repair step (e.g. the orphan anti-join that deregisters ids whose
+    * payload rows never landed). */
   def compactFlat(spark: SparkSession, path: String, table: String,
                   transform: DataFrame => DataFrame = identity): Unit =
     AtomicSwap.swapTable(spark, path, table)(df =>

@@ -1,6 +1,7 @@
 package graft.storage
 
 import graft.functions.GraftFunctions
+import graft.storage.StoreTables.Tags
 import graft.tagquery.TagQueryParser
 import graft.tagquery.TagQueryParser._
 import org.apache.spark.sql.functions._
@@ -66,7 +67,7 @@ object TagIndex {
       // (n_tags > 0, no entries) from a genuinely tag-less one
       () => catalog.select(IdCols.map(col) :+ size(col("tags")).cast("long").as("n_tags"): _*)
         .write.mode("overwrite").parquet(s"$path/metrics")))
-    IndexStore.writeMeta(spark, path, Seq("buckets" -> Buckets))
+    IndexStore.writeMeta(spark, path, Tags.Meta.row(Buckets))
   }
 
   /**
@@ -116,11 +117,11 @@ object TagIndex {
         // the replay screen below would anti-join the revival away forever
         () => IndexStore.compactFlat(spark, path, "metrics", purgeRevived)))
       if (revived.nonEmpty) clearTombstones(spark, path, revived)
-      revivedIds.foreach(clearDeletedIds(spark, path, _))
+      revivedIds.foreach(IndexStore.clearDeletes(spark, path, Tags.DeletedIds, _, IdCols))
     }
     // localCheckpoint BEFORE any write: the entries append below must not
     // recompute the anti-join against the post-append metrics listing
-    val fresh = IndexStore.screenFresh(catalogBatch, path, "metrics", IdCols)
+    val fresh = IndexStore.screenFresh(catalogBatch, path, Tags.Metrics, IdCols)
       .localCheckpoint()
     fresh.select(IdCols.map(col) :+ size(col("tags")).cast("long").as("n_tags"): _*)
       .write.mode("append").parquet(s"$path/metrics")
@@ -166,33 +167,17 @@ object TagIndex {
     * collects the same list to fan its delete job out, DeleteTenant.java),
     * orders of magnitude below the catalog. */
   private def tombstoned(spark: SparkSession, path: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else spark.read.parquet(p.toString)
-      .select(col("tenant_id")).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    IndexStore.tableIfPresent(spark, path, Tags.Tombstones).fold(Seq.empty[String])(
+      _.select(col("tenant_id")).distinct().collect().map(_.getString(0)).toSeq.sorted)
   }
 
-  /** Drop `cleared` from the tombstone list; the table vanishes when the
-    * last tombstone clears (an absent dir is the cheap common case every
-    * serve probes). */
-  private def clearTombstones(spark: SparkSession, path: String,
-                              cleared: Set[String]): Unit = {
-    val remaining = tombstoned(spark, path).filterNot(cleared)
-    if (remaining.isEmpty) {
-      val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    } else AtomicSwap.swapTable(spark, path, "tombstones")(df =>
-      df.filter(!col("tenant_id").isin(cleared.toSeq: _*)).coalesce(1)
-        .write.parquet(s"$path/.tombstones.compact"))
+  /** Drop `cleared` tenants from the tombstone list
+    * ([[IndexStore.clearDeletes]]). */
+  private def clearTombstones(spark: SparkSession, path: String, cleared: Set[String]): Unit = {
+    import spark.implicits._
+    IndexStore.clearDeletes(spark, path, Tags.Tombstones, cleared.toSeq.toDF("tenant_id"),
+      Seq("tenant_id"))
   }
-
-  /** Drop `cleared` (a checkpointed id frame) from `deleted_ids/`; the
-    * table vanishes when the last tombstone clears. */
-  private def clearDeletedIds(spark: SparkSession, path: String,
-                              cleared: DataFrame): Unit =
-    IndexStore.clearDeletes(spark, path, "deleted_ids", cleared, IdCols)
 
   /**
    * S9 — delete ONE metric from the index (the reference's synchronous
@@ -212,14 +197,14 @@ object TagIndex {
                    mtype: Int, metric: String): Unit = {
     requireMeta(spark, path)
     import spark.implicits._
-    IndexStore.appendDeletes(spark, path, "deleted_ids",
-      Seq((tenantId, mtype, metric)).toDF(IdCols: _*), registry = "metrics", IdCols)
+    IndexStore.appendDeletes(spark, path, Tags.DeletedIds,
+      Seq((tenantId, mtype, metric)).toDF(IdCols: _*), registry = Tags.Metrics, IdCols)
   }
 
   /** The pending metric-level tombstones, or None when none exist (the
     * cheap common case — serving plans stay anti-join-free). */
   private def deletedIds(spark: SparkSession, path: String): Option[DataFrame] =
-    IndexStore.pendingDeletes(spark, path, "deleted_ids", IdCols)
+    IndexStore.pendingDeletes(spark, path, Tags.DeletedIds, IdCols)
 
   /** Tag names a query references — these decide which buckets serving
     * reads. Complement leaves (NOT k) also reference k. */
@@ -280,7 +265,7 @@ object TagIndex {
     val buckets = keys.toDF("tag_name")
       .select(bucketOf(col("tag_name")).as("bucket"))
       .collect().map(_.getInt(0)).distinct.sorted.toSeq
-    val entries = live(spark.read.parquet(s"$path/entries"))
+    val entries = live(IndexStore.table(spark, path, Tags.Entries))
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("tag_name").isin(keys: _*))
     def pat(p: String): Column = GraftFunctions.filterPattern(col("tag_value"), p)
@@ -314,11 +299,11 @@ object TagIndex {
     }.toSeq
     val pivoted =
       if (aggCols.isEmpty)
-        live(spark.read.parquet(s"$path/metrics")).select(IdCols.map(col): _*)
+        live(IndexStore.table(spark, path, Tags.Metrics)).select(IdCols.map(col): _*)
       else {
         val agg = entries.groupBy(IdCols.map(col): _*).agg(aggCols.head, aggCols.tail: _*)
         if (needUniverse)
-          live(spark.read.parquet(s"$path/metrics")).select(IdCols.map(col): _*)
+          live(IndexStore.table(spark, path, Tags.Metrics)).select(IdCols.map(col): _*)
             .join(agg, IdCols, "left")
         else agg
       }
@@ -359,9 +344,9 @@ object TagIndex {
     }
     // pre-swap snapshot, lineage truncated (the swaps below must not
     // recompute this against the post-swap store)
-    val indexedIds = spark.read.parquet(s"$path/entries")
+    val indexedIds = IndexStore.table(spark, path, Tags.Entries)
       .select(IdCols.map(col): _*).distinct()
-    val orphanIds = spark.read.parquet(s"$path/metrics")
+    val orphanIds = IndexStore.table(spark, path, Tags.Metrics)
       .filter(col("n_tags") > 0)
       .join(indexedIds, IdCols, "left_anti")
       .select(IdCols.map(col): _*).localCheckpoint()
@@ -374,5 +359,5 @@ object TagIndex {
   }
 
   private def requireMeta(spark: SparkSession, path: String): Unit =
-    IndexStore.requireMeta(spark, path, Seq("buckets" -> Buckets))
+    IndexStore.requireMeta(spark, path, Tags.Meta.row(Buckets))
 }

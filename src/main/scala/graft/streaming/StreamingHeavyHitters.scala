@@ -43,7 +43,7 @@ object StreamingHeavyHitters {
     q.awaitTermination()
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("cnt").desc, col("token").asc)
-    spark.read.parquet(snapshotPath)
+    graft.storage.IndexStore.table(spark, snapshotPath, graft.storage.StoreTables.HeavyHitters)
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= topK)
       .select(col("token"), col("cnt"), col("rank"))

@@ -1418,4 +1418,74 @@ class MetricsServiceSpec extends SparkTestBase {
     val left = svc.raw().select("metric").collect().map(_.getString(0)).toSeq
     assert(left == Seq("alive"))
   }
+
+  test("numeric-looking tenant and metric ids keep their identity: tenants 7 and " +
+    "007 never merge, and metrics 0010 and 10 stay two series on raw and on the " +
+    "rate tier") {
+    import graft.storage.GraftStorage
+    val root = Files.createTempDirectory("graft-svc-ids").toString
+    val svc = new MetricsService(spark, root, Some(MetricsService.defaultTiers(root)))
+    def rows(tenant: String, metric: String, pts: Seq[(Long, Double)]) =
+      gaugeRows(metric, pts).withColumn("tenant_id", lit(tenant))
+    svc.addDataPoints(rows("7", "cpu", Seq((100L, 1.0), (110L, 2.0)))
+      .unionByName(rows("007", "cpu", Seq((100L, 10.0), (120L, 30.0)))))
+    val id007 = MetricId("007", MetricType.Gauge.code, "cpu")
+    val raw = svc.findDataPoints(id007, Some(0L), Some(200L), limit = 0, now = 200L)
+      .orderBy("time").select("n_value").collect().map(_.getDouble(0)).toSeq
+    assert(raw == Seq(10.0, 30.0), s"tenant 007 reads $raw")
+    assert(svc.raw().schema("tenant_id").dataType == org.apache.spark.sql.types.StringType)
+    assert(svc.raw().select("tenant_id").distinct().collect().map(_.getString(0)).toSet ==
+      Set("7", "007"))
+    val stats = svc.findGaugeStats(id007, BucketConfig(TimeRange(100, 140), Some(1), None))
+      .collect()
+    assert(stats.length == 1 && stats(0).getAs[Long]("samples") == 2L &&
+      stats(0).getAs[Double]("max") == 30.0, stats.mkString(", "))
+    // metric ids that read as the same number: two series on raw and on
+    // the metric-keyed rate tier
+    val H = GraftStorage.RollupMs
+    val pts = Seq((H + 60000L, 1.0), (H + 120000L, 3.0), (H + 180000L, 6.0))
+    svc.addDataPoints(rows("t2", "0010", pts).unionByName(
+      rows("t2", "10", pts.map { case (t, v) => (t, v * 10) })))
+    svc.refreshTiers()
+    val raw2 = svc.raw().filter(col("tenant_id") === "t2")
+      .groupBy("metric").agg(sum("n_value").as("s")).collect()
+      .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(raw2 == Map("0010" -> 10.0, "10" -> 100.0), raw2)
+    val rates = GraftStorage.rollupRateStats(spark, MetricsService.defaultTiers(root).gaugeRate,
+      graft.model.Buckets(H, H, 1), isCounter = false, byMetric = true,
+      tenant = Some("t2"), mtypeCode = Some(MetricType.Gauge.code.toInt))
+      .collect().map(r => r.getAs[String]("metric") -> r.getAs[Long]("samples")).toMap
+    assert(rates == Map("0010" -> 2L, "10" -> 2L), rates)
+  }
+
+  test("a fresh store with no tenants or catalog answers every absent-as-empty " +
+    "call: deletes, retention, earliest range, then non-overwrite creates") {
+    val root = Files.createTempDirectory("graft-svc-fresh").toString
+    val svc = new MetricsService(spark, root)
+    val rest = new RestRoutes(spark, svc, "t1")
+    val id = MetricId("t1", MetricType.Gauge.code, "m")
+    assert(rest.route("DELETE", "/gauges/m") == RestRoutes.NoContent)
+    assert(rest.route("DELETE", "/tenants/t1") == RestRoutes.NoContent)
+    svc.deleteMetric(id)
+    svc.deleteTenant("t1")
+    assert(svc.applyRetention(now = 30L * 86400000L).isEmpty)
+    val s = spark
+    import s.implicits._
+    val now = 30L * 86400000L
+    assert(svc.multiFromEarliestRange("t1", MetricType.Gauge, Seq("m").toDF("metric"), now) ==
+      TimeRange(now - svc.DefaultRetentionDays * 86400000L, now))
+    assert(svc.getTenants().count() == 0 && svc.metricsIndex().count() == 0)
+    assert(!new java.io.File(s"$root/tenants").exists() &&
+      !new java.io.File(s"$root/metrics").exists())
+    svc.createTenant("t1", Map("gauge" -> 3), overwrite = false)
+    intercept[MetricsService.TenantAlreadyExistsException](svc.createTenant("t1", overwrite = false))
+    svc.createMetric(id, Map("a" -> "b"), overwrite = false)
+    intercept[MetricsService.MetricAlreadyExistsException](
+      svc.createMetric(id, Map.empty, overwrite = false))
+    assert(svc.multiFromEarliestRange("t1", MetricType.Gauge, Seq("m").toDF("metric"), now) ==
+      TimeRange(now - 3 * 86400000L, now))
+    svc.deleteMetric(id)
+    svc.deleteTenant("t1")
+    assert(svc.getTenants().count() == 0 && svc.metricsIndex().count() == 0)
+  }
 }

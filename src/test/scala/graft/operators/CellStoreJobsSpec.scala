@@ -80,32 +80,32 @@ class CellStoreJobsSpec extends SparkTestBase {
 
   test("each stored serve runs a pinned number of Spark jobs") {
     val s = spark
-    pin("ivfStoredTopK", 13, "ivf")(Similarity.ivfStoredTopK(s, _, queries, 5, nprobe = 2))
-    pin("ivfStoredTopKHier", 20, "ivfhier")(
+    pin("ivfStoredTopK", 10, "ivf")(Similarity.ivfStoredTopK(s, _, queries, 5, nprobe = 2))
+    pin("ivfStoredTopKHier", 16, "ivfhier")(
       Similarity.ivfStoredTopKHier(s, _, queries, 5, nprobeCoarse = 1, nprobe = 2))
-    pin("ivfPqStoredTopK", 18, "pq")(
+    pin("ivfPqStoredTopK", 14, "pq")(
       Similarity.ivfPqStoredTopK(s, _, queries, 5, nprobe = 2, shortlist = 20))
-    pin("ivfPqStoredTopKHier", 26, "pqhier")(
+    pin("ivfPqStoredTopKHier", 20, "pqhier")(
       Similarity.ivfPqStoredTopKHier(s, _, queries, 5, nprobeCoarse = 1, nprobe = 2, shortlist = 20))
-    pin("ivfPqResidualStoredTopK", 20, "resid")(
+    pin("ivfPqResidualStoredTopK", 15, "resid")(
       Similarity.ivfPqResidualStoredTopK(s, _, queries, 5, nprobe = 2, shortlist = 20))
-    pin("pcaIvfStoredTopK", 19, "pca")(
+    pin("pcaIvfStoredTopK", 14, "pca")(
       Similarity.pcaIvfStoredTopK(s, _, queries, 5, nprobe = 2, shortlist = 20))
-    pin("pcaIvfStoredTopKHier", 26, "pcahier")(
+    pin("pcaIvfStoredTopKHier", 20, "pcahier")(
       Similarity.pcaIvfStoredTopKHier(s, _, queries, 5, nprobeCoarse = 1, nprobe = 2, shortlist = 20))
   }
 
   test("an IVF append runs a pinned number of Spark jobs on a flat and on a hier store") {
     val (ivf, ivfHier) = (stores("ivf"), stores("ivfhier"))
     val flat = jobsOf(Similarity.appendToIvfIndex(spark, ivf, vecs(50 until 60)))
-    assert(flat == 11, s"flat append ran $flat jobs")
+    assert(flat == 8, s"flat append ran $flat jobs")
     val hier = jobsOf(Similarity.appendToIvfIndex(spark, ivfHier, vecs(50 until 60)))
-    assert(hier == 13, s"hier append ran $hier jobs")
+    assert(hier == 9, s"hier append ran $hier jobs")
     assert(spark.read.parquet(s"$ivf/vectors").where(col("vec_id") >= 50).count() == 10L)
   }
 
   test("each store build runs a pinned number of Spark jobs") {
-    val pinned = Map("ivf" -> 8, "ivfhier" -> 25, "pq" -> 8, "pqhier" -> 16,
+    val pinned = Map("ivf" -> 8, "ivfhier" -> 24, "pq" -> 8, "pqhier" -> 16,
       "resid" -> 15, "pca" -> 11, "pcahier" -> 19)
     builds.foreach { case (name, build) =>
       val path = freshPath(s"$name-build")
