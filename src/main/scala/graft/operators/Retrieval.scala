@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.storage.IndexStore
 import graft.storage.StoreTables.Bm25
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -348,9 +349,10 @@ object Retrieval {
 
   /**
    * Serve from the stored index: NO corpus scan, no tokenization. The
-   * distinct query terms and their buckets are collected (|terms|-sized
-   * — the same model-sized-collect budget as IVF centroids) and pushed as
-   * STATIC filters on the postings scan: `bucket IN (...)` prunes
+   * request frame is collected once (|terms|-sized — the same
+   * model-sized-collect budget as IVF centroids); its distinct terms and
+   * their buckets are derived on the driver and pushed as STATIC filters
+   * on the postings scan: `bucket IN (...)` prunes
    * partitions at plan time, stronger than DPP (which also wouldn't fire
    * here: the unfiltered query frame has no selective predicate for the
    * rule to reuse), and `token IN (...)` keeps exactly the query terms'
@@ -371,13 +373,19 @@ object Retrieval {
                      queries: DataFrame, k: Int,
                      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     IndexStore.requireMeta(spark, path, Bm25.Meta.row(IndexBuckets))
-    val qterms = queries
-      .select(col("query_id"), explode(array_distinct(col("terms"))).as("token"))
-    val qtb = qterms.select(col("token")).distinct()
-      .withColumn("bucket", tokenBucket(col("token")))
-      .collect() // (token, bucket)
-    val buckets = qtb.map(_.getInt(1)).distinct.sorted.toSeq
-    val tokens = qtb.map(_.getString(0)).sorted.toSeq
+    // (query_id, token) per distinct query term, from one collect of the
+    // request frame; the build's bucket expression over those rows is a
+    // projection of a local relation, which Spark folds on the driver, so
+    // a local request frame costs no job here
+    val qtermRows = queries.select(col("query_id"), col("terms")).collect().toSeq.flatMap { r =>
+      Option(r.getSeq[String](1)).toSeq.flatMap(_.distinct).map(Row(r.get(0), _))
+    }
+    val qterms = IndexStore.local(spark.createDataFrame(java.util.Arrays.asList(qtermRows: _*),
+      StructType(Seq(queries.schema("query_id"), StructField("token", StringType))))
+      .withColumn("bucket", tokenBucket(col("token"))))
+    val named = qterms.rows.filterNot(_.isNullAt(1))
+    val tokens = named.map(_.getString(1)).distinct.sorted.toSeq
+    val buckets = named.map(_.getInt(2)).distinct.sorted.toSeq
     val postings = IndexStore.table(spark, path, Bm25.Postings)
       .filter(col("bucket").isin(buckets: _*) && col("token").isin(tokens: _*))
       .select(col("doc_id"), col("token"), col("tf"), col("dl"))
@@ -395,7 +403,7 @@ object Retrieval {
     val stats = IndexStore.table(spark, path, Bm25.CorpusStats)
       .select(col("n_docs"),
         (col("dl_sum").cast("double") / col("n_docs")).as("avgdl"))
-    scoreAndRank(tf.join(broadcast(dfreq), Seq("token")), stats, qterms, k, k1, b)
+    scoreAndRank(tf.join(broadcast(dfreq), Seq("token")), stats, qterms.frame, k, k1, b)
   }
 
   /**

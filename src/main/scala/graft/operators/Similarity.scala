@@ -307,22 +307,21 @@ object Similarity {
   def srpStoredTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                     queries: DataFrame, k: Int): DataFrame = {
     val planes = readSrpPlanes(spark, path)
-    val q = withNorm(queries.select(col("vec_id").as("query_id"),
+    val q = IndexStore.local(withNorm(queries.select(col("vec_id").as("query_id"),
       dvec("embedding").as("qv")), "qv")
       .withColumnRenamed("nrm", "qv_nrm")
-      .withColumn("bucket", srpBucket(planes, "qv"))
-      .localCheckpoint() // request-sized; feeds the bucket collect + join
+      .withColumn("bucket", srpBucket(planes, "qv")))
     // literals of the declared partition type, so the IN stays a plain
     // partition filter — a cast on the COLUMN would block pruning
     val narrow = planes.size < 32
-    val buckets: Seq[Any] = q.select("bucket").distinct().collect()
-      .map(_.getLong(0)).map(b => if (narrow) b.toInt else b).toSeq
+    val buckets: Seq[Any] = q.rows.map(_.getAs[Long]("bucket")).distinct.sorted
+      .map(b => if (narrow) b.toInt else b).toSeq
     val vecs = deleteScreen(spark, path)(IndexStore.table(spark, path, Srp.vectors(planes.size))
       .where(col("bucket").isin(buckets: _*)).withColumn("bucket", col("bucket").cast("long")))
     val c = withNorm(vecs.select(col("bucket"), col("vec_id").as("neighbor_id"),
       dvec("embedding").as("cv")), "cv")
       .withColumnRenamed("nrm", "cv_nrm")
-    rankPairs(c.join(broadcast(q), Seq("bucket")), k)
+    rankPairs(c.join(broadcast(q.frame), Seq("bucket")), k)
   }
 
   /**
@@ -955,7 +954,7 @@ object Similarity {
                     queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
     val cents = normedCentroids(IndexStore.table(spark, path, Cells.Centroids))
     probedServe(spark, path, Cells.IvfVectors, queries,
-      probeCells(queries, cents, nprobe).localCheckpoint(), k)
+      IndexStore.local(probeCells(queries, cents, nprobe)), k)
   }
 
   /**
@@ -982,16 +981,17 @@ object Similarity {
   /**
    * The probed-cell finish of every stored serve (IVF, IVF-PQ, residual
    * IVF-PQ, PCA-IVF; flat or routed). `probes` is the entry point's
-   * checkpointed (query_id, qv, …, cell) frame — [[probeCells]] or
-   * [[routedProbes]], in the store's vector space.
+   * (query_id, qv, …, cell) frame — [[probeCells]] or [[routedProbes]],
+   * in the store's vector space — collected once ([[IndexStore.local]]).
    *
    * STATIC partition pruning: DPP does not fire for a probe side built
    * from a request-sized frame (no selective scan filter — the
    * bm25StoredTopK pattern), so the probed cell ids — at most |queries| ×
-   * nprobe ints — are collected and pushed as a literal `cell IN` over the
-   * partition column; every vectors read then scans ONLY the probed
-   * cells' files, and the per-query cell join still restricts each query
-   * to its own probes. Pending delete tombstones screen every read
+   * nprobe ints, taken from the probe rows already on the driver with no
+   * further job — are pushed as a literal `cell IN` over the partition
+   * column; every vectors read then scans ONLY the probed cells' files,
+   * and the per-query cell join still restricts each query to its own
+   * probes. Pending delete tombstones screen every read
    * (broadcast anti-join, delete-rate-sized): a deleted vector stops
    * ranking the instant [[deleteFromIvfIndex]] lands; absent tombstones
    * leave the plan untouched.
@@ -1005,14 +1005,14 @@ object Similarity {
    * cannot resurrect the id at rerank.
    */
   private def probedServe(spark: org.apache.spark.sql.SparkSession, path: String,
-                          vectors: StoreTable, queries: DataFrame, probes: DataFrame, k: Int,
-                          shortlist: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val probed = probes.select("cell").distinct().collect().map(_.get(0)).toSeq
+                          vectors: StoreTable, queries: DataFrame, probes: IndexStore.Local,
+                          k: Int, shortlist: Option[DataFrame => DataFrame] = None): DataFrame = {
+    val probed = probes.rows.map(_.getAs[Int]("cell")).distinct.sorted.toSeq
     val screen = deleteScreen(spark, path)
     def probedVecs =
       screen(IndexStore.table(spark, path, vectors).where(col("cell").isin(probed: _*)))
     shortlist match {
-      case None => rankProbed(probedVecs, probes, "embedding", k)
+      case None => rankProbed(probedVecs, probes.frame, "embedding", k)
       case Some(stage1) =>
         val shortIds = stage1(probedVecs)
         exactRerank(probedVecs, queries, shortIds, k)
@@ -1050,23 +1050,26 @@ object Similarity {
    * ONLY their children (the leaf-centroid read prunes by label range —
    * leaf = coarse·kChild + child — before any per-query scoring) and
    * probes the top `nprobe` leaves. Output is [[probeCells]]'s shape
-   * (query_id, qv, qv_nrm, cell), localCheckpointed, with qv in the
+   * (query_id, qv, qv_nrm, cell), collected once ([[IndexStore.local]]):
+   * the coarse stage is collected once too, and both stages' probed
+   * cells come from those rows, with no further job. qv is in the
    * STORE's model space (callers project PCA queries first). Refuses
    * loudly on a store without a routing model — silent flat fallback
    * would hide the O(cells) per-query cost the caller opted out of.
    */
   private def routedProbes(spark: org.apache.spark.sql.SparkSession,
                            path: String, queries: DataFrame,
-                           nprobeCoarse: Int, nprobe: Int): DataFrame = {
+                           nprobeCoarse: Int, nprobe: Int): IndexStore.Local = {
     import spark.implicits._
     val (coarse, kChild) = hierModelOf(spark, path).getOrElse(
       throw new IllegalStateException(
         s"$path has no coarse routing model — not a hier store " +
           "(use the flat stored-top-k path instead)"))
     // stage 1: route queries over the √cells coarse model
-    val qc = probeCells(queries, normedCentroids(coarse.toDF("cell", "centroid")), nprobeCoarse)
-      .withColumnRenamed("cell", "coarse").localCheckpoint()
-    val probedCoarse = qc.select("coarse").distinct().collect().map(_.getInt(0)).toSeq
+    val qc = IndexStore.local(
+      probeCells(queries, normedCentroids(coarse.toDF("cell", "centroid")), nprobeCoarse)
+        .withColumnRenamed("cell", "coarse"))
+    val probedCoarse = qc.rows.map(_.getAs[Int]("coarse")).distinct.sorted.toSeq
     // stage 2: score only the probed coarse cells' children
     val leafCands = normedCentroids(
       IndexStore.table(spark, path, Cells.Centroids)
@@ -1074,12 +1077,11 @@ object Similarity {
         .withColumn("coarse", floor(col("cell") / lit(kChild)).cast("int")))
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("cdist").desc, col("cell").asc)
-    qc.join(broadcast(leafCands), Seq("coarse"))
+    IndexStore.local(qc.frame.join(broadcast(leafCands), Seq("coarse"))
       .withColumn("cdist", cosine("qv", "centroid"))
       .withColumn("pr", row_number().over(wProbe))
       .filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("qv"), col("qv_nrm"), col("cell"))
-      .localCheckpoint()
+      .select(col("query_id"), col("qv"), col("qv_nrm"), col("cell")))
   }
 
   /** Pending vector tombstones, or None when none exist (the cheap
@@ -1778,10 +1780,10 @@ object Similarity {
     // ONE centroids read serves both the codebooks and the probe frame
     // (the ivfPqTopK posture — no second scan to drift against)
     val model = readCentroids(spark, path)
-    val probes = probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe)
-      .drop("qv_nrm").localCheckpoint()
-    probedServe(spark, path, Cells.PqVectors, queries, probes, k, Some(adcShortlist(probes, shortlist,
-      adcMicroUdf(pqCodebooksFrom(model))(col("codes"), col("qv"))) _))
+    val probes = IndexStore.local(
+      probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe).drop("qv_nrm"))
+    probedServe(spark, path, Cells.PqVectors, queries, probes, k, Some(adcShortlist(probes.frame,
+      shortlist, adcMicroUdf(pqCodebooksFrom(model))(col("codes"), col("qv"))) _))
   }
 
   /**
@@ -1801,9 +1803,9 @@ object Similarity {
                           shortlist: Int = 50): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val cbs = pqCodebooksFrom(readCentroids(spark, path))
-    val probes = routedProbes(spark, path, queries, nprobeCoarse, nprobe).drop("qv_nrm")
-    probedServe(spark, path, Cells.PqVectors, queries, probes, k, Some(adcShortlist(probes, shortlist,
-      adcMicroUdf(cbs)(col("codes"), col("qv"))) _))
+    val probes = routedProbes(spark, path, queries, nprobeCoarse, nprobe)
+    probedServe(spark, path, Cells.PqVectors, queries, probes, k, Some(adcShortlist(
+      probes.frame.drop("qv_nrm"), shortlist, adcMicroUdf(cbs)(col("codes"), col("qv"))) _))
   }
 
   // ------------------------------------------------------------------
@@ -2068,10 +2070,10 @@ object Similarity {
     val spark2 = spark; import spark2.implicits._
     val model = readCentroids(spark, path)
     val cbs = readResidCb(spark, path)
-    val probes = probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe)
-      .drop("qv_nrm").localCheckpoint()
-    probedServe(spark, path, Cells.PqVectors, queries, probes, k, Some(adcShortlist(probes, shortlist,
-      residAdcMicroUdf(model, cbs)(col("cell"), col("codes"), col("qv"))) _))
+    val probes = IndexStore.local(
+      probeCells(queries, normedCentroids(model.toDF("cell", "centroid")), nprobe).drop("qv_nrm"))
+    probedServe(spark, path, Cells.PqVectors, queries, probes, k, Some(adcShortlist(probes.frame,
+      shortlist, residAdcMicroUdf(model, cbs)(col("cell"), col("codes"), col("qv"))) _))
   }
 
   /**
@@ -2648,9 +2650,9 @@ object Similarity {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
     val model = readPcaModel(spark, path)
     val cents = normedCentroids(IndexStore.table(spark, path, Cells.Centroids))
-    val probes = probeCells(pcaQueries(queries, model), cents, nprobe).localCheckpoint()
+    val probes = IndexStore.local(probeCells(pcaQueries(queries, model), cents, nprobe))
     probedServe(spark, path, Cells.PcaVectors, queries, probes, k,
-      Some(pcaShortlist(probes, shortlist) _))
+      Some(pcaShortlist(probes.frame, shortlist) _))
   }
 
   /** Queries projected through a store's basis, shaped as probe input. */
@@ -2682,7 +2684,7 @@ object Similarity {
     val model = readPcaModel(spark, path)
     val probes = routedProbes(spark, path, pcaQueries(queries, model), nprobeCoarse, nprobe)
     probedServe(spark, path, Cells.PcaVectors, queries, probes, k,
-      Some(pcaShortlist(probes, shortlist) _))
+      Some(pcaShortlist(probes.frame, shortlist) _))
   }
 
   /**

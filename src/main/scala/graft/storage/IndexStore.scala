@@ -1,7 +1,13 @@
 package graft.storage
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /**
  * The store-table reader and the lifecycle primitives every persisted
@@ -22,7 +28,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *     single-row table; every probe/append/compact validates them first,
  *     because a caller with mismatched parameters (bucket modulus,
  *     hash family sizes) computes incompatible keys and silently
- *     returns near-empty results. Fail loudly instead.
+ *     returns near-empty results. Fail loudly instead. The guard reads
+ *     its row on the driver ([[requireMeta]]): it runs no Spark job.
  *  2. **replay screen** — appends anti-join the batch against an id
  *     table that is written FIRST, so a replayed batch is a no-op and a
  *     crash mid-append under-applies (repairable by compaction) rather
@@ -34,10 +41,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *  4. **crash-safe compaction** — each table rewrites to a temp
  *     directory and swaps in via [[AtomicSwap]]'s double rename; a
  *     crash at any point leaves a servable or recoverable copy.
- *  5. **static bucket pruning on serve** — the query's bucket list is
- *     model-sized, collected, and pushed as a plan-time
- *     `bucket IN (...)` partition filter (DPP would not fire: query
- *     frames are LocalRelations with no selective scan to reuse).
+ *  5. **static bucket pruning on serve** — the request side (probe
+ *     cells, hashed query buckets, query terms) is built once on the
+ *     driver: [[local]] collects it once, the serve takes its bucket or
+ *     cell list from those rows and pushes it as a plan-time
+ *     `bucket IN (...)` partition filter, and joins the same rows back
+ *     in as a local relation. Only the store scan runs as Spark work
+ *     (DPP would not fire: a request-sized probe side has no selective
+ *     scan to reuse).
  *  6. **delete tombstones** — a delete appends keys to a side table,
  *     serves screen against it, and compaction purges and clears it.
  *  7. **overlapped independent jobs** — [[inParallel]].
@@ -52,15 +63,14 @@ object IndexStore {
     * the one way a store table is read. Refuses an absent table by
     * name. */
   def table(spark: SparkSession, path: String, t: StoreTable): DataFrame =
-    tableIfPresent(spark, path, t).getOrElse(throw new IllegalStateException(
-      s"store table '${t.name}' is absent at ${t.at(path)}"))
+    tableIfPresent(spark, path, t).getOrElse(throw absent(path, t))
 
   /** [[table]], or None when the table does not exist: the side tables
     * whose absence carries meaning (no tombstones, a flat store's missing
     * routing model), and the metrics store's tables, where absent means
     * empty ([[tableOrEmpty]]). */
   def tableIfPresent(spark: SparkSession, path: String, t: StoreTable): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(t.at(path))
+    val p = new Path(t.at(path))
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
     else Some(spark.read.schema(t.schema).parquet(p.toString))
   }
@@ -70,6 +80,26 @@ object IndexStore {
     tableIfPresent(spark, path, t).getOrElse(
       spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), t.schema))
 
+  private def absent(path: String, t: StoreTable) =
+    new IllegalStateException(s"store table '${t.name}' is absent at ${t.at(path)}")
+
+  /** The data files a read of the table directory `dir` sees: `.parquet`
+    * files with no `_`- or `.`-prefixed name below `dir` (commit markers,
+    * staging and compaction temps are not data). */
+  private def dataFiles(conf: Configuration, dir: Path): Iterator[Path] = {
+    val files = dir.getFileSystem(conf).listFiles(dir, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath).filter { f =>
+      f.getName.endsWith(".parquet") &&
+        !f.toUri.getPath.stripPrefix(dir.toUri.getPath).split('/')
+          .exists(n => n.startsWith("_") || n.startsWith("."))
+    }
+  }
+
+  /** The Spark schema of a stored parquet footer. */
+  private def sparkSchema(spark: SparkSession, footer: MessageType): StructType =
+    new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(footer)
+
   /** An undeclared table, declared from its own files: the columns of one
     * stored footer, read on the driver (no Spark job); its partition
     * columns are the ones its directories name. A family-blind rewrite
@@ -77,19 +107,24 @@ object IndexStore {
     * every column the table holds. */
   def storedTable(spark: SparkSession, path: String, name: String): StoreTable = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$name")
-    val files = dir.getFileSystem(conf).listFiles(dir, true)
-    def visible(f: org.apache.hadoop.fs.Path) = f.getName.endsWith(".parquet") &&
-      !f.toUri.getPath.stripPrefix(dir.toUri.getPath).split('/')
-        .exists(n => n.startsWith("_") || n.startsWith("."))
-    val file = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
-      .find(visible).getOrElse(throw new IllegalStateException(
-        s"store table '$name' at $dir holds no data file"))
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
+    val dir = new Path(s"$path/$name")
+    val file = dataFiles(conf, dir).nextOption().getOrElse(throw new IllegalStateException(
+      s"store table '$name' at $dir holds no data file"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
     val footer = try reader.getFooter.getFileMetaData.getSchema finally reader.close()
-    StoreTable(name, new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(footer).toDDL)
+    StoreTable(name, sparkSchema(spark, footer).toDDL)
+  }
+
+  /** A request-sized frame, collected once: `rows` for the serve's
+    * driver-side decisions (the cells or buckets it prunes to), `frame`
+    * the same rows as a local relation for its joins, so nothing
+    * upstream runs twice and no checkpoint is written. Only for frames a
+    * serve broadcasts or collects anyway: they are driver-sized already. */
+  final case class Local(rows: Array[Row], frame: DataFrame)
+
+  def local(df: DataFrame): Local = {
+    val rows = df.collect()
+    Local(rows, df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
   }
 
   /**
@@ -141,18 +176,51 @@ object IndexStore {
 
   /** Fail fast when a caller's parameters disagree with the store's.
     * The expected fields declare the meta table (all int, names known),
-    * so the guard runs one job — the collect. A field the stored meta
-    * lacks reads as null and is refused by name, never taken as 0. */
+    * and its one row is read on the driver ([[metaRows]]): the guard
+    * runs no Spark job. A field the stored meta lacks or holds null in is
+    * refused by name, never taken as 0; so is one stored with another
+    * type. */
   def requireMeta(spark: SparkSession, path: String, expected: Seq[(String, Int)]): Unit = {
-    val rows = table(spark, path, StoreTables.meta(expected.map(_._1): _*)).collect()
+    val rows = metaRows(spark, path, StoreTables.meta(expected.map(_._1): _*))
     require(rows.length == 1, s"index meta at $path/meta must be one row, found ${rows.length}")
-    val missing = expected.indices.filter(rows(0).isNullAt).map(expected(_)._1)
+    val missing = expected.zip(rows.head).collect { case ((n, _), None) => n }
     require(missing.isEmpty,
       s"index meta at $path/meta has no value for ${missing.mkString(", ")}")
-    val stored = expected.map { case (n, _) => n -> rows(0).getAs[Int](n) }
+    val stored = expected.zip(rows.head).map { case ((n, _), v) => n -> v.get }
     require(stored == expected,
       s"index at $path was built with ${stored.mkString(", ")}; " +
         s"caller passed ${expected.mkString(", ")}")
+  }
+
+  /** Every row of the meta table `t` at `path`, its fields in declared
+    * order, read on the driver with parquet-hadoop's record reader from
+    * the files a Spark read would see. A field a file lacks or holds null
+    * in reads as None. */
+  private def metaRows(spark: SparkSession, path: String, t: StoreTable): Seq[Seq[Option[Int]]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(t.at(path))
+    if (!dir.getFileSystem(conf).exists(dir)) throw absent(path, t)
+    dataFiles(conf, dir).flatMap { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      try {
+        val footer = reader.getFooter.getFileMetaData.getSchema
+        val stored = sparkSchema(spark, footer)
+        val present = t.schema.fields.map { f =>
+          stored.find(_.name == f.name).map { s =>
+            require(s.dataType == f.dataType, s"index meta at ${t.at(path)}: field ${f.name} " +
+              s"is stored as ${s.dataType.sql}, declared ${f.dataType.sql}")
+            f.name
+          }
+        }.toSeq
+        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(footer)
+        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).flatMap { pages =>
+          val records = io.getRecordReader(pages,
+            new org.apache.parquet.example.data.simple.convert.GroupRecordConverter(footer))
+          Iterator.fill(pages.getRowCount.toInt)(records.read()).map(g =>
+            present.map(_.filter(g.getFieldRepetitionCount(_) > 0).map(g.getInteger(_, 0))))
+        }.toVector
+      } finally reader.close()
+    }.toVector
   }
 
   /** Batch rows whose key is absent from the store's screen table —
@@ -214,10 +282,12 @@ object IndexStore {
   // purge rides the index's next compaction, which then clears the table.
 
   /** Pending delete tombstones, or None when none exist (the cheap
-    * common case — serving plans stay anti-join-free). */
+    * common case — serving plans stay anti-join-free). Not deduplicated:
+    * every consumer is a left-anti or left-semi join, which a repeated
+    * key does not change, so a distinct would only add a shuffle. */
   def pendingDeletes(spark: SparkSession, path: String, deletes: StoreTable,
                      keyCols: Seq[String]): Option[DataFrame] =
-    tableIfPresent(spark, path, deletes).map(_.select(keyCols.map(col): _*).distinct())
+    tableIfPresent(spark, path, deletes).map(_.select(keyCols.map(col): _*))
 
   /** Tombstone-append-only delete: land the REGISTERED, not-yet-
     * tombstoned keys of `keys` (screened against `registry`, the store

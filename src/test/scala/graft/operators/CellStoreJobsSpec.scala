@@ -80,27 +80,27 @@ class CellStoreJobsSpec extends SparkTestBase {
 
   test("each stored serve runs a pinned number of Spark jobs") {
     val s = spark
-    pin("ivfStoredTopK", 10, "ivf")(Similarity.ivfStoredTopK(s, _, queries, 5, nprobe = 2))
-    pin("ivfStoredTopKHier", 16, "ivfhier")(
+    pin("ivfStoredTopK", 7, "ivf")(Similarity.ivfStoredTopK(s, _, queries, 5, nprobe = 2))
+    pin("ivfStoredTopKHier", 11, "ivfhier")(
       Similarity.ivfStoredTopKHier(s, _, queries, 5, nprobeCoarse = 1, nprobe = 2))
-    pin("ivfPqStoredTopK", 14, "pq")(
+    pin("ivfPqStoredTopK", 11, "pq")(
       Similarity.ivfPqStoredTopK(s, _, queries, 5, nprobe = 2, shortlist = 20))
-    pin("ivfPqStoredTopKHier", 20, "pqhier")(
+    pin("ivfPqStoredTopKHier", 15, "pqhier")(
       Similarity.ivfPqStoredTopKHier(s, _, queries, 5, nprobeCoarse = 1, nprobe = 2, shortlist = 20))
-    pin("ivfPqResidualStoredTopK", 15, "resid")(
+    pin("ivfPqResidualStoredTopK", 12, "resid")(
       Similarity.ivfPqResidualStoredTopK(s, _, queries, 5, nprobe = 2, shortlist = 20))
-    pin("pcaIvfStoredTopK", 14, "pca")(
+    pin("pcaIvfStoredTopK", 11, "pca")(
       Similarity.pcaIvfStoredTopK(s, _, queries, 5, nprobe = 2, shortlist = 20))
-    pin("pcaIvfStoredTopKHier", 20, "pcahier")(
+    pin("pcaIvfStoredTopKHier", 15, "pcahier")(
       Similarity.pcaIvfStoredTopKHier(s, _, queries, 5, nprobeCoarse = 1, nprobe = 2, shortlist = 20))
   }
 
   test("an IVF append runs a pinned number of Spark jobs on a flat and on a hier store") {
     val (ivf, ivfHier) = (stores("ivf"), stores("ivfhier"))
     val flat = jobsOf(Similarity.appendToIvfIndex(spark, ivf, vecs(50 until 60)))
-    assert(flat == 8, s"flat append ran $flat jobs")
+    assert(flat == 7, s"flat append ran $flat jobs")
     val hier = jobsOf(Similarity.appendToIvfIndex(spark, ivfHier, vecs(50 until 60)))
-    assert(hier == 9, s"hier append ran $hier jobs")
+    assert(hier == 8, s"hier append ran $hier jobs")
     assert(spark.read.parquet(s"$ivf/vectors").where(col("vec_id") >= 50).count() == 10L)
   }
 

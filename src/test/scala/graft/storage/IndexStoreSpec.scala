@@ -23,6 +23,18 @@ class IndexStoreSpec extends SparkTestBase {
     intercept[Exception] {
       IndexStore.requireMeta(spark, path, Seq("nonexistent" -> 1))
     }
+    // a second row, in a second file, is refused; files a Spark read
+    // skips (names starting with `_` or `.`) are skipped here too
+    val meta = new java.io.File(s"$path/meta")
+    val part = meta.listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.copy(part.toPath, new java.io.File(meta, s".${part.getName}").toPath)
+    Files.copy(part.toPath, new java.io.File(meta, s"_${part.getName}").toPath)
+    IndexStore.requireMeta(spark, path, Seq("buckets" -> 32, "k" -> 3))
+    Files.copy(part.toPath, new java.io.File(meta, s"x-${part.getName}").toPath)
+    val twice = intercept[IllegalArgumentException] {
+      IndexStore.requireMeta(spark, path, Seq("buckets" -> 32, "k" -> 3))
+    }
+    assert(twice.getMessage.contains("must be one row, found 2"), twice.getMessage)
   }
 
   test("replay screen: only ids absent from the screen table survive") {

@@ -7,8 +7,9 @@ import org.apache.spark.GraftBus
 import org.apache.spark.sql.GraftTestShims
 import java.nio.file.Files
 
-/** Store tables list on the driver, the meta guard infers no schema, and
-  * a BM25 append runs a fixed, small number of jobs.
+/** Store tables list on the driver, the meta guard runs no Spark job, a
+  * BM25 append runs a fixed, small number of jobs, and the BM25 serve and
+  * near-dup lookup run a pinned number.
   * Spark lists a table's directories in a job of one task per directory
   * once there are more of them than
   * `spark.sql.sources.parallelPartitionDiscovery.threshold`, 32 by
@@ -73,9 +74,25 @@ class StoreListingSpec extends SparkTestBase {
     assert(tuned <= 1, s"$tuned jobs to open the postings table")
   }
 
-  test("requireMeta launches exactly one job") {
+  test("requireMeta launches no Spark job") {
     val n = jobsOf(IndexStore.requireMeta(spark, bm25Store, Seq("buckets" -> Retrieval.IndexBuckets)))
-    assert(n == 1, s"requireMeta ran $n jobs")
+    assert(n == 0, s"requireMeta ran $n jobs")
+  }
+
+  test("a meta field stored with another type than INT (BIGINT or STRING) " +
+    "refuses by the field's name") {
+    val s = spark
+    import s.implicits._
+    val asLong = Files.createTempDirectory("graft-meta-bigint").toString
+    Seq((64, 3L)).toDF("buckets", "shingle_k").write.parquet(s"$asLong/meta")
+    val asString = Files.createTempDirectory("graft-meta-string").toString
+    Seq((64, "3")).toDF("buckets", "shingle_k").write.parquet(s"$asString/meta")
+    Seq(asLong -> "BIGINT", asString -> "STRING").foreach { case (path, stored) =>
+      val e = intercept[IllegalArgumentException] {
+        IndexStore.requireMeta(spark, path, Seq("buckets" -> 64, "shingle_k" -> 3))
+      }
+      assert(e.getMessage.contains("shingle_k") && e.getMessage.contains(stored), e.getMessage)
+    }
   }
 
   test("a meta table that lacks an expected field, or holds null in it, " +
@@ -113,6 +130,42 @@ class StoreListingSpec extends SparkTestBase {
     }.toDF("doc_id", "text")
     val n = withListing(tuned = true)(jobsOf(Retrieval.appendToBm25Index(spark, path, wave)))
     assert(n <= 14, s"the append ran $n jobs, against 24 while it merged a stored df table")
+  }
+
+  /** BM25 queries over the store's words, as a local frame. */
+  private def bm25Queries = {
+    val s = spark
+    import s.implicits._
+    Seq((0L, Seq("w3", "w17")), (1L, Seq("w200", "w201", "w3")), (2L, Seq("w399")))
+      .toDF("query_id", "terms")
+  }
+
+  test("a BM25 serve runs a pinned number of Spark jobs, with and without " +
+    "a pending tombstone") {
+    val s = spark
+    import s.implicits._
+    val path = builtBm25Store("graft-bm25-serve-jobs")
+    def serve() = withListing(tuned = true)(jobsOf(
+      Retrieval.bm25StoredTopK(spark, path, bm25Queries, 5).collect()))
+    val clean = serve()
+    assert(clean == 7, s"the serve ran $clean jobs, pinned at 7")
+    Retrieval.deleteFromBm25Index(spark, path, Seq(3L).toDF("doc_id"))
+    val screened = serve()
+    assert(screened == 8, s"the screened serve ran $screened jobs, pinned at 8")
+  }
+
+  test("a near-dup lookup runs a pinned number of Spark jobs") {
+    val s = spark
+    import s.implicits._
+    val path = Files.createTempDirectory("graft-neardup-serve-jobs").toString + "/nd"
+    val docs = (0 until 60).map { i =>
+      (i.toLong, (0 until 12).map(j => s"w${(i * 12 + j) % 500}").mkString(" "))
+    }.toDF("doc_id", "text")
+    Dedup.writeNearDupIndex(docs, path)
+    val queries = docs.where($"doc_id" < 5L)
+    val n = withListing(tuned = true)(jobsOf(
+      Dedup.nearDupLookup(spark, path, queries, threshold = 0.5).collect()))
+    assert(n == 15, s"the lookup ran $n jobs, pinned at 15")
   }
 
   test("builder and tune both set the listing threshold to at least the " +
